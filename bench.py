@@ -88,8 +88,9 @@ def main() -> None:
         ``extra`` widens best-of for the highest-variance stages (a
         measurement knob, not a workload definition — the scaling
         harness records BENCH_REPEATS but excludes it from stage match
-        keys): knn_ring runs ~6 driver actions per call, so co-tenant
-        jitter amplifies ~6× there and one extra repeat buys the driver
+        keys): knn_ring runs one Spark action per round plus one for
+        its brute tail (up to 3 per call here), so co-tenant jitter
+        amplifies up to ~3× there and one extra repeat buys the driver
         artifact a second chance at a quiet window (r4 verdict #6: the
         driver-run knn_ring landed 2.3× the pinned best)."""
         def deco(fn):

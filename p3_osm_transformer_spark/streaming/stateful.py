@@ -111,9 +111,11 @@ def await_drained(query, timeout_s: int, state_timeout_set: bool) -> list:
     "any zero-input batch exists" rule stopped the query right there —
     the pending file was never processed and the run's output was
     silently incomplete.  A run started with NO new data pending is the
-    same shape (only zero-input batches) — for that case, two committed
-    zero-input batches suffice (the first could have raced a concurrent
-    file landing mid-listing; the second sees a stable listing)."""
+    same shape (only zero-input batches) — for that case, the two highest
+    committed batchIds being zero-input suffices (the first could have
+    raced a concurrent file landing mid-listing; the second sees a stable
+    listing).  Two zero-input batches followed by a data batch are NOT
+    drained: that data batch still needs a zero-input batch after it."""
     if not state_timeout_set:
         if not query.awaitTermination(timeout_s):
             query.stop()
@@ -131,8 +133,9 @@ def await_drained(query, timeout_s: int, state_timeout_set: bool) -> list:
                     if (getattr(p, "numInputRows", 0) or 0) > 0]
         zero_ids = [p.batchId for p in prog
                     if getattr(p, "numInputRows", None) == 0]
-        drained = (zero_ids and data_ids
-                   and max(zero_ids) > max(data_ids)) or len(zero_ids) >= 2
+        last_two = sorted({p.batchId for p in prog})[-2:]
+        drained = ((zero_ids and data_ids and max(zero_ids) > max(data_ids))
+                   or (len(last_two) == 2 and set(last_two) <= set(zero_ids)))
         if drained:
             query.stop()
             query.awaitTermination(30)

@@ -149,12 +149,22 @@ def test_knn_ring_high_latitude_regression(spark):
     assert ring == brute
 
 
+def _far_points(spark):
+    """Points whose probe box holds no address: mid-ocean (South Pacific)
+    and beyond 75° latitude — each keeps one ``_n = 0`` row per round."""
+    return spark.createDataFrame(
+        [(10_000_000 + i, -150.0 + 7.3 * i, -48.0 + 1.9 * i) for i in range(6)]
+        + [(10_000_100 + i, -175.0 + 61.0 * i, 75.5 + 2.3 * i) for i in range(6)],
+        "point_id long, lon double, lat double")
+
+
 @pytest.mark.parametrize("k", [1, 3])
 def test_knn_ring_equals_bruteforce(spark, k):
     addrs = fx.osm_nodes(spark, 1500).filter("id > 0") \
         .selectExpr("concat('a-', id) as addr_id", "lon", "lat")
     pts = fx.osm_nodes(spark, 3000).filter("id > 0 and id % 7 = 0") \
-        .selectExpr("id as point_id", "lon + 0.001 as lon", "lat - 0.001 as lat")
+        .selectExpr("id as point_id", "lon + 0.001 as lon", "lat - 0.001 as lat") \
+        .unionByName(_far_points(spark))
     ring = {(r["point_id"], r["addr_id"], r["knn_rank"])
             for r in knn.knn_ring(pts, addrs, k=k, g=15).collect()}
     brute = {(r["point_id"], r["addr_id"], r["knn_rank"])
@@ -201,6 +211,39 @@ def test_knn_ring_zero_rounds_falls_back_to_brute(spark):
     assert ring == brute and len(brute) == 20
 
 
+def _last_execution_id(spark) -> int:
+    """Id of the latest SQL execution (every Spark action is one)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return ex.apply(ex.size() - 1).executionId() if ex.size() else -1
+
+
+def test_knn_ring_one_action_per_round(spark):
+    """Each ring round is ONE Spark action — its checkpoint, the counts
+    riding it as an Observation — and the brute tail is one more.  Fixed
+    input: round 0 resolves the points on the address patch, round 1 the
+    points ~1.6° west of it (so no zero-progress exit); the mid-ocean and
+    polar points (empty probe boxes) go to the tail."""
+    addrs = spark.createDataFrame(
+        [(f"a-{i}-{j}", i * 0.5, 40.0 + j * 0.5)
+         for i in range(21) for j in range(21)],
+        "addr_id string, lon double, lat double")
+    pts = spark.createDataFrame(
+        [(i, (i * 37 % 200) / 20.0, 40.0 + (i * 13 % 200) / 20.0)
+         for i in range(40)]
+        + [(100 + i, -1.5 - i * 0.04, 42.0 + i * 0.5) for i in range(10)],
+        "point_id long, lon double, lat double").unionByName(_far_points(spark))
+    for k in (1, 3):
+        before = _last_execution_id(spark)
+        out = knn.knn_ring(pts, addrs, k=k, g=8, start_ring=1, max_rounds=2)
+        assert _last_execution_id(spark) - before == 2 + 1
+        ring = {(r["point_id"], r["addr_id"], r["knn_rank"])
+                for r in out.collect()}
+        brute = {(r["point_id"], r["addr_id"], r["knn_rank"])
+                 for r in knn.knn_bruteforce(pts, addrs, k=k).collect()}
+        assert ring == brute and len(brute) == 62 * k
+
+
 # ------------------------------------------------ hexcell kNN access path
 
 @pytest.mark.parametrize("k", [1, 3])
@@ -211,7 +254,8 @@ def test_knn_hex_equals_bruteforce(spark, k):
     addrs = fx.osm_nodes(spark, 1200).filter("id > 0") \
         .selectExpr("concat('a-', id) as addr_id", "lon", "lat")
     pts = fx.osm_nodes(spark, 2400).filter("id > 0 and id % 9 = 0") \
-        .selectExpr("id as point_id", "lon + 0.001 as lon", "lat - 0.001 as lat")
+        .selectExpr("id as point_id", "lon + 0.001 as lon", "lat - 0.001 as lat") \
+        .unionByName(_far_points(spark))
     hexed = {(r["point_id"], r["addr_id"], r["knn_rank"])
              for r in knn.knn_hex(pts, addrs, k=k, res=9).collect()}
     brute = {(r["point_id"], r["addr_id"], r["knn_rank"])

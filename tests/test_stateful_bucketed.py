@@ -252,6 +252,52 @@ def test_state_timeout_retires_and_readmits_key(spark, tmp_path):
     assert got == ["img-a1", "img-a2", "img-b1", "img-b3"]
 
 
+class _ReplayQuery:
+    """Stand-in for a StreamingQuery whose ``recentProgress`` grows by one
+    committed batch per poll, replaying ``batches`` (numInputRows each)."""
+
+    def __init__(self, batches, shown: int):
+        from types import SimpleNamespace
+        self.progress = [SimpleNamespace(batchId=i, numInputRows=n)
+                         for i, n in enumerate(batches)]
+        self.shown, self.isActive, self.stops = shown, True, 0
+
+    @property
+    def recentProgress(self):
+        out = self.progress[:self.shown]
+        self.shown = min(self.shown + 1, len(self.progress))
+        return out
+
+    def stop(self):
+        self.stops += 1
+        self.isActive = False
+
+    def awaitTermination(self, timeout=None):
+        return True
+
+
+def test_await_drained_waits_for_zero_batch_after_late_data():
+    """zero, zero, data: a data batch committed after two zero-input
+    batches is not drained — the query must run on until a zero-input
+    batch follows it (regression: "two zero-input batches anywhere"
+    stopped the query right after the data batch)."""
+    from p3_osm_transformer_spark.streaming.stateful import await_drained
+    q = _ReplayQuery([0, 0, 5, 0], shown=3)
+    prog = await_drained(q, timeout_s=30, state_timeout_set=True)
+    assert [p.batchId for p in prog] == [0, 1, 2, 3]
+    assert q.stops == 1
+
+
+def test_await_drained_stops_on_two_trailing_zero_batches():
+    """A restart with no new data (only zero-input batches) stops once
+    the two highest committed batchIds are both zero-input."""
+    from p3_osm_transformer_spark.streaming.stateful import await_drained
+    q = _ReplayQuery([0, 0, 0], shown=1)
+    prog = await_drained(q, timeout_s=30, state_timeout_set=True)
+    assert [p.batchId for p in prog] == [0, 1]
+    assert q.stops == 1
+
+
 def test_sessionize_late_event_flagged_and_repaired_to_batch_twin(spark, tmp_path):
     """Late-data mechanism (VERDICT r2 #6): an out-of-order cross-batch
     event is (a) flagged late_arrival in the streaming output and (b)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -23,13 +24,17 @@ from p3_osm_transformer_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+VOLATILE = re.compile(r"#\d+|plan_id=\d+")
 
 
 def plan_of(df) -> str:
+    """The formatted physical plan, without the tokens that change from
+    run to run (expression ids ``#NNN``, ``plan_id=NNN``), so PLANS.md
+    regenerates byte-for-byte."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return VOLATILE.sub("", buf.getvalue())
 
 
 def main() -> None:
@@ -126,14 +131,16 @@ def main() -> None:
     kaddrs = supp.selectExpr("cast(s_suppkey as string) as addr_id") \
         .withColumn("lon", (F.col("addr_id").cast("long") * 37 % 360 - 180.0)) \
         .withColumn("lat", (F.col("addr_id").cast("long") * 17 % 170 - 85.0))
-    # the ring loop executes eagerly per round (one checkpointed action);
-    # plan_probe hands back the exact per-round DataFrame the action ran
+    # the ring loop executes eagerly per round (one checkpointed action,
+    # its counts an Observation on it); plan_probe hands back the exact
+    # per-round DataFrame the action ran
     probe: list = []
     knn_ring(kpts, kaddrs, k=1, g=6, start_ring=1, max_rounds=1,
              plan_probe=probe)
     # struct-buffer min → two-phase SortAggregate (partial below the
-    # Exchange = map-side combine); the probe join must broadcast; never
-    # a Window (that would shuffle every candidate pair)
+    # Exchange = map-side combine); the probe join (a left join: empty
+    # probe boxes keep their point) must broadcast; never a Window (that
+    # would shuffle every candidate pair)
     audit("knn k=1 agg path (round-1 plan)", probe[0],
           must=["SortAggregate", "BroadcastHashJoin", "Exchange"],
           must_not=["Window", "CartesianProduct"])
@@ -148,7 +155,6 @@ def main() -> None:
     fout = enrich_images(fimgs, kaddrs.selectExpr(
         "addr_id", "'x' as street_address", "lat", "lon"),
         knn_strategy="brute", geotag="caption+exif")
-    import re
     fplan = plan_of(fout)
     # every MapInPandas occurrence must be the SAME plan node (one geotag
     # pass), re-printed only inside the InMemoryRelation each branch reads
@@ -215,9 +221,9 @@ def main() -> None:
     # array_intersect form burned 7-16× the CPU at 32 cores); still no
     # row-at-a-time Python, no cartesian, and the candidates+verify plan
     # reads the checkpointed signature RDD, never re-tokenizes.
-    dn_plan = plan_of(dedup_near(docs.limit(2000), threshold=0.7))
-    audit("dedup_near candidates+verify (reads checkpointed signatures)",
-          dedup_near(docs.limit(2000), threshold=0.7),
+    dn = dedup_near(docs.limit(2000), threshold=0.7)
+    dn_plan = plan_of(dn)
+    audit("dedup_near candidates+verify (reads checkpointed signatures)", dn,
           must=["Scan ExistingRDD", "ArrowEvalPython"],
           must_not=["CartesianProduct", "BatchEvalPython", "MapInPandas"])
     # formatted explain prints each node once in the tree and once as a
@@ -225,8 +231,7 @@ def main() -> None:
     # ONE: Catalyst would otherwise duplicate the verify UDF below the
     # threshold filter (the full per-pair exchange run twice) — see the
     # asNondeterministic evaluate-once barrier in _jaccard_arrow.
-    import re as _re
-    n_arrow = len(_re.findall(r"\(\d+\) ArrowEvalPython", dn_plan))
+    n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", dn_plan))
     print(f"  (dedup_near ArrowEvalPython nodes = {n_arrow}; must be 1)")
     assert n_arrow == 1, f"expected exactly 1 Arrow verify node, got {n_arrow}"
 
