@@ -8,8 +8,10 @@ Runs the engine's headline pipelines at $SPARK_GRAFT_SF_DIR (default
 Every stage materializes through the noop sink (df.write.format("noop")) so
 column pruning cannot skip the computed columns being measured.
 
-Scaling evidence (north rule two-cluster-size proxy): tools/scaling_bench.py
-runs THIS file pinned at local[4/8/16/32] and writes BENCH/BASELINE.md.
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_XL_MULT and
+SPARK_GRAFT_BENCH_REPEATS.  Layer-by-layer measurement (Spark stages,
+operators, the Python boundary) is perfbench/run.py --trace 1;
+BENCH/BASELINE.md is frozen 32-core history.
 """
 
 from __future__ import annotations
@@ -25,6 +27,12 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from p3_osm_transformer_spark.contract import point_cols  # noqa: E402
 from p3_osm_transformer_spark.session import get_spark  # noqa: E402
+
+# Workload sizes.  Fixed: the fixture cache paths below embed them.
+KNN_MULT = 4           # knn_ring points per lineitem row
+DEDUP_MULT = 4         # near-dup replicas per document
+DEDUP_EXTRA = 100_000  # fully-distinct synthetic docs
+ANN_N = 200_000        # ann_lsh corpus rows
 
 
 def _force(df) -> int:
@@ -43,9 +51,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Pin the process tree to exactly `cpus` cores BEFORE the JVM forks, so
-    # an unattended (driver) invocation follows the same methodology as the
-    # pinned scaling trials (tools/scaling_bench.py wraps in taskset; this
-    # makes the direct run equivalent): local[N] bounds task threads only —
+    # local[N] really means N cores: local[N] bounds task threads only —
     # GC/shuffle/codegen threads and Python workers otherwise spill onto
     # all host cores.
     try:
@@ -86,13 +92,12 @@ def main() -> None:
         fresh DataFrames (fresh RDD lineage → no shuffle-stage reuse).
 
         ``extra`` widens best-of for the highest-variance stages (a
-        measurement knob, not a workload definition — the scaling
-        harness records BENCH_REPEATS but excludes it from stage match
-        keys): knn_ring runs one Spark action per round plus one for
-        its brute tail (up to 3 per call here), so co-tenant jitter
-        amplifies up to ~3× there and one extra repeat buys the driver
-        artifact a second chance at a quiet window (r4 verdict #6: the
-        driver-run knn_ring landed 2.3× the pinned best)."""
+        measurement knob, not a workload definition): knn_ring runs one
+        Spark action per round plus one for its brute tail (up to 3 per
+        call here), so co-tenant jitter amplifies up to ~3× there and one
+        extra repeat buys the driver artifact a second chance at a quiet
+        window (r4 verdict #6: the driver-run knn_ring landed 2.3× the
+        pinned best)."""
         def deco(fn):
             best, rows = None, 0
             for _ in range(repeats + extra):
@@ -110,12 +115,11 @@ def main() -> None:
     # point where per-row work, not job overhead, dominates.
     n_li = li.count()
 
-    # 8192 (4.9B rows at sf0.1) everywhere — the driver's direct bench run
-    # and tools/scaling_bench.py's pinned table measure the SAME workload.
-    # Sized UP from r2's 2048 after the BNLJ→cell-BHJ rewrite made the
-    # stage 4× cheaper per row: at 2048 the 32-core wall fell under 5s and
-    # fixed per-job overhead (~1.5s driver planning + dispatch) capped
-    # measurable scaling efficiency at ~0.6 regardless of the plan.
+    # 8192 (4.9B rows at sf0.1) by default.  Sized UP from r2's 2048 after
+    # the BNLJ→cell-BHJ rewrite made the stage 4× cheaper per row: at 2048
+    # the 32-core wall fell under 5s and fixed per-job overhead (~1.5s
+    # driver planning + dispatch) capped measurable scaling efficiency at
+    # ~0.6 regardless of the plan.
     xl_mult = int(os.environ.get("SPARK_GRAFT_XL_MULT", "8192"))
 
     @timed("spatial_enrich_xl")
@@ -188,13 +192,13 @@ def main() -> None:
     @timed("knn_ring", extra=1)
     def _knn():
         from p3_osm_transformer_spark.operators.knn import knn_ring
-        knn_mult = int(os.environ.get("SPARK_GRAFT_KNN_MULT", "4"))
         key = F.col("id") + 1
         lon, lat = point_cols(key)
-        # knn_mult× lineitem-scale points: the ring loop runs ~6 driver
-        # actions per call, so the per-round join must dwarf scheduling or
-        # the stage measures the dispatcher, not the plan
-        pts = spark.range(0, n_li * knn_mult, 1, int(cpus) * 8).select(
+        # KNN_MULT× lineitem-scale points: the ring loop runs one Spark
+        # action per round plus one for its brute tail (3 per call here),
+        # so the per-round join must dwarf scheduling or the stage
+        # measures the dispatcher, not the plan
+        pts = spark.range(0, n_li * KNN_MULT, 1, int(cpus) * 8).select(
             key.alias("point_id"), lon.alias("lon"), lat.alias("lat"))
         slon, slat = point_cols(F.col("s_suppkey") * 7 + 3)
         addrs = supp.select(F.col("s_suppkey").cast("string").alias("addr_id"),
@@ -246,17 +250,14 @@ def main() -> None:
     # ceiling 0.60) on top of the dedup plan — the r3 verdict flagged the
     # 0.373 work-dominated efficiency as partly a stage-construction
     # artifact.  In a real deployment the corpus IS a persisted table; the
-    # timed stage below now reads parquet like every other fixture stage
-    # (WORKLOAD_VERSION bumped in tools/scaling_bench.py).
-    dedup_mult = int(os.environ.get("SPARK_GRAFT_DEDUP_MULT", "4"))
-    dedup_extra = int(os.environ.get("SPARK_GRAFT_DEDUP_EXTRA", "100000"))
+    # timed stage below now reads parquet like every other fixture stage.
     dedup_path = os.path.join(
         fixdir, f"dedup_corpus_{os.path.basename(sf_dir.rstrip('/'))}"
-                f"_m{dedup_mult}_e{dedup_extra}")
+                f"_m{DEDUP_MULT}_e{DEDUP_EXTRA}")
     if not os.path.exists(os.path.join(dedup_path, "_SUCCESS")):
         d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
              .select("doc_id", "text").repartition(16))
-        reps = d.crossJoin(spark.range(dedup_mult)
+        reps = d.crossJoin(spark.range(DEDUP_MULT)
                            .select(F.col("id").alias("_r")))
         corpus = reps.select(
             (F.col("doc_id") + F.col("_r") * 1_000_000).alias("doc_id"),
@@ -267,7 +268,7 @@ def main() -> None:
             F.sequence(F.lit(1), F.lit(40)),
             lambda j: F.conv(((F.col("id") * 48611 + j * 2654435761)
                               % 16777213).cast("string"), 10, 36))
-        synth = spark.range(0, dedup_extra, 1, 64).select(
+        synth = spark.range(0, DEDUP_EXTRA, 1, 64).select(
             (F.col("id") + 100_000_000).alias("doc_id"),
             F.concat_ws(" ", syn_toks).alias("text"))
         # 64 files so every parallelism level (4..32 cores) scans with
@@ -322,14 +323,13 @@ def main() -> None:
     # collapsed into 869 of 8192 buckets and the stage measured a
     # duplicate-vector hot-bucket pathology (1.28M candidate pairs for
     # 200 queries) instead of a representative ANN workload.
-    n_corpus = int(os.environ.get("SPARK_GRAFT_ANN_N", "200000"))
     ann_dims = F.sequence(F.lit(1), F.lit(64))
     ann_vec = F.transform(
         ann_dims, lambda d: F.hash(F.col("id"), d) / 2147483648.0)
-    ann_path = os.path.join(fixdir, f"ann_corpus_v2_n{n_corpus}")
+    ann_path = os.path.join(fixdir, f"ann_corpus_v2_n{ANN_N}")
     if not os.path.exists(os.path.join(ann_path, "_SUCCESS")):
         # 64 files so every parallelism level scans with full task waves
-        spark.range(0, n_corpus, 1, 64).select(
+        spark.range(0, ANN_N, 1, 64).select(
             F.col("id").alias("neighbor_id"), ann_vec.alias("embedding")) \
             .write.mode("overwrite").parquet(ann_path)
 
@@ -341,7 +341,7 @@ def main() -> None:
             (F.col("id") + 5_000_000).alias("query_id"),
             ann_vec.alias("embedding"))
         return _force(cosine_topk_lsh(qv, corpus, k=10, prefix_bits=None,
-                                      n_corpus=n_corpus, dim=64,
+                                      n_corpus=ANN_N, dim=64,
                                       n_queries=200))
 
     total = round(sum(timings.values()), 3)

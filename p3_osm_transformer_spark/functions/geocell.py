@@ -96,12 +96,6 @@ def parent_cell(cell: Column, g: int, steps: int = 1) -> Column:
 
 # ---------------------------------------------------------------- rings
 
-def ring_offsets_df(spark, k: int) -> DataFrame:
-    """All (dx, dy) with Chebyshev distance ≤ k — tiny, always broadcast."""
-    return spark.range(-k, k + 1).selectExpr("id as dx").crossJoin(
-        spark.range(-k, k + 1).selectExpr("id as dy"))
-
-
 def expand_ring(df: DataFrame, cell_col: str, g: int, k: int,
                 out_col: str = "probe_cell") -> DataFrame:
     """Explode each row into its ≤(2k+1)^2 neighbor cells (x wraps, y clamps).
@@ -127,16 +121,6 @@ def expand_ring(df: DataFrame, cell_col: str, g: int, k: int,
     )
     return (df.withColumn(out_col, F.explode(probes))
               .drop("_cx", "_cy"))
-
-
-def expand_ring_sql(cell: str, g: int, k: int) -> str:
-    """DuckDB twin of expand_ring: a LATERAL-joinable list of probe cells."""
-    n = 2**g
-    return (
-        f"(SELECT ((GREATEST(LEAST(CAST(FLOOR({cell} / {n}) AS BIGINT) + dy.g, {n - 1}), 0)) * {n}"
-        f" + ((CAST({cell} AS BIGINT) % {n} + dx.g % {n} + {n}) % {n})) AS probe_cell"
-        f" FROM generate_series(-{k}, {k}) dx(g), generate_series(-{k}, {k}) dy(g))"
-    )
 
 
 # ---------------------------------------------------------------- haversine

@@ -5,8 +5,9 @@ DataFrame pipelines (no Python in the hot path except where noted):
 
 * exact          — md5(normalized text) hash-groupBy.
 * minhash LSH    — shingle → per-seed min-hash → band → bucket self-join.
-                   Portable construction (md5 string-min) so the DuckDB
-                   oracle can replay signatures exactly.
+                   Portable construction (md5-prefix base hash, (a·x+b)
+                   mod p family) so the DuckDB oracle can replay
+                   signatures exactly.
 * simhash        — sign-aggregated token hashes; Hamming-close pairs.
 * ngram jaccard  — token-shingle overlap verification (the exact check run
                    on LSH candidate pairs: filter-refine, same shape as the
@@ -61,17 +62,6 @@ def tokens_of(text_col: str) -> F.Column:
                     lambda t: t != "")
 
 
-def shingles_of(text_col: str, n: int = 3) -> F.Column:
-    """Word n-gram shingles via sequence+transform (JVM-side, no UDF)."""
-    toks = tokens_of(text_col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
 # Universal-hash minhash family: ONE portable base hash per shingle
 # (15-hex-char md5 prefix → 60-bit int, replayable bit-exact in any engine
 # with md5), then h_i = (A_i·base + B_i) mod p — the classic (a·x+b) mod p
@@ -108,25 +98,6 @@ def _base_hash60(s: F.Column) -> F.Column:
     DuckDB twin: CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT)."""
     return F.conv(F.substring(F.md5(s.cast("binary")), 1, 15), 16, 10) \
             .cast("long")
-
-
-def _base_hash(s: F.Column) -> F.Column:
-    """Mod-p base hash feeding the (a·x+b) mod p minhash family.  DuckDB
-    twin: CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647."""
-    return _base_hash60(s) % F.lit(P_MINHASH)
-
-
-def minhash_signature(text_col: str, n_hashes: int = 8, shingle_n: int = 3) -> list[F.Column]:
-    """Scalar-column minhash signature (long mh_i columns) — convenient for
-    small inputs; the pipeline path (``minhash_signature_df``) is the
-    production shape (Catalyst does not common-subexpression the shingle
-    array across the n_hashes lambdas here)."""
-    sh = shingles_of(text_col, shingle_n)
-    A, B = minhash_consts(n_hashes)
-    return [F.array_min(F.transform(
-                sh, lambda s, i=i: (F.lit(A[i]) * _base_hash(s) + F.lit(B[i]))
-                % F.lit(P_MINHASH))).alias(f"mh_{i}")
-            for i in range(n_hashes)]
 
 
 def _shingles_df(docs: DataFrame, id_col: str, text_col: str,
@@ -203,7 +174,7 @@ def _band_keys(n_hashes: int, band_size: int) -> F.Column:
 
 def _band_keys_long(n_hashes: int, band_size: int) -> F.Column:
     """array<long> band keys: xxhash64 over each band's minima columns —
-    the ENGINE-INTERNAL join-key form (``dedup_near``'s default).  The
+    the ENGINE-INTERNAL join-key form (``_doc_signatures`` emits it).  The
     ':'-joined string form above stays the public/spec form
     (``minhash_bands``, SQL-replayable) — this one exists because the
     band self-join and its bucket-size aggregate hash/compare the key on
@@ -258,67 +229,6 @@ def minhash_bands(docs: DataFrame, id_col: str = "doc_id",
          .alias("band_idx", "band_key"))
 
 
-def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n_hashes: int = 8,
-                        band_size: int = 2, shingle_n: int = 3,
-                        max_bucket: int = 1000) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing ≥1 LSH band.
-
-    max_bucket caps pathological buckets (all-identical spam): a bucket of
-    m docs contributes m(m-1)/2 pairs; dropping buckets over the cap bounds
-    the blow-up and the dropped content is by construction near-identical —
-    exact-dedup (cheap) already collapses it.
-
-    Cache hygiene: the band table feeds a size filter AND both sides of the
-    pair self-join, so it is cached for the duration of the candidate join,
-    the (small, capped) pair set is materialized eagerly, and the cache is
-    released before returning — repeated calls in one session accrete no
-    storage memory.  At warehouse scale the cache becomes a persisted
-    signatures table instead.
-    """
-    bands = minhash_bands(docs, id_col, text_col, n_hashes, band_size,
-                          shingle_n).cache()
-    # window-count bucket guard — one exchange, reused by the self-join
-    # on the same keys (see dedup_near)
-    kept = (bands.withColumn(
-                "_bn", F.count(F.lit(1)).over(
-                    Window.partitionBy("band_idx", "band_key")))
-            .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-    a = kept.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-    b = kept.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
-    pairs = (a.join(b, ["band_idx", "band_key"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct()
-             .localCheckpoint(eager=True))
-    bands.unpersist()
-    return pairs
-
-
-# ---------------------------------------------------------------- jaccard
-
-def jaccard_verify(pairs: DataFrame, docs: DataFrame,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   shingle_n: int = 3, threshold: float = 0.7) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs (the refine step)."""
-    # joined twice (id_a and id_b sides) — cache the shingle-set table for
-    # the duration of the verify join, materialize the (small) verified
-    # pair set, release the cache before returning (no session accretion).
-    # shingle arrays come from the let-bound builder (see _shingles_df).
-    sh = (_shingles_df(docs, id_col, text_col, shingle_n)
-          .select(F.col(id_col), F.array_distinct("_sh").alias("sh")).cache())
-    j = (pairs
-         .join(sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-         .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (j.withColumn("jaccard", F.round(inter / union, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-            .localCheckpoint(eager=True))
-    sh.unpersist()
-    return out
-
-
 def _jaccard_arrow():
     """Per-pair exact Jaccard over two distinct-long-array columns as ONE
     flat-batch numpy pass — the verify projection's scale form.
@@ -326,14 +236,13 @@ def _jaccard_arrow():
     The Catalyst twin (``size(array_intersect)/size(array_union)``)
     builds a boxed ``OpenHashSet[Any]`` per pair per operator: random
     pointer-chasing over ~80 heap objects per candidate.  Event-log
-    attribution at DEDUP_EXTRA=1.2M (tools/dedup_tasks.py, 2.3M
-    candidate pairs of ~40-long sets) measured the verify stage at 87
-    CPU-s on 8 pinned cores vs 605-1400 CPU-s on 32 — 7-16× CPU
-    inflation for identical work, the signature of an LLC-thrash-bound
-    workload (per-thread working sets × threads outgrow the shared
-    cache, so every probe becomes a DRAM miss); it anti-scales with
-    cores and is the reason the stage's matched-window 8→32 efficiency
-    sat below both host ceilings.
+    attribution at DEDUP_EXTRA=1.2M (2.3M candidate pairs of ~40-long
+    sets) measured the verify stage at 87 CPU-s on 8 pinned cores vs
+    605-1400 CPU-s on 32 — 7-16× CPU inflation for identical work, the
+    signature of an LLC-thrash-bound workload (per-thread working sets ×
+    threads outgrow the shared cache, so every probe becomes a DRAM
+    miss); it anti-scales with cores and is the reason the stage's
+    matched-window 8→32 efficiency sat below both host ceilings.
 
     The numpy form (same flat-batch idiom as ``_doc_signatures_arrow``):
     lexsort all (pair_idx, value) rows of a batch once — sequential
@@ -342,8 +251,10 @@ def _jaccard_arrow():
     the same int64 values, so results are bit-identical to the Catalyst
     twin (inputs are distinct-per-array by construction —
     ``_doc_signatures`` emits ``np.unique`` / ``collect_set`` sets).
-    NULL semantics match Spark's non-ANSI Divide: NULL input or an
-    empty union → NULL."""
+    A NULL input gives NULL in both forms.  An empty union differs: the
+    Catalyst twin raises DIVIDE_BY_ZERO under the session's ANSI mode,
+    this form returns NULL.  It cannot arise from ``dedup_near``, since
+    ``_doc_signatures`` gives every document at least one hash."""
     @F.pandas_udf("double")
     def _jac(sa: pd.Series, sb: pd.Series) -> pd.Series:
         n = len(sa)
@@ -399,7 +310,7 @@ def _doc_signatures_arrow(docs: DataFrame, id_col: str, text_col: str,
     allocation, not arithmetic:
 
     Catalyst form, profiled at DEDUP_EXTRA=400k (420k docs, ~17M
-    shingles; tools/dedup_profile.py, whole-host /proc/stat busy time):
+    shingles; whole-host /proc/stat busy time):
     wall 11.5s / 82 CPU-s at 8 pinned cores vs wall 12.0s / 318 CPU-s at
     32 — the same work burns 4× the CPU with ZERO wall gain, i.e. the
     stage saturates the host's memory system at 8 cores and extra cores
@@ -451,7 +362,7 @@ def _doc_signatures_arrow(docs: DataFrame, id_col: str, text_col: str,
                           for i in range(len(toks) - shingle_n + 1)]
                 else:
                     # <n tokens → ONE whole-text shingle ("" for empty),
-                    # same fallback as shingles_of
+                    # same fallback as _shingles_df
                     sh = [" ".join(toks)]
                 ids.append(did)
                 offs.append(len(flat))
@@ -480,9 +391,8 @@ def _doc_signatures_arrow(docs: DataFrame, id_col: str, text_col: str,
 
 def _doc_signatures(docs: DataFrame, id_col: str, text_col: str,
                     n_hashes: int, band_size: int,
-                    shingle_n: int, impl: str = "arrow",
-                    band_keys: str = "string") -> DataFrame:
-    """(id, hset:array<long>, bands:array<string>) — the distinct
+                    shingle_n: int, impl: str = "arrow") -> DataFrame:
+    """(id, hset:array<long>, bands:array<long>) — the distinct
     shingle-HASH set AND the LSH band keys of every document, one
     tokenize + one md5-per-shingle pass.
 
@@ -512,16 +422,14 @@ def _doc_signatures(docs: DataFrame, id_col: str, text_col: str,
         ex = _exploded_hashes(docs, id_col, text_col, shingle_n)
         sig = ex.groupBy(id_col).agg(*_min_hash_aggs(n_hashes),
                                      F.collect_set("_h").alias("hset"))
-    bk = (_band_keys_long if band_keys == "long"
-          else _band_keys)(n_hashes, band_size)
-    return sig.select(F.col(id_col), F.col("hset"), bk.alias("bands"))
+    return sig.select(F.col(id_col), F.col("hset"),
+                      _band_keys_long(n_hashes, band_size).alias("bands"))
 
 
 def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                threshold: float = 0.7, n_hashes: int = 8, band_size: int = 2,
                shingle_n: int = 3, max_bucket: int = 1000,
-               eager: bool = False, signatures: str = "arrow",
-               verify: str = "arrow") -> DataFrame:
+               signatures: str = "arrow", verify: str = "arrow") -> DataFrame:
     """Full near-dup pipeline: LSH candidates → Jaccard verify, ONE driver
     action inside (the signature checkpoint) — the candidates→verify plan
     is returned LAZY, so the caller's own materialization (noop write,
@@ -533,10 +441,11 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     Shape rationale, measured (event-log breakdowns at local[32], 20k-doc
     corpus):
 
-    * The r2 staged form (lsh_candidate_pairs → jaccard_verify) paid ~5
-      driver actions — two cache fills, two eager checkpoints, a final
-      count — each costing ~1-1.3s of driver-serial Catalyst+codegen dead
-      time between jobs (~8.5s total) that no executor count can shrink.
+    * The r2 staged form (a checkpointed candidate-pair table, then a
+      separate verify) paid ~5 driver actions — two cache fills, two
+      eager checkpoints, a final count — each costing ~1-1.3s of
+      driver-serial Catalyst+codegen dead time between jobs (~8.5s
+      total) that no executor count can shrink.
     * A fully-fused one-action form is WORSE: the band self-join's two
       sides and the verify join's two sides all scan the still-cold
       .cache()'d tables concurrently in one job wave, so the minhash ran
@@ -554,10 +463,14 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     becomes a persisted signatures table (sources/catalog.py snapshot)
     and the verify's explicit repartition is the shuffle that distributes
     candidate pairs across the cluster.  Callers that act on the result
-    more than once should materialize it themselves (snapshot write /
-    .cache, or pass ``eager=True``) — the r2 unconditional terminal
+    more than once should materialize it themselves (snapshot write,
+    .cache or .localCheckpoint) — the r2 unconditional terminal
     checkpoint protected that case but charged every single-action
     caller a whole extra driver round-trip.
+
+    ``max_bucket`` caps pathological band buckets (all-identical spam): a
+    bucket of m docs contributes m(m-1)/2 pairs, and the dropped content
+    is by construction near-identical — exact dedup already collapses it.
 
     The verify join repartitions pairs explicitly: AQE coalesces by BYTES,
     and 40k candidate pairs are tiny on disk but carry ~20ms of
@@ -572,10 +485,8 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # construction burns 4× the CPU at 32 cores for the same values
     # (_doc_signatures_arrow docstring); "catalyst" keeps the pure-
     # DataFrame spec form (parity-tested equal)
-    # band_keys="long": fixed-width engine-internal join keys (see
-    # _band_keys_long — the string form remains the public spec form)
     sig = _doc_signatures(docs, id_col, text_col, n_hashes, band_size,
-                          shingle_n, impl=signatures, band_keys="long") \
+                          shingle_n, impl=signatures) \
         .localCheckpoint(eager=True)
 
     bands = sig.select(id_col, F.posexplode("bands")
@@ -587,7 +498,7 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # side b).  count() over the (band_idx, band_key) partition needs
     # ONE exchange+sort — and the band self-join below joins on the SAME
     # keys, so AQE reuses the materialized shuffle stage for both sides
-    # at runtime (measured, tools/dedup_tasks.py at DEDUP_EXTRA=1.2M:
+    # at runtime (measured by event-log attribution at DEDUP_EXTRA=1.2M:
     # the duplicate 66 MB band-exchange stage disappears and the
     # candidate-join stage's shuffle read drops 304→171 MB; the INITIAL
     # plan cannot show ReusedExchange under AQE — reuse happens in the
@@ -620,16 +531,9 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
         raw = inter / union
-    out = (j.withColumn("jaccard", F.round(raw, 6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    if eager:
-        # escape hatch for multi-action callers: materialize once so each
-        # subsequent action reads checkpointed blocks instead of re-running
-        # the candidates→verify join (costs one extra driver round-trip —
-        # single-action callers should leave this off)
-        out = out.localCheckpoint(eager=True)
-    return out
+    return (j.withColumn("jaccard", F.round(raw, 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 # ---------------------------------------------------------------- simhash
@@ -730,7 +634,7 @@ def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
     boilerplate text share a band value by the thousands → m²/2 candidate
     blow-up); the dropped content is near-identical by construction, which
     exact dedup (cheap, runs first in any real pipeline) already collapses
-    — same trade as ``lsh_candidate_pairs``.
+    — same trade as ``dedup_near``'s ``max_bucket``.
     """
     bands = []
     for b in range(4):

@@ -33,11 +33,6 @@ def street_tokens(c: F.Column) -> F.Column:
     return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda t: t != "")
 
 
-def street_tokens_sql(c: str) -> str:
-    """DuckDB twin of street_tokens."""
-    return f"list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), t -> t != '')"
-
-
 def geocode(queries: DataFrame, addresses: DataFrame,
             strategy: str = "token-join") -> DataFrame:
     """J5: queries × addresses on token-overlap(street) ∧ locality ∧ country.

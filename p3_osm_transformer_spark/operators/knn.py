@@ -268,40 +268,6 @@ def knn_ring(points: DataFrame, addresses: DataFrame,
         margin=margin, stop_on_no_progress=True, plan_probe=plan_probe)
 
 
-def hex_ring_candidates(points: DataFrame, addresses: DataFrame,
-                        point_id: str = "point_id", k: int = 1,
-                        res: int = 9) -> DataFrame:
-    """Candidate (point, address) pairs via SEAM-AWARE hexcell ring
-    expansion — the hexagonal-grid analogue of the geocell probe join in
-    ``knn_ring`` (the spatial access path replacing the reference's
-    Lucene index probe, JenaTextConfig.java:52-59).
-
-    Plan: encode both sides at ``res`` (one Arrow pandas_udf pass each),
-    explode each point's ``hex_kring`` (exact lattice disk in-face,
-    owner-face covering across icosahedron seams — functions/hexcell.py),
-    equi-join on the address cell.  Everything after the two encodes is
-    codegen: Generate + shuffled hash join on a long key.  Hexagons give
-    ~isotropic rings (the 6-neighbor disk covers a circle with ~17% less
-    over-probe area than the 8-neighbor square ring), and the seam-aware
-    ring means candidates never silently vanish at the 20 face
-    boundaries.  Completeness contract (property-tested): any address
-    within ~0.8 cell widths of the point is among the candidates,
-    including across a seam."""
-    from p3_osm_transformer_spark.functions.hexcell import (
-        hex_cellid, hex_kring)
-    pts = (points
-           .withColumn("_hx", hex_cellid(F.col("lon"), F.col("lat"), res))
-           .withColumn("_probe", F.explode(hex_kring(F.col("_hx"), k, res)))
-           .drop("_hx"))
-    addr = addresses.select(
-        "addr_id", F.col("lat").alias("a_lat"), F.col("lon").alias("a_lon"),
-        hex_cellid(F.col("lon"), F.col("lat"), res).alias("_hx_a"))
-    return (pts.join(addr, pts["_probe"] == addr["_hx_a"], "inner")
-            .drop("_probe", "_hx_a")
-            .withColumn("dist_m", haversine_m(
-                F.col("lon"), F.col("lat"), F.col("a_lon"), F.col("a_lat"))))
-
-
 def hex_resolve_margin_m(res: int, ring_k: int = 1) -> float:
     """Conservative meters bound: an address NOT in the probed seam-aware
     ``ring_k``-disk of a point's hexcell is at least this far away, so a

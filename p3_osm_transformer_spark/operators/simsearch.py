@@ -169,10 +169,10 @@ def _cosine_arrow(dim: int):
     The Catalyst per-pair form evaluates three interpreted HOF folds per
     candidate (dot) plus one per input ROW (norms — including one pass
     over the ENTIRE corpus side before the join): /proc/stat profiling at
-    ANN_N=1.5M (tools/ann_profile.py) attributed ~50 of the stage's 145
-    CPU-seconds at 32 cores to this block, with 2.3× CPU inflation vs 8
-    cores — the same boxed-Double allocation pressure that capped the
-    dedup signature pass (operators/dedup.py _doc_signatures_arrow).
+    ANN_N=1.5M attributed ~50 of the stage's 145 CPU-seconds at 32 cores
+    to this block, with 2.3× CPU inflation vs 8 cores — the same
+    boxed-Double allocation pressure that capped the dedup signature pass
+    (operators/dedup.py _doc_signatures_arrow).
 
     Bit-identical to the Catalyst form by construction: dot and both
     squared norms accumulate in d-ascending order (acc = acc + x, one
@@ -229,7 +229,7 @@ def _bucket_long(bits_col: F.Column) -> F.Column:
     the mapping is bijective): hashing/comparing 8-byte longs through the
     window sort, bucket join and distinct beats 13-char strings — the
     candidate phase showed 2.2× CPU inflation at 32 cores on the string
-    form (tools/ann_profile.py)."""
+    form (/proc/stat profiling)."""
     return F.conv(bits_col, 2, 10).cast("long")
 
 
@@ -331,11 +331,10 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     # thousands of pairs — while the r5.3 order ((cand ⋈ qe) ⋈ ce)
     # attached query embeddings first, which pushed BOTH join inputs
     # over the broadcast threshold and hashed them by c_id: measured at
-    # ANN_N=1.5M/32 cores (tools/ann_tasks.py, per-task event-log
-    # metrics), 653 MB of corpus embeddings + 238 MB of candidate+query
-    # rows written and 892 MB read back through the exchange — ~1.5 GB
-    # of memory-bus traffic on a host whose stream ceiling is the 8→32
-    # scaling limiter.
+    # ANN_N=1.5M/32 cores (per-task event-log metrics), 653 MB of corpus
+    # embeddings + 238 MB of candidate+query rows written and 892 MB read
+    # back through the exchange — ~1.5 GB of memory-bus traffic on a host
+    # whose stream ceiling is the 8→32 scaling limiter.
     #
     # Order alone is not enough: AQE materializes BOTH children of a
     # shuffled join before it can demote it to broadcast, so the 653 MB
@@ -492,7 +491,7 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
 
     ``prefix_bits=None`` derives the bucket count from the corpus size
     (``pick_prefix_bits``); ``max_bucket`` drops degenerate hot buckets
-    whole (dedup semantics, same trade as ``lsh_candidate_pairs``: the
+    whole (dedup semantics, same trade as ``dedup_near``'s: the
     dropped content is near-identical and exact dedup collapses it).
 
     ``cosine_near_dup_brute`` is the oracle twin (exact, O(n²)).

@@ -42,10 +42,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int) -> None:
        .saveAsTable(table))  # managed: lives under spark.sql.warehouse.dir
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_equi_join(spark: SparkSession, left_table: str,
                        right_table: str, key: str,
                        how: str = "inner") -> DataFrame:

@@ -316,35 +316,3 @@ def test_knn_hex_sparse_resolves_via_expanded_rings_not_brute(spark):
                  if "brute_tail_points" in s), 0)
     assert ring_resolved >= 0.8 * n_pts, (stats, ring_resolved)
     assert tail <= 0.2 * n_pts, stats
-
-
-def test_hex_ring_candidates_cover_near_addresses(spark):
-    """Completeness contract of the probe join: every address within
-    ~0.8 cell widths of a point appears among its candidates."""
-    from p3_osm_transformer_spark.functions import hexcell as H
-    import numpy as np
-    rng = np.random.RandomState(5)
-    n = 300
-    plon = rng.uniform(-180, 180, n)
-    plat = np.degrees(np.arcsin(rng.uniform(-0.95, 0.95, n)))
-    res = 5
-    cells = H.np_hex_cellid(plon, plat, res)
-    f, q, r = H.np_hex_decode(cells, res)
-    clon, clat = H.np_hex_center(f, q, r, res)
-    w = np.percentile(np.hypot((plon - clon) * np.cos(np.radians(plat)),
-                               plat - clat), 99)
-    ang = rng.uniform(0, 2 * np.pi, n)
-    dd = rng.uniform(0, 0.8, n) * w
-    alon = plon + dd * np.cos(ang) / np.maximum(np.cos(np.radians(plat)), 0.2)
-    alat = np.clip(plat + dd * np.sin(ang), -90, 90)
-    pts = spark.createDataFrame(
-        [(int(i), float(plon[i]), float(plat[i])) for i in range(n)],
-        "point_id long, lon double, lat double")
-    addrs = spark.createDataFrame(
-        [(f"a-{i}", float(alon[i]), float(alat[i])) for i in range(n)],
-        "addr_id string, lon double, lat double")
-    cand = {(r["point_id"], r["addr_id"])
-            for r in knn.hex_ring_candidates(pts, addrs, k=1, res=res)
-            .select("point_id", "addr_id").collect()}
-    missing = [(i, f"a-{i}") for i in range(n) if (i, f"a-{i}") not in cand]
-    assert missing == []

@@ -32,8 +32,8 @@ def test_dedup_exact(spark):
 
 def test_dedup_near_lsh_jaccard(spark):
     c = _corpus(spark)
-    # three actions below — eager=True materializes the verify join once
-    near = dedup.dedup_near(c, threshold=0.7, eager=True)
+    # three actions below — materialize the verify join once
+    near = dedup.dedup_near(c, threshold=0.7).localCheckpoint(eager=True)
     injected = c.filter("doc_id >= 200000").count()
     caught = near.filter("id_b - id_a = 200000").count()
     assert caught >= injected * 0.9          # LSH recall on true near-dups

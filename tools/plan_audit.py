@@ -204,11 +204,11 @@ def main() -> None:
 
     # 8b. dedup_near (r5 rewrite): the signature pass is ONE Arrow
     # MapInPandas map — no aggregate, no Exchange at all (the r4 JVM
-    # construction burned 4× the CPU at 32 cores; tools/dedup_profile.py
-    # + operators/dedup.py _doc_signatures_arrow docstring).  The
-    # candidates→verify plan the caller executes reads the CHECKPOINTED
-    # signature blocks from every side — no Python left in it, no
-    # cartesian.
+    # construction burned 4× the CPU at 32 cores under whole-host
+    # /proc/stat profiling; see operators/dedup.py _doc_signatures_arrow
+    # docstring).  The candidates→verify plan the caller executes reads
+    # the CHECKPOINTED signature blocks from every side — no Python left
+    # in it, no cartesian.
     from p3_osm_transformer_spark.operators.dedup import (
         _doc_signatures, dedup_near)
     audit("dedup signature pass (one Arrow map, zero exchanges)",
@@ -264,18 +264,6 @@ def main() -> None:
           must_not=["hashpartitioning(neighbor_id",
                     "CartesianProduct", "BroadcastNestedLoopJoin",
                     "BatchEvalPython", "MapInPandas"])
-
-    # 10. hexcell probe join (r4): seam-aware hex_kring explode + long-key
-    # equi-join.  Python appears ONLY in the two cell encodes
-    # (ArrowEvalPython pandas_udf nodes — one per side); the ring explode,
-    # the join and the distance projection are codegen.  Never a
-    # cartesian/BNLJ, never row-at-a-time Python.
-    from p3_osm_transformer_spark.operators.knn import hex_ring_candidates
-    audit("hex ring candidates (seam-aware probe join)",
-          hex_ring_candidates(kpts, kaddrs, k=1, res=5),
-          must=["Generate", "ArrowEvalPython"],
-          must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
-                    "BatchEvalPython"])
 
     # write PLANS.md digest
     out = ["# PLANS.md — audited physical plans",
