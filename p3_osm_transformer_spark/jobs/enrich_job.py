@@ -48,15 +48,24 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    # SparkSession comes from spark-submit's conf; getOrCreate attaches to it.
+    # SparkSession comes from spark-submit's conf; getOrCreate attaches to
+    # it, adding only the Python worker settings of a local master.
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from p3_osm_transformer_spark.plans.pipeline import enrich_images
+    from p3_osm_transformer_spark.session import worker_confs
     from p3_osm_transformer_spark.sources.catalog import Catalog
     from p3_osm_transformer_spark.streaming.resume import resume_run
 
-    spark = SparkSession.builder.appName("enrich_job").getOrCreate()
+    SparkContext._ensure_initialized()  # SparkConf then reads spark-submit's
+    conf = SparkConf()                  # --master and --conf
+    builder = SparkSession.builder.appName("enrich_job")
+    for k, v in worker_confs(conf.get("spark.master", ""),
+                             conf.get("spark.executorEnv.PYTHONPATH")).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     images = spark.read.parquet(args.images)
     addresses = spark.read.parquet(args.addresses)
     catalog = Catalog(args.catalog_root)

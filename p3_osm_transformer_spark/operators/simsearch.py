@@ -287,8 +287,9 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     the join-order comment below.  Output is identical either way.
     """
     if prefix_bits is None:
-        prefix_bits = pick_prefix_bits(
-            n_corpus if n_corpus is not None else corpus.count())
+        if n_corpus is None:
+            n_corpus = corpus.count()
+        prefix_bits = pick_prefix_bits(n_corpus)
     if n_planes < prefix_bits:
         n_planes = prefix_bits
     if dim is None:
@@ -344,13 +345,19 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     # ``n_queries`` (caller-supplied, e.g. from Catalog.row_count
     # manifest metadata — the same pattern as ``n_corpus``) bounds the
     # expected candidate set at n_queries × (prefix_bits+1) probes ×
-    # ~target_bucket members, and when that estimate is comfortably
+    # bucket occupancy, and when that estimate is comfortably
     # broadcastable the candidate pairs get an explicit broadcast hint:
     # the corpus embeddings then stream MAP-SIDE off the scan with no
     # exchange at all.  With the estimate large or n_queries unknown,
     # the plan stays shuffled and AQE keeps the runtime re-plan — same
-    # worst case, strictly better common case.
-    est_cand_rows = (n_queries * (prefix_bits + 1) * 256
+    # worst case, strictly better common case.  Occupancy is
+    # min(max_bucket, ⌈n_corpus / 2**prefix_bits⌉) when n_corpus is known,
+    # ~target_bucket only when it is not: AQE never demotes an explicit
+    # broadcast, so a caller's small prefix_bits over a large corpus must
+    # not be sized at 256 rows per bucket.
+    occupancy = (min(max_bucket, -(-n_corpus // (1 << prefix_bits)))
+                 if n_corpus is not None else 256)
+    est_cand_rows = (n_queries * (prefix_bits + 1) * occupancy
                      if n_queries is not None else None)
     if est_cand_rows is not None and est_cand_rows * 16 < (64 << 20):
         cand_ids = F.broadcast(cand_ids)

@@ -8,6 +8,11 @@ bench, driver contract) runs with the same scale-oriented defaults:
 - UTC session timezone (deterministic timestamp semantics vs the DuckDB oracle)
 - shuffle partitions sized to local cores (overridable for the 1000-executor
   deployment via spark-submit --conf)
+- on ``local[...]`` masters, the Python worker daemon of ``pyworker.py``,
+  which spares each UDF task a re-read of every zip on the workers' import
+  path (``worker_confs``).  Only local masters: the daemon is loaded from
+  the driver's copy of the package, which only there is on the workers'
+  filesystem; other masters keep Spark's default daemon.
 """
 
 from __future__ import annotations
@@ -53,6 +58,21 @@ _ENGINE_CONFS["spark.sql.warehouse.dir"] = os.path.join(
     tempfile.gettempdir(), f"spark_graft_warehouse_{_USER}_{os.getpid()}")
 
 
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_confs(master: str, pythonpath: str | None = None) -> dict[str, str]:
+    """Python worker settings for ``master``: on a local master, the
+    ``pyworker`` daemon, with the package's parent (the checkout, or the
+    --py-files zip the package came from) first on the workers' PYTHONPATH,
+    ahead of the caller's ``pythonpath``.  Empty for any other master."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    path = os.pathsep.join(p for p in (_PKG_PARENT, pythonpath) if p)
+    return {"spark.python.daemon.module": "p3_osm_transformer_spark.pyworker",
+            "spark.executorEnv.PYTHONPATH": path}
+
+
 def get_spark(
     app_name: str = "p3_osm_transformer_spark",
     master: str | None = None,
@@ -78,9 +98,9 @@ def get_spark(
     builder = builder.config("spark.default.parallelism", str(max(n_threads, 8)))
     # local mode: driver memory is the only memory knob.
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-    for k, v in _ENGINE_CONFS.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_confs or {}).items():
+    confs = {**_ENGINE_CONFS, **(extra_confs or {})}
+    confs.update(worker_confs(master, confs.get("spark.executorEnv.PYTHONPATH")))
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -16,7 +16,7 @@ SPARK_SUBMIT = shutil.which("spark-submit") or os.path.join(
     os.path.dirname(sys.executable), "spark-submit")
 
 
-def _submit(zip_path: str, job_args: list[str]) -> dict:
+def _submit(zip_path: str, job_args: list[str], cwd: str) -> dict:
     cmd = [SPARK_SUBMIT, "--master", "local[4]",
            "--conf", "spark.ui.enabled=false",
            "--conf", "spark.ui.showConsoleProgress=false",
@@ -26,8 +26,10 @@ def _submit(zip_path: str, job_args: list[str]) -> dict:
            ] + job_args
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)   # the zip, not the checkout, must supply the pkg
+    # run outside the checkout, so that the Python worker daemon cannot
+    # pick the package up from its working directory either
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=600,
-                         env=env)
+                         env=env, cwd=cwd)
     assert out.returncode == 0, f"spark-submit failed:\n{out.stdout}\n{out.stderr}"
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
@@ -58,7 +60,7 @@ def test_spark_submit_enrich_and_resume(spark, pkg_zip, tmp_path):
     args = ["--images", images_dir, "--addresses", addr_dir,
             "--catalog-root", cat_root, "--table", "enriched",
             "--knn-strategy", "brute"]
-    m1 = _submit(pkg_zip, args)
+    m1 = _submit(pkg_zip, args, str(tmp_path))
     assert m1["rows_in"] == n_images and not m1["resumed"]
     assert m1["rows_out"] >= n_images            # kNN enrich keeps every image
     assert m1["partition_rows"] and sum(m1["partition_rows"]) == m1["rows_out"]
@@ -68,5 +70,5 @@ def test_spark_submit_enrich_and_resume(spark, pkg_zip, tmp_path):
     assert out.count() == m1["rows_out"]
 
     # second run, same inputs: everything already committed → no-op snapshot
-    m2 = _submit(pkg_zip, args)
+    m2 = _submit(pkg_zip, args, str(tmp_path))
     assert m2["resumed"] and m2["rows_in"] == 0 and m2["snapshot"] == 2

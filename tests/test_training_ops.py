@@ -306,6 +306,24 @@ def test_ann_lsh_auto_bits_planted_recall(spark):
     assert top1 == {(i, 1000 + i) for i in range(20)}
 
 
+def test_ann_broadcast_hint_sized_by_bucket_occupancy(spark):
+    """The static broadcast of the candidate pairs is sized from the
+    corpus's bucket occupancy: a caller's small prefix_bits over a large
+    n_corpus (625k rows per bucket, capped at max_bucket) is too big to
+    broadcast, while the corpus-derived bits keep ~n/2**bits per bucket."""
+    emb = spark.createDataFrame([(i, [float(i), 1.0, 0.5, 2.0]) for i in range(8)],
+                                "vec_id long, embedding array<double>")
+    q = emb.selectExpr("vec_id as query_id", "embedding")
+    c = emb.selectExpr("vec_id as neighbor_id", "embedding")
+
+    def hinted(**kw):
+        out = simsearch.cosine_topk_lsh(q, c, k=1, n_queries=1000, dim=4, **kw)
+        return "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+
+    assert not hinted(prefix_bits=4, n_corpus=10_000_000)
+    assert hinted(prefix_bits=None, n_corpus=30_000)
+
+
 def test_doc_signatures_arrow_equals_catalyst(spark):
     """The Arrow signature fast path (r5: the JVM construction burned 4×
     the CPU at 32 cores) must be VALUE-IDENTICAL to the Catalyst spec
