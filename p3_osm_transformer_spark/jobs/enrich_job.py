@@ -11,7 +11,7 @@
 The job is resumable: re-running with the same catalog/table anti-joins
 `image_id` against committed snapshots and processes only new rows
 (streaming/resume.py), committing a fresh immutable snapshot with a
-metrics JSON (rows in/out, wall, per-partition histogram) beside it.
+metrics JSON (rows in/out, wall, rows per written file) beside it.
 
 No master/parallelism is hard-coded here — spark-submit's --master/--conf
 own the cluster shape, which is exactly what lets the same artifact run

@@ -11,7 +11,8 @@ broken (SURVEY.md §2 S8).  The engine replaces both with a real contract:
   already-committed output, so only unprocessed keys are recomputed —
   the processed set is never touched (idempotent, exactly-once per key);
 * every run records an observe()-based metrics row (row counts in/out,
-  wall latency, per-partition row histogram) next to the snapshot.
+  wall latency, rows per written file from the snapshot's manifest) next
+  to the snapshot.
 """
 
 from __future__ import annotations
@@ -25,14 +26,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from p3_osm_transformer_spark.sources.catalog import Catalog
-
-
-def partition_histogram(df: DataFrame) -> list[int]:
-    """Rows per partition — the per-partition lineage metric.  Uses
-    spark_partition_id (no data movement; one lightweight agg job)."""
-    rows = (df.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("n")).collect())
-    return [r["n"] for r in sorted(rows, key=lambda r: r["pid"])]
 
 
 def resume_run(
@@ -74,7 +67,8 @@ def resume_run(
         "rows_in": int(obs_in.get["rows_in"]),
         "rows_out": int(obs_out.get["rows_out"]),
         "wall_sec": round(wall, 3),
-        "partition_rows": partition_histogram(catalog.read(spark, table, snap)),
+        "partition_rows": [n for e in catalog.manifest_of(table, snap).values()
+                           for n in e["file_rows"]],
     }
     mpath = os.path.join(catalog.root, table, f"snap-{snap}.metrics.json")
     with open(mpath, "w") as f:

@@ -7,6 +7,10 @@ The assertions are on *files actually handed to the scan* (df.inputFiles())
 
 from __future__ import annotations
 
+import math
+import os
+from datetime import datetime
+
 from pyspark.sql import functions as F
 
 from p3_osm_transformer_spark.sources.catalog import (
@@ -109,6 +113,27 @@ def test_manifest_stats_pruning(spark, tmp_path):
     none = cat.read(spark, "pts", stats_range={"v": (5000, 6000)})
     assert none.count() == 0 and "pid" in none.columns
 
+    # footer stats merge: one partition written as two files, a NaN in one
+    # of them (Spark orders NaN above every number), and a timestamp column
+    # (INT96: no footer min/max → no stats entry, never pruned)
+    two = spark.range(0, 8, 1, numPartitions=2).select(
+        F.col("id").alias("pid"), F.lit(0).alias("g"),
+        F.when(F.col("id") == 1, float("nan"))
+         .otherwise(F.col("id") - 5.0).alias("v"),
+        F.timestamp_seconds(F.col("id") * 86400).alias("ts"))
+    cat.write_snapshot(two, "two", partition_by=["g"], stats_cols=["v", "ts"])
+    m = cat.manifest_of("two", 1)
+    assert list(m) == ["g=0"] and m["g=0"]["file_rows"] == [4, 4]
+    back = cat.read(spark, "two")
+    want = back.agg(F.min("v"), F.max("v")).first()
+    mn, mx = m["g=0"]["stats"]["v"]
+    assert mn == want[0] == -5.0 and math.isnan(mx) and math.isnan(want[1])
+    assert "ts" not in m["g=0"]["stats"]
+    far = cat.read(spark, "two", stats_range={
+        "ts": (datetime(1990, 1, 1), datetime(1990, 1, 2))})
+    assert sorted(far.inputFiles()) == sorted(back.inputFiles())
+    assert len(back.inputFiles()) == 2
+
 
 def test_manifest_keys_match_written_dirs_and_missing_entry_keeps(spark, tmp_path):
     """Manifest keys must be the partitions' ACTUAL directory names (write
@@ -153,6 +178,9 @@ def test_row_count_from_manifest(spark, tmp_path):
     # unpartitioned write also records rows (single "" key)
     cat.write_snapshot(_pts(spark, 50), "flat")
     assert cat.row_count("flat") == 50
+    # a snapshot without _manifest.json is counted from its parquet footers
+    os.remove(os.path.join(str(tmp_path), "flat", "snap-1", "_manifest.json"))
+    assert cat.row_count("flat") == 50 and cat.live_row_count("flat") == 50
 
 
 def test_vacuum_compact_expire_lifecycle(spark, tmp_path):

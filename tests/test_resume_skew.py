@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,7 +34,11 @@ def test_resume_processes_only_new_keys(spark, tmp_path):
 
     m1 = resume_run(spark, cat, "out", inputs1, "k", transform)
     assert (m1["rows_in"], m1["rows_out"], m1["resumed"]) == (100, 100, False)
-    assert sum(m1["partition_rows"]) == 100
+    # one entry per written file, summing to the rows written
+    files = [f for f in os.listdir(os.path.join(str(tmp_path), "out", "snap-1"))
+             if f.endswith(".parquet")]
+    assert len(m1["partition_rows"]) == len(files) > 1
+    assert sum(m1["partition_rows"]) == m1["rows_out"] == 100
 
     # second run: 50 old + 50 new keys → only the 50 new are processed
     inputs2 = spark.range(50, 200).select(F.col("id").alias("k"))
@@ -49,6 +56,35 @@ def test_resume_processes_only_new_keys(spark, tmp_path):
     assert m3["resumed"] is True and (m3["rows_in"], m3["rows_out"]) == (0, 0)
     total = full_table(spark, cat, "out")
     assert total.count() == 200 and total.select("k").distinct().count() == 200
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_write_and_fresh_resume_run_one_job(spark, tmp_path):
+    """Catalog bookkeeping never adds a Spark job: the manifest (row counts
+    and stats) comes from parquet footers and resume_run's per-file rows
+    from the manifest, so the write is the only job."""
+    cat = Catalog(str(tmp_path))
+    df = spark.range(200).select(F.col("id").alias("k"),
+                                 (F.col("id") % 7).alias("v"))
+    spec = {"t": {"transform": "truncate[50]", "source": ["k"]}}
+    assert _jobs_run_by(spark, lambda: cat.write_snapshot(
+        df, "pts", partition_spec=spec, stats_cols=["v"])) == 1
+    assert cat.row_count("pts") == 200
+    assert _jobs_run_by(spark, lambda: resume_run(
+        spark, cat, "out", df, "k",
+        lambda d: d.withColumn("w", F.col("v") * 2))) == 1
 
 
 def test_hot_cells_and_salted_agg(spark):
