@@ -404,7 +404,6 @@ def np_hex_kring(cell: np.ndarray, k: int, res: int) -> list:
     return out
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
 def _hex_kring_udf(cell: pd.Series, k: pd.Series, res: pd.Series) -> pd.Series:
     if not len(cell):
         return pd.Series([], dtype=object)
@@ -419,12 +418,12 @@ def hex_kring(cell: Column, k: int, res: int) -> Column:
     ``res``) — explode + equi-join against an indexed table's hex column
     is the hexcell ring-expansion access path (the spatial analogue of
     the reference's Lucene index probe, JenaTextConfig.java:52-59)."""
-    return _hex_kring_udf(cell, F.lit(k), F.lit(res))
+    return F.pandas_udf(_hex_kring_udf, T.ArrayType(T.LongType()))(
+        cell, F.lit(k), F.lit(res))
 
 
 # ------------------------------------------------------------ Spark API
 
-@F.pandas_udf(T.LongType())
 def _hex_cellid_udf(lon: pd.Series, lat: pd.Series,
                     res: pd.Series) -> pd.Series:
     rs = int(res.iloc[0]) if len(res) else 9
@@ -434,7 +433,7 @@ def _hex_cellid_udf(lon: pd.Series, lat: pd.Series,
 def hex_cellid(lon: Column, lat: Column, res: int = 9) -> Column:
     """Column of aperture-7 hexcell ids at ``res`` (Arrow-batched numpy:
     the whole encode is ~40 vectorized kernel passes per batch)."""
-    return _hex_cellid_udf(lon, lat, F.lit(res))
+    return F.pandas_udf(_hex_cellid_udf, T.LongType())(lon, lat, F.lit(res))
 
 
 def hex_res(cell: Column) -> Column:

@@ -186,7 +186,6 @@ def np_s2_parent(ids: np.ndarray, level: int) -> np.ndarray:
     return ((u & ~(lsb - np.uint64(1))) | lsb).view(np.int64)
 
 
-@F.pandas_udf(T.LongType())
 def _s2_cellid_udf(lon: pd.Series, lat: pd.Series,
                    level: pd.Series) -> pd.Series:
     lv = int(level.iloc[0]) if len(level) else MAX_LEVEL
@@ -195,7 +194,7 @@ def _s2_cellid_udf(lon: pd.Series, lat: pd.Series,
 
 def s2_cellid(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
     """Column of true S2 cell ids at ``level`` (Arrow-batched)."""
-    return _s2_cellid_udf(lon, lat, F.lit(level))
+    return F.pandas_udf(_s2_cellid_udf, T.LongType())(lon, lat, F.lit(level))
 
 
 def s2_parent(cell: Column, level: int) -> Column:

@@ -95,11 +95,10 @@ def np_s2z_cell(lon: np.ndarray, lat: np.ndarray, level: int = 16) -> np.ndarray
     return (face << 58) | (_interleave_bits(i, j, level) << 5) | level
 
 
-@F.pandas_udf(T.LongType())
 def _s2z_cell_udf(lon: pd.Series, lat: pd.Series, level: pd.Series) -> pd.Series:
     lv = int(level.iloc[0]) if len(level) else 16
     return pd.Series(np_s2z_cell(lon.to_numpy(), lat.to_numpy(), lv))
 
 
 def s2z_cell(lon: Column, lat: Column, level: int = 16) -> Column:
-    return _s2z_cell_udf(lon, lat, F.lit(level))
+    return F.pandas_udf(_s2z_cell_udf, T.LongType())(lon, lat, F.lit(level))

@@ -21,7 +21,7 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -177,12 +177,15 @@ def build_jpeg_with_exif_gps(lat: float, lon: float,
     return _SOI + app1 + b"\xff\xd9"
 
 
-@F.pandas_udf(T.BinaryType())
-def exif_jpeg_bytes(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    """Fixture generator as a vectorized UDF: JPEG bytes carrying the given
-    GPS coordinates (deterministic; used to plant EXIF-only rows)."""
+def _exif_jpeg_bytes(lat: pd.Series, lon: pd.Series) -> pd.Series:
     return pd.Series([build_jpeg_with_exif_gps(float(a), float(b))
                       for a, b in zip(lat, lon)])
+
+
+def exif_jpeg_bytes(lat: Column | str, lon: Column | str) -> Column:
+    """Fixture generator as a vectorized UDF: JPEG bytes carrying the given
+    GPS coordinates (deterministic; used to plant EXIF-only rows)."""
+    return F.pandas_udf(_exif_jpeg_bytes, T.BinaryType())(lat, lon)
 
 
 # ---------------------------------------------------------------- Spark surface

@@ -32,7 +32,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -167,20 +167,21 @@ def pixel_blocks(df: DataFrame, block: int = 16) -> DataFrame:
     return df.select("image_id", "bytes").mapInPandas(gen, PIXEL_BLOCK_SCHEMA)
 
 
-@F.pandas_udf(T.BinaryType())
-def synth_image_bytes(seed: pd.Series, w: pd.Series, h: pd.Series,
-                      fmt: pd.Series) -> pd.Series:
-    """Vectorized fixture-side encoder (Arrow-batched)."""
+def _synth_image_bytes(seed: pd.Series, w: pd.Series, h: pd.Series,
+                       fmt: pd.Series) -> pd.Series:
     return pd.Series([
         encode_pixels(synth_pixels(int(s), int(ww), int(hh)), f)
         for s, ww, hh, f in zip(seed, w, h, fmt)
     ])
 
 
-@F.pandas_udf(T.LongType())
-def phash_of_bytes(b: pd.Series) -> pd.Series:
-    """Perceptual hash per payload; container formats this sandbox cannot
-    decode (real JPEG/PNG) yield NULL — dirty-data path, not an error."""
+def synth_image_bytes(seed: Column | str, w: Column | str, h: Column | str,
+                      fmt: Column | str) -> Column:
+    """Vectorized fixture-side encoder (Arrow-batched)."""
+    return F.pandas_udf(_synth_image_bytes, T.BinaryType())(seed, w, h, fmt)
+
+
+def _phash_of_bytes(b: pd.Series) -> pd.Series:
     out = []
     for x in b:
         try:
@@ -188,3 +189,9 @@ def phash_of_bytes(b: pd.Series) -> pd.Series:
         except (NotImplementedError, ValueError, struct.error):
             out.append(None)
     return pd.Series(out, dtype="object")
+
+
+def phash_of_bytes(b: Column | str) -> Column:
+    """Perceptual hash per payload; container formats this sandbox cannot
+    decode (real JPEG/PNG) yield NULL — dirty-data path, not an error."""
+    return F.pandas_udf(_phash_of_bytes, T.LongType())(b)

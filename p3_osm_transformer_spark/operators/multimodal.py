@@ -20,7 +20,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,13 +151,20 @@ def audio_features(df: DataFrame) -> DataFrame:
     return df.select("audio_id", "bytes").mapInPandas(gen, AUDIO_FEAT_SCHEMA)
 
 
-@F.pandas_udf(T.BinaryType())
-def synth_video_udf(seed: pd.Series, w: pd.Series, h: pd.Series,
-                    n_frames: pd.Series) -> pd.Series:
+def _synth_video(seed: pd.Series, w: pd.Series, h: pd.Series,
+                 n_frames: pd.Series) -> pd.Series:
     return pd.Series([synth_video_bytes(int(s), int(ww), int(hh), int(nf))
                       for s, ww, hh, nf in zip(seed, w, h, n_frames)])
 
 
-@F.pandas_udf(T.BinaryType())
-def synth_audio_udf(seed: pd.Series) -> pd.Series:
+def synth_video_udf(seed: Column | str, w: Column | str, h: Column | str,
+                    n_frames: Column | str) -> Column:
+    return F.pandas_udf(_synth_video, T.BinaryType())(seed, w, h, n_frames)
+
+
+def _synth_audio(seed: pd.Series) -> pd.Series:
     return pd.Series([synth_audio_bytes(int(s)) for s in seed])
+
+
+def synth_audio_udf(seed: Column | str) -> Column:
+    return F.pandas_udf(_synth_audio, T.BinaryType())(seed)

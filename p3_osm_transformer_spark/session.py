@@ -8,6 +8,10 @@ bench, driver contract) runs with the same scale-oriented defaults:
 - UTC session timezone (deterministic timestamp semantics vs the DuckDB oracle)
 - shuffle partitions sized to local cores (overridable for the 1000-executor
   deployment via spark-submit --conf)
+- a generated-class cache (``spark.sql.codegen.cache.maxEntries``) above
+  the engine's working set, so a query run again in the same JVM reuses
+  its compiled classes instead of recompiling (and re-JITting) them.  The
+  conf is static: the first session in a JVM fixes it.
 - on ``local[...]`` masters, the Python worker daemon of ``pyworker.py``,
   which spares each UDF task a re-read of every zip on the workers' import
   path (``worker_confs``).  Only local masters: the daemon is loaded from
@@ -39,6 +43,13 @@ _ENGINE_CONFS: dict[str, str] = {
     # (measured: 4 dedup_near calls → 4 live RDDs, 278MB).  A 2min
     # periodic System.gc() bounds that without measurable pause cost.
     "spark.cleaner.periodicGC.interval": "2min",
+    # Generated-class cache (static: the first session in a JVM sets it).
+    # Spark's default of 100 entries is below the engine's working set:
+    # one perfbench spatial_dedup_ann job compiles 97 entries and its
+    # whole process 124 (264 class files, ~0.57 MB of bytecode), so with
+    # 100 each repeat of the job recompiled 30-40 of them and the JIT
+    # compiled those again.  At 1000 a repeat compiles none.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
 }
