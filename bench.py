@@ -341,8 +341,7 @@ def main() -> None:
             (F.col("id") + 5_000_000).alias("query_id"),
             ann_vec.alias("embedding"))
         return _force(cosine_topk_lsh(qv, corpus, k=10, prefix_bits=None,
-                                      n_corpus=ANN_N, dim=64,
-                                      n_queries=200))
+                                      n_corpus=ANN_N, dim=64))
 
     total = round(sum(timings.values()), 3)
     spatial_rps = round(headline_input_rows / timings["spatial_enrich_xl"], 1) \

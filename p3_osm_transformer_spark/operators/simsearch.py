@@ -9,9 +9,12 @@ Two plans, one contract — (query_id, neighbor_id, cos_sim, rank):
 
 * ``cosine_topk_lsh``    — scale path: random-hyperplane LSH (sign
   sketches from deterministic per-dimension coefficients), candidates =
-  bucket-join on sketch prefix with multi-probe, exact re-rank of
-  candidates only.  Recall < 1.0 by construction (reported by
-  ``lsh_recall``); the standard ANN trade.
+  sketch-prefix buckets with multi-probe, exact re-rank of candidates
+  only.  Recall < 1.0 by construction (reported by ``lsh_recall``); the
+  standard ANN trade.  Two value-identical plans: a one-pass plan (the
+  collected queries probe a driver-side bucket map inside one
+  ``mapInArrow`` over the corpus scan) when the query side and its
+  estimated candidate set are small, else a shuffled bucket join.
 
 * ``cosine_topk_ivf``    — second scale path: IVF (k-means-lite coarse
   quantizer on a bounded deterministic sample) → corpus bucketed by
@@ -46,6 +49,15 @@ def with_unit_norm(df: DataFrame, vec_col: str = "embedding",
         vec_col, lambda x: x.cast("double") / n))
 
 
+def _topk(pairs: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
+    """Per-query top-k of scored (q_id, c_id, cos_sim) pairs: cosine
+    descending, ties by neighbor id, NULL cosines last."""
+    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
+    return (pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(q_id, c_id, F.round("cos_sim", 6).alias("cos_sim"), "rank"))
+
+
 def cosine_topk_brute(queries: DataFrame, corpus: DataFrame, k: int = 10,
                       q_id: str = "query_id", c_id: str = "neighbor_id") -> DataFrame:
     """Exact top-k; queries/corpus carry (id, embedding)."""
@@ -55,10 +67,7 @@ def cosine_topk_brute(queries: DataFrame, corpus: DataFrame, k: int = 10,
     pairs = (qv.crossJoin(cv)
              .filter(F.col(q_id) != F.col(c_id))
              .withColumn("cos_sim", sim))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, c_id, F.round("cos_sim", 6).alias("cos_sim"), "rank"))
+    return _topk(pairs, k, q_id, c_id)
 
 
 # deterministic pseudo-random hyperplane coefficient for (plane p, dim d):
@@ -76,6 +85,23 @@ def _coef_py(p: int, d: int) -> float:
     import hashlib
     h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:8], 16)
     return (h % 20001 - 10000) / 10000.0
+
+
+def _coef_matrix(dim: int, n_planes: int) -> np.ndarray:
+    """(dim × n_planes) float64 matrix of ``_coef_py`` values."""
+    return np.array([[_coef_py(p, d) for p in range(n_planes)]
+                     for d in range(dim)], dtype=np.float64)
+
+
+def _sign_bits(m: np.ndarray, coefs: np.ndarray) -> np.ndarray:
+    """Sketch bits of the rows of the (n × dim) float64 block ``m``:
+    projections accumulated in d-ascending order, one rounding per step,
+    so each is bit-identical to the Catalyst fold.  NaN >= 0 is False,
+    the fold's '0'."""
+    acc = np.zeros((m.shape[0], coefs.shape[1]), dtype=np.float64)
+    for d in range(coefs.shape[0]):
+        acc += m[:, d:d + 1] * coefs[d][None, :]
+    return acc >= 0
 
 
 def sketch_bits(vec_col: str, n_planes: int = 16,
@@ -122,10 +148,8 @@ def sketch_bits(vec_col: str, n_planes: int = 16,
             bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
         return F.concat(*bits)
 
+    coefs = _coef_matrix(dim, n_planes)
     if impl == "arrow":
-        coefs = np.array([[_coef_py(p, d) for p in range(n_planes)]
-                          for d in range(dim)], dtype=np.float64)
-
         @F.pandas_udf(T.StringType())
         def _sk(emb: pd.Series) -> pd.Series:
             vals = emb.values
@@ -141,20 +165,15 @@ def sketch_bits(vec_col: str, n_planes: int = 16,
             if good_idx:
                 m = np.stack([np.asarray(vals[i], dtype=np.float64)
                               for i in good_idx])
-                acc = np.zeros((m.shape[0], n_planes), dtype=np.float64)
-                for d in range(dim):             # d-ascending: bit-exact
-                    acc += m[:, d:d + 1] * coefs[d][None, :]
-                bits = np.where(acc >= 0, "1", "0")   # NaN>=0 False → '0'
+                bits = np.where(_sign_bits(m, coefs), "1", "0")
                 for row_i, brow in zip(good_idx, bits):
                     out[row_i] = "".join(brow)
             return pd.Series(out)
 
         return _sk(F.col(vec_col))
 
-    coefs_by_dim = [[_coef_py(p, d) for p in range(n_planes)]
-                    for d in range(dim)]
     contribs = F.zip_with(
-        F.col(vec_col), F.lit(coefs_by_dim),
+        F.col(vec_col), F.lit(coefs.tolist()),
         lambda v, crow: F.transform(crow, lambda c: v.cast("double") * c))
     proj = F.aggregate(
         contribs, F.array_repeat(F.lit(0.0), n_planes),
@@ -181,47 +200,61 @@ def _cosine_arrow(dim: int):
     semantics (parity-tested): NULL on either side, or length mismatch
     between the two vectors (zip_with pads with null → null fold) → NULL;
     equal non-``dim`` lengths still compute exactly (left-fold twin).
+    A NaN cosine (NaN or NULL elements) comes out NULL, as Arrow converts
+    it.
     """
     @F.pandas_udf(T.DoubleType())
     def _cos(qe: pd.Series, ce: pd.Series) -> pd.Series:
-        import math
         qv, cv = qe.values, ce.values
-        out = np.empty(len(qv), dtype=object)
+        out = np.full(len(qv), np.nan)
         fast = []
         for i in range(len(qv)):
             a, b = qv[i], cv[i]
             if a is None or b is None or len(a) != len(b):
-                out[i] = None
-            elif len(a) == dim:
+                continue
+            if len(a) == dim:
                 fast.append(i)
-            else:                      # equal ragged length: exact fold
-                dot = qn2 = cn2 = 0.0
-                for x, y in zip(a, b):
-                    dot += float(x) * float(y)
-                    qn2 += float(x) * float(x)
-                    cn2 += float(y) * float(y)
-                denom = math.sqrt(qn2) * math.sqrt(cn2)
-                # Spark non-ANSI x/0.0 → NULL (NaN denom still divides)
-                out[i] = None if denom == 0.0 else dot / denom
+            else:
+                out[i] = _fold_cos(a, b)
         if fast:
             qm = np.stack([np.asarray(qv[i], dtype=np.float64) for i in fast])
             cm = np.stack([np.asarray(cv[i], dtype=np.float64) for i in fast])
-            dot = np.zeros(len(fast), dtype=np.float64)
-            qn2 = np.zeros(len(fast), dtype=np.float64)
-            cn2 = np.zeros(len(fast), dtype=np.float64)
-            for d in range(dim):       # d-ascending: bit-exact vs the fold
-                dot += qm[:, d] * cm[:, d]
-                qn2 += qm[:, d] * qm[:, d]
-                cn2 += cm[:, d] * cm[:, d]
-            denom = np.sqrt(qn2) * np.sqrt(cn2)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / denom
-            for j, i in enumerate(fast):
-                # Spark non-ANSI x/0.0 → NULL (NaN denom still divides)
-                out[i] = None if denom[j] == 0.0 else float(cos[j])
+            out[fast] = _cos_of(_row_dot(qm, cm), _row_dot(qm, qm),
+                                _row_dot(cm, cm))
         return pd.Series(out)
 
     return _cos
+
+
+def _row_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise Σ_d a[:, d]·b[:, d] accumulated in d-ascending order (acc =
+    acc + x, one rounding per step — numpy mul-then-add equals the JVM's
+    fold), so it is bit-identical to ``_dot`` and to ``_norm``'s square."""
+    acc = np.zeros(a.shape[0], dtype=np.float64)
+    for d in range(a.shape[1]):
+        acc += a[:, d] * b[:, d]
+    return acc
+
+
+def _cos_of(dot: np.ndarray, qn2: np.ndarray, cn2: np.ndarray) -> np.ndarray:
+    """dot / (sqrt(qn2) * sqrt(cn2)); NaN (to be NULL) where the
+    denominator is 0, as Spark's x/0.0 (a NaN denominator still divides)."""
+    denom = np.sqrt(qn2) * np.sqrt(cn2)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, np.nan, dot / denom)
+
+
+def _fold_cos(a, b) -> float:
+    """Cosine of two equal-length vectors of a non-``dim`` length by the
+    Catalyst left fold, one pair at a time; NaN where NULL."""
+    import math
+    dot = qn2 = cn2 = 0.0
+    for x, y in zip(a, b):
+        dot += float(x) * float(y)
+        qn2 += float(x) * float(x)
+        cn2 += float(y) * float(y)
+    denom = math.sqrt(qn2) * math.sqrt(cn2)
+    return math.nan if denom == 0.0 else dot / denom
 
 
 def _bucket_long(bits_col: F.Column) -> F.Column:
@@ -252,6 +285,107 @@ def pick_prefix_bits(n_corpus: int, target_bucket: int = 256) -> int:
                       if n_corpus > target_bucket else 4))
 
 
+def _flat_block(emb, dim: int):
+    """An Arrow list column as numpy with no per-row Python objects:
+    ``(lens, offs, vals, fast, block)`` — row lengths (-1 where NULL), the
+    list offsets into the float64 values (NULL elements are NaN), the
+    indices of the rows of length ``dim`` and their (len(fast) × dim)
+    block."""
+    import pyarrow.compute as pc
+    lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
+    offs = emb.offsets.to_numpy()
+    vals = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    fast = np.flatnonzero(lens == dim)
+    return lens, offs, vals, fast, vals[offs[fast, None] + np.arange(dim)]
+
+
+# The one-pass plan is taken when the collected query side and its
+# estimated candidate pairs stay under this many bytes: 8 MB covers the
+# largest input it was measured to win on (bench.py ann_lsh, 200 queries
+# × 200k corpus, ≈7 MB of estimated candidates); no larger input was
+# measured.
+_ONE_PASS_BYTES = 8 << 20
+# Candidate pairs gathered and scored at a time inside the pass: a slice
+# copies 2 × _PAIR_SLICE × dim doubles (32 MB at dim 64), however many
+# queries probe a crowded bucket.
+_PAIR_SLICE = 1 << 15
+
+
+def _one_pass_pairs(qt, q_field: T.StructField, corpus: DataFrame,
+                    c_id: str, prefix_bits: int, dim: int) -> DataFrame:
+    """(q_id, c_id, _bucket, cos_sim) for every query of the collected
+    Arrow table ``qt`` (id, embedding) and every corpus member of a bucket
+    it probes, in one ``mapInArrow`` over the corpus.
+
+    The queries' probe buckets form a sorted (bucket, query index) map
+    shipped with the function.  Each corpus batch is sketched on its first
+    prefix_bits planes, looked up in the map with ``searchsorted`` and its
+    matched pairs scored ``_PAIR_SLICE`` at a time.  Values equal the
+    shuffled arrow plan's: the same sketch (``_sign_bits``), the same bit
+    string → long mapping (first bit most significant), the same
+    d-ascending dot and norms (``_row_dot``, ``_cos_of``), the same left
+    fold for equal ragged lengths, NULL for a NULL query or a length
+    mismatch.  A shorter corpus row's all-'0' sketch is bucket 0; a NULL
+    or longer row's empty sketch has no bucket.  A NULL or longer query's
+    empty sketch probes only bucket 1: its prefix "" converts to NULL and
+    every flip of it is the string "1"."""
+    import pyarrow as pa
+    coefs = _coef_matrix(dim, prefix_bits)
+    w = 1 << np.arange(prefix_bits - 1, -1, -1, dtype=np.int64)
+    slice_pairs = _PAIR_SLICE
+
+    def buckets(lens, fast, block):
+        b = np.where((lens >= 0) & (lens < dim), 0, -1)
+        b[fast] = _sign_bits(block, coefs) @ w
+        return b
+
+    qids = qt.column(0).combine_chunks()
+    q_lens, q_offs, q_vals, q_fast, q_block = _flat_block(
+        qt.column(1).combine_chunks(), dim)
+    q_own = buckets(q_lens, q_fast, q_block)
+    full, empty = np.flatnonzero(q_own >= 0), np.flatnonzero(q_own < 0)
+    probe_b = np.concatenate([q_own[full, None], q_own[full, None] ^ w], axis=1)
+    probe_b = np.concatenate([probe_b.ravel(), np.ones(len(empty), np.int64)])
+    probe_q = np.concatenate([np.repeat(full, prefix_bits + 1), empty])
+    order = np.argsort(probe_b, kind="stable")
+    probe_b, probe_q = probe_b[order], probe_q[order]
+    q_pos = np.cumsum(q_lens == dim) - 1
+    q_n2 = _row_dot(q_block, q_block)
+
+    def score(batches):
+        for rb in batches:
+            lens, offs, vals, fast, block = _flat_block(rb.column(1), dim)
+            own = buckets(lens, fast, block)
+            pos, n2 = np.cumsum(lens == dim) - 1, _row_dot(block, block)
+            rows = np.flatnonzero(own >= 0)
+            lo = np.searchsorted(probe_b, own[rows], "left")
+            cnt = np.searchsorted(probe_b, own[rows], "right") - lo
+            end = np.cumsum(cnt)          # row j's pairs: [end-cnt, end)[j]
+            for s in range(0, int(end[-1]) if len(end) else 0, slice_pairs):
+                p = np.arange(s, min(s + slice_pairs, int(end[-1])))
+                j = np.searchsorted(end, p, "right")
+                ri, qi = rows[j], probe_q[lo[j] + p - end[j] + cnt[j]]
+                ql, cl = q_lens[qi], lens[ri]
+                cos = np.full(len(p), np.nan)
+                both = (ql == dim) & (cl == dim)
+                if both.any():
+                    qb, cb = q_pos[qi[both]], pos[ri[both]]
+                    cos[both] = _cos_of(_row_dot(q_block[qb], block[cb]),
+                                        q_n2[qb], n2[cb])
+                for i in np.flatnonzero((ql == cl) & (cl != dim)):
+                    a, b = q_offs[qi[i]], offs[ri[i]]
+                    cos[i] = _fold_cos(q_vals[a:a + ql[i]], vals[b:b + cl[i]])
+                yield pa.RecordBatch.from_arrays(
+                    [qids.take(qi), rb.column(0).take(ri), pa.array(own[ri]),
+                     pa.array(cos, from_pandas=True)],
+                    names=[q_field.name, c_id, "_bucket", "cos_sim"])
+
+    schema = T.StructType([q_field, corpus.schema[c_id],
+                           T.StructField("_bucket", T.LongType()),
+                           T.StructField("cos_sim", T.DoubleType())])
+    return corpus.select(c_id, "embedding").mapInArrow(score, schema)
+
+
 def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
                     q_id: str = "query_id", c_id: str = "neighbor_id",
                     n_planes: int = 12, prefix_bits: int | None = None,
@@ -260,7 +394,7 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
                     dim: int | None = None,
                     n_queries: int | None = None,
                     impl: str = "arrow") -> DataFrame:
-    """ANN: sketch-prefix bucket join (multi-probe: exact prefix plus the
+    """ANN: sketch-prefix buckets (multi-probe: exact prefix plus the
     prefix_bits single-bit-flip neighbors) → exact cosine re-rank.
 
     ``prefix_bits=None`` (the default, and the only sane setting at scale)
@@ -281,10 +415,29 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     native spec twin).  Ignored (catalyst fallback) when ``dim`` is
     unknown.
 
-    ``n_queries`` (optional, e.g. from Catalog.row_count manifest
-    metadata like ``n_corpus``) lets the planner make a STATIC broadcast
-    decision for the candidate-pair side of the embedding fetch — see
-    the join-order comment below.  Output is identical either way.
+    Two plans, row-identical when the ids of each side are unique
+    (parity-tested):
+
+    * one pass (``_one_pass_pairs``) — taken when ``dim`` is known,
+      ``impl="arrow"`` and the query side is small.  One job collects at
+      most cap + 1 queries, where cap keeps both the query vectors (dim
+      doubles each) and the estimated candidate pairs ((prefix_bits+1)
+      probes × bucket occupancy per query, 16 B each) under
+      ``_ONE_PASS_BYTES``.  Occupancy is min(max_bucket, ⌈n_corpus /
+      2**prefix_bits⌉) when n_corpus is known, 256 when it is not, so a
+      small prefix_bits over a large corpus is not sized at 256 rows per
+      bucket.  One pass over the corpus scan then buckets, probes and
+      scores; no corpus exchange, join or per-pair UDF.  The pass emits
+      every member of a probed bucket, so a ``dense_rank`` over the
+      corpus id per bucket reproduces the ``max_bucket`` cap; it counts
+      distinct ids, hence the uniqueness condition.
+    * shuffled — otherwise (more than cap queries, ``impl="catalyst"`` or
+      unknown ``dim``): the corpus's (id, bucket) pairs are capped by a
+      window per bucket, joined to the queries' probes and de-duplicated,
+      and both embeddings are joined back for the re-rank.
+
+    ``n_queries`` is accepted from callers that know it and not used: the
+    plan is chosen from the query rows themselves.
     """
     if prefix_bits is None:
         if n_corpus is None:
@@ -294,16 +447,29 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
         n_planes = prefix_bits
     if dim is None:
         dim = _embedding_dim(corpus)
+    if dim is not None and impl == "arrow" and prefix_bits > 0:  # 0 bits: no bucket
+        occupancy = (min(max_bucket, -(-n_corpus // (1 << prefix_bits)))
+                     if n_corpus is not None else 256)
+        cap = _ONE_PASS_BYTES // max((prefix_bits + 1) * occupancy * 16,
+                                     dim * 8)
+        qt = queries.select(q_id, "embedding").limit(cap + 1).toArrow()
+        if qt.num_rows <= cap:
+            pairs = _one_pass_pairs(qt, queries.schema[q_id], corpus, c_id,
+                                    prefix_bits, dim)
+            wb = Window.partitionBy("_bucket").orderBy(c_id)
+            cand = (pairs.withColumn("_bpos", F.dense_rank().over(wb))
+                    .filter(F.col("_bpos") <= max_bucket)
+                    .filter(F.col(q_id) != F.col(c_id)))
+            return _topk(cand, k, q_id, c_id)
     sk_impl = impl if dim is not None else "catalyst"
     # Candidate generation runs on (id, bucket) pairs ONLY — the multi-probe
     # duplicate-dedup distinct() and the hot-bucket window shuffle ids, not
     # embeddings.  The r2 form carried both 64-dim vectors through the
     # distinct: ~430k candidate rows × 2×64 doubles ≈ 0.4 GB of shuffle for
     # a 200-query/200k-corpus run, measured as the stage's whole cost once
-    # the sketch went literal-matrix.  Embeddings re-join AFTER the dedup,
-    # with per-ROW norms precomputed on each side (the per-pair form
-    # recomputed each norm once per candidate — |pairs|/|rows| ≈ 2000×
-    # redundant work for the query side).
+    # the sketch went literal-matrix.  Embeddings re-join AFTER the dedup;
+    # the Catalyst re-rank precomputes per-ROW norms on each side (the
+    # per-pair form recomputed each norm once per candidate).
     qs = queries.select(F.col(q_id),
                         sketch_bits("embedding", n_planes, dim,
                                     impl=sk_impl).alias("_sk"))
@@ -328,39 +494,12 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
                 .select(q_id, c_id).distinct())
     # Join ORDER matters at scale: fetch corpus embeddings FIRST, against
     # the id-only candidate pairs, THEN attach query embeddings.  The
-    # candidate side is (q,c) longs — a few MB even for hundreds of
-    # thousands of pairs — while the r5.3 order ((cand ⋈ qe) ⋈ ce)
-    # attached query embeddings first, which pushed BOTH join inputs
-    # over the broadcast threshold and hashed them by c_id: measured at
-    # ANN_N=1.5M/32 cores (per-task event-log metrics), 653 MB of corpus
-    # embeddings + 238 MB of candidate+query rows written and 892 MB read
-    # back through the exchange — ~1.5 GB of memory-bus traffic on a host
-    # whose stream ceiling is the 8→32 scaling limiter.
-    #
-    # Order alone is not enough: AQE materializes BOTH children of a
-    # shuffled join before it can demote it to broadcast, so the 653 MB
-    # corpus-side exchange still gets WRITTEN even when the candidate
-    # side turns out tiny.  Killing the write needs a STATIC broadcast
-    # decision, and that needs a size estimate before any action runs:
-    # ``n_queries`` (caller-supplied, e.g. from Catalog.row_count
-    # manifest metadata — the same pattern as ``n_corpus``) bounds the
-    # expected candidate set at n_queries × (prefix_bits+1) probes ×
-    # bucket occupancy, and when that estimate is comfortably
-    # broadcastable the candidate pairs get an explicit broadcast hint:
-    # the corpus embeddings then stream MAP-SIDE off the scan with no
-    # exchange at all.  With the estimate large or n_queries unknown,
-    # the plan stays shuffled and AQE keeps the runtime re-plan — same
-    # worst case, strictly better common case.  Occupancy is
-    # min(max_bucket, ⌈n_corpus / 2**prefix_bits⌉) when n_corpus is known,
-    # ~target_bucket only when it is not: AQE never demotes an explicit
-    # broadcast, so a caller's small prefix_bits over a large corpus must
-    # not be sized at 256 rows per bucket.
-    occupancy = (min(max_bucket, -(-n_corpus // (1 << prefix_bits)))
-                 if n_corpus is not None else 256)
-    est_cand_rows = (n_queries * (prefix_bits + 1) * occupancy
-                     if n_queries is not None else None)
-    if est_cand_rows is not None and est_cand_rows * 16 < (64 << 20):
-        cand_ids = F.broadcast(cand_ids)
+    # r5.3 order ((cand ⋈ qe) ⋈ ce) pushed BOTH join inputs over the
+    # broadcast threshold and hashed them by c_id: at ANN_N=1.5M/32 cores,
+    # 653 MB of corpus embeddings + 238 MB of candidate+query rows went
+    # through the exchange.  Even in this order AQE demotes the corpus
+    # join to a broadcast only after both children's exchanges are
+    # written; the one-pass plan has no such exchange.
     if dim is not None and impl == "arrow":
         # fused Arrow cosine per candidate pair — no corpus-wide norm pass
         # (a 64-dim norm per pair is ~nothing vectorized; the Catalyst
@@ -378,10 +517,7 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
         sim = _dot("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
         cand = (cand_ids.join(ce, c_id).join(qe, q_id)
                 .withColumn("cos_sim", sim))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, c_id, F.round("cos_sim", 6).alias("cos_sim"), "rank"))
+    return _topk(cand, k, q_id, c_id)
 
 
 def lsh_recall(exact: DataFrame, approx: DataFrame,
@@ -477,10 +613,7 @@ def cosine_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int = 10,
     cand = (qs.join(cs, "_bucket")
             .filter(F.col(q_id) != F.col(c_id))
             .withColumn("cos_sim", sim))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, c_id, F.round("cos_sim", 6).alias("cos_sim"), "rank"))
+    return _topk(cand, k, q_id, c_id)
 
 
 def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,

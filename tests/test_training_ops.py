@@ -264,13 +264,9 @@ def test_sketch_bits_arrow_equals_catalyst_incl_edge_rows(spark):
     assert not bad, bad[:5]
 
 
-def test_cosine_topk_lsh_arrow_equals_catalyst_incl_edge_rows(spark):
-    """The r5.3 Arrow re-rank (fused per-pair cosine pandas_udf) + long
-    bucket keys must leave cosine_topk_lsh's OUTPUT identical to the
-    Catalyst HOF spec twin — same (query_id, neighbor_id, cos_sim, rank)
-    rows, cos_sim bit-exact before the round-6 — including the HOF edge
-    semantics: NULL embedding or per-pair length mismatch → NULL cos_sim
-    (ranked last), equal ragged lengths still compute exactly."""
+def _lsh_edge_fixture(spark):
+    """400 random 24-d corpus vectors plus ragged, longer, NULL and empty
+    corpus rows; 12 random queries plus a ragged and a NULL query."""
     rng = np.random.RandomState(17)
     rows = [(i, [float(x) for x in rng.randn(24)]) for i in range(400)]
     # ragged/null corpus rows: shorter, longer, null, empty
@@ -279,15 +275,108 @@ def test_cosine_topk_lsh_arrow_equals_catalyst_incl_edge_rows(spark):
     qrows = [(5000 + i, [float(x) for x in rng.randn(24)]) for i in range(12)]
     qrows += [(5900, [1.0] * 10), (5901, None)]   # ragged/null queries too
     qv = spark.createDataFrame(qrows, "query_id long, embedding array<double>")
-    cv = emb.selectExpr("vec_id as neighbor_id", "embedding")
-    a = simsearch.cosine_topk_lsh(qv, cv, k=7, prefix_bits=4, dim=24,
-                                  impl="arrow")
+    return qv, emb.selectExpr("vec_id as neighbor_id", "embedding")
+
+
+def _one_pass(df) -> bool:
+    return "MapInArrow" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _shuffled(monkeypatch, *args, **kw):
+    """cosine_topk_lsh on its shuffled plan: with a zero one-pass budget no
+    query side is small enough for the one pass."""
+    with monkeypatch.context() as m:
+        m.setattr(simsearch, "_ONE_PASS_BYTES", 0)
+        out = simsearch.cosine_topk_lsh(*args, **kw)
+    assert not _one_pass(out)
+    return out
+
+
+def test_cosine_topk_lsh_arrow_equals_catalyst_incl_edge_rows(spark,
+                                                               monkeypatch):
+    """The r5.3 Arrow re-rank (fused per-pair cosine pandas_udf) + long
+    bucket keys must leave cosine_topk_lsh's OUTPUT identical to the
+    Catalyst HOF spec twin — same (query_id, neighbor_id, cos_sim, rank)
+    rows, cos_sim bit-exact before the round-6 — including the HOF edge
+    semantics: NULL embedding or per-pair length mismatch → NULL cos_sim
+    (ranked last), equal ragged lengths still compute exactly."""
+    qv, cv = _lsh_edge_fixture(spark)
+    a = _shuffled(monkeypatch, qv, cv, k=7, prefix_bits=4, dim=24,
+                  impl="arrow")
     b = simsearch.cosine_topk_lsh(qv, cv, k=7, prefix_bits=4, dim=24,
                                   impl="catalyst")
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     fa = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in a.collect()}
     fb = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in b.collect()}
     assert fa == fb and len(fa) > 40
+
+
+def test_cosine_topk_lsh_one_pass_equals_shuffled_incl_edge_rows(
+        spark, monkeypatch):
+    """A small query side takes the one-pass plan (probe and score inside
+    one mapInArrow over the corpus), which returns the shuffled plan's
+    rows on the edge fixture: the shorter corpus rows' bucket 0, no bucket
+    for NULL or longer rows, the NULL query's empty-sketch probe, NULL
+    cosines on length mismatch and the exact fold for equal ragged
+    lengths."""
+    qv, cv = _lsh_edge_fixture(spark)
+    kw = dict(k=7, prefix_bits=4, dim=24)
+    a = simsearch.cosine_topk_lsh(qv, cv, **kw)
+    b = _shuffled(monkeypatch, qv, cv, **kw)
+    assert _one_pass(a)
+    ra, rb = sorted(map(tuple, a.collect())), sorted(map(tuple, b.collect()))
+    assert ra == rb and len(ra) > 40
+    assert {r[0] for r in ra} >= {5900, 5901}
+
+
+def test_cosine_topk_lsh_one_pass_cap_equals_shuffled(spark, monkeypatch):
+    """A max_bucket that truncates (4 buckets of ~100 rows, capped at 5)
+    keeps the one-pass plan's dense_rank cap equal to the shuffled plan's
+    row_number cap."""
+    qv, cv = _lsh_edge_fixture(spark)
+    kw = dict(k=3, prefix_bits=2, dim=24)
+    uncapped = sorted(map(tuple, simsearch.cosine_topk_lsh(
+        qv, cv, **kw).collect()))
+    a = sorted(map(tuple, simsearch.cosine_topk_lsh(
+        qv, cv, max_bucket=5, **kw).collect()))
+    b = sorted(map(tuple, _shuffled(
+        monkeypatch, qv, cv, max_bucket=5, **kw).collect()))
+    assert a == b and a != uncapped
+
+
+def test_cosine_topk_lsh_one_pass_crowded_bucket_in_slices(spark,
+                                                           monkeypatch):
+    """300 near-copies of one vector crowd a bucket that every query
+    probes; the higher the id, the nearer the copy.  Scored 7 pairs at a
+    time over Arrow batches of 64 rows, the one pass still returns the
+    shuffled plan's rows with a cap that truncates the bucket across
+    batches: every query's top 5 are the nearest of the 50 lowest ids."""
+    rng = np.random.RandomState(5)
+    hot, u = rng.randn(8), rng.randn(8)
+    u /= np.linalg.norm(u)
+    rows = [(i, (hot + 0.05 * (300 - i) / 300 * u).tolist())
+            for i in range(300)]
+    rows += [(300 + i, rng.randn(8).tolist()) for i in range(100)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cv = emb.selectExpr("vec_id as neighbor_id", "embedding")
+    qv = spark.createDataFrame(
+        [(5000 + i, ((1 + i / 10) * hot).tolist()) for i in range(20)],
+        "query_id long, embedding array<double>")
+    monkeypatch.setattr(simsearch, "_PAIR_SLICE", 7)
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(batch)
+    spark.conf.set(batch, "64")
+    try:
+        kw = dict(k=5, prefix_bits=3, dim=8, max_bucket=50)
+        a = simsearch.cosine_topk_lsh(qv, cv, **kw)
+        assert _one_pass(a)
+        got = sorted(map(tuple, a.collect()))
+        want = sorted(map(tuple, _shuffled(
+            monkeypatch, qv, cv, **kw).collect()))
+    finally:
+        spark.conf.set(batch, saved)
+    assert got == want and len(got) == 100
+    assert {r[1] for r in got} == set(range(45, 50))
 
 
 def test_ann_lsh_auto_bits_planted_recall(spark):
@@ -307,21 +396,23 @@ def test_ann_lsh_auto_bits_planted_recall(spark):
 
 
 def test_ann_broadcast_hint_sized_by_bucket_occupancy(spark):
-    """The static broadcast of the candidate pairs is sized from the
-    corpus's bucket occupancy: a caller's small prefix_bits over a large
-    n_corpus (625k rows per bucket, capped at max_bucket) is too big to
-    broadcast, while the corpus-derived bits keep ~n/2**bits per bucket."""
-    emb = spark.createDataFrame([(i, [float(i), 1.0, 0.5, 2.0]) for i in range(8)],
-                                "vec_id long, embedding array<double>")
+    """The one-pass plan's query budget is sized from the corpus's bucket
+    occupancy: a caller's small prefix_bits over a large n_corpus (625k
+    rows per bucket, capped at max_bucket) leaves room for 10 queries, so
+    16 stay on the shuffled plan, while the corpus-derived bits keep
+    ~n/2**bits per bucket and the 16 take the one pass.  Sized at 256 rows
+    per bucket, both would take it."""
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(16)],
+        "vec_id long, embedding array<double>")
     q = emb.selectExpr("vec_id as query_id", "embedding")
     c = emb.selectExpr("vec_id as neighbor_id", "embedding")
 
-    def hinted(**kw):
-        out = simsearch.cosine_topk_lsh(q, c, k=1, n_queries=1000, dim=4, **kw)
-        return "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+    def one_pass(**kw):
+        return _one_pass(simsearch.cosine_topk_lsh(q, c, k=1, dim=4, **kw))
 
-    assert not hinted(prefix_bits=4, n_corpus=10_000_000)
-    assert hinted(prefix_bits=None, n_corpus=30_000)
+    assert not one_pass(prefix_bits=4, n_corpus=10_000_000)
+    assert one_pass(prefix_bits=None, n_corpus=30_000)
 
 
 def test_doc_signatures_arrow_equals_catalyst(spark):

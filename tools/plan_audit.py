@@ -241,29 +241,30 @@ def main() -> None:
     # Python appears ONLY as vectorized ArrowEvalPython pandas_udf nodes
     # (the sign sketch + the per-pair cosine) — never row-at-a-time
     # BatchEvalPython, never MapInPandas, never a cartesian/BNLJ.
+    # All 500 vectors as queries: more than the one-pass plan takes here
+    # (292 at prefix_bits=6), so this is the shuffled plan.
     from p3_osm_transformer_spark.operators.simsearch import cosine_topk_lsh
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     aq = emb.filter("vec_id < 50").selectExpr("vec_id as query_id", "embedding")
     ac = emb.selectExpr("vec_id as neighbor_id", "embedding")
-    audit("ann lsh bucket join + exact re-rank",
-          cosine_topk_lsh(aq, ac, k=5, prefix_bits=6),
+    audit("ann lsh bucket join + exact re-rank (large query side)",
+          cosine_topk_lsh(emb.selectExpr("vec_id as query_id", "embedding"),
+                          ac, k=5, prefix_bits=6),
           must=["Window", "ArrowEvalPython"],
           must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
                     "BatchEvalPython", "MapInPandas"])
 
-    # 9b. ANN LSH with caller-supplied n_queries stats (r5.4): the
-    # candidate-pair side of the embedding fetch is broadcast
-    # STATICALLY, so corpus embeddings stream map-side off the scan —
-    # the plan must contain NO exchange hash-partitioned on the corpus
-    # id (the r5.3 shuffled form wrote 653 MB of embeddings through
-    # exactly that exchange at ANN_N=1.5M; AQE cannot skip the write
-    # because it materializes both join children before re-planning).
-    audit("ann lsh static broadcast embedding fetch (n_queries stats)",
-          cosine_topk_lsh(aq, ac, k=5, prefix_bits=6, n_queries=50),
-          must=["BroadcastHashJoin", "Window", "ArrowEvalPython"],
-          must_not=["hashpartitioning(neighbor_id",
-                    "CartesianProduct", "BroadcastNestedLoopJoin",
-                    "BatchEvalPython", "MapInPandas"])
+    # 9b. ANN LSH with a small query side (50): the one-pass plan.  The
+    # queries' probe map travels with one MapInArrow over the corpus
+    # scan, which buckets, probes and scores there; only the scored
+    # pairs reach the cap and top-k windows.  No exchange on the corpus
+    # id, no join of any kind (the shuffled form fetched both embeddings
+    # through two), no per-row or pandas Python.
+    audit("ann lsh one pass over the corpus (small query side)",
+          cosine_topk_lsh(aq, ac, k=5, prefix_bits=6),
+          must=["MapInArrow", "Window"],
+          must_not=["hashpartitioning(neighbor_id", "Join",
+                    "CartesianProduct", "BatchEvalPython", "MapInPandas"])
 
     # write PLANS.md digest
     out = ["# PLANS.md — audited physical plans",
