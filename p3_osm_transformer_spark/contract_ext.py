@@ -591,11 +591,9 @@ def q43(spark, sf_dir):
     return b.unionByName(u)
 
 
-# (the former q44_unit_norm_dot — with_unit_norm + zip_with dot — was
-# UNREGISTERED in round 4: the unit-norm precompute is on the hot path of
-# q31/q46/q49 (all value-checked against brute SQL twins) and pytest pins
-# its float-summation order (test_training_ops.py); the freed slot goes to
-# the end-to-end flagship contract query q52_enrich_e2e.)
+# (the former q44_unit_norm_dot, a unit-norm dot product, was unregistered
+# in round 4; its slot went to the end-to-end flagship contract query
+# q52_enrich_e2e.)
 
 
 # 64-bit simhash banded near-dup pairs.  The fingerprint is md5-derived

@@ -25,9 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_SQL_SPARK = r"filter(split(lower({c}), '[^a-z0-9]+'), t -> t != '')"
-
-
 def street_tokens(c: F.Column) -> F.Column:
     """Case-folded alphanumeric tokens — the engine's 'Lucene analyzer'."""
     return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda t: t != "")

@@ -35,8 +35,6 @@ from p3_osm_transformer_spark.functions.geocell import (
 )
 
 
-OUT_COLS = ["point_id", "addr_id", "dist_m", "knn_rank"]
-
 
 def _rank_topk(cand: DataFrame, point_id: str, k: int,
                carry: tuple[str, ...] = ()) -> DataFrame:

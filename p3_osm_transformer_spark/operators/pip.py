@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from p3_osm_transformer_spark.functions.geocell import cell_id
+from p3_osm_transformer_spark.functions.geocell import cell_id, cell_xy
 
 PIP_COVER_G = 9  # coarse covering resolution: 512×512 grid, ~0.7° cells
 
@@ -63,29 +63,16 @@ def polygon_cover_cells(polygons: DataFrame, g: int = PIP_COVER_G) -> DataFrame:
     a bbox from WKT would also be column math via regexp + aggregate).
     """
     n = 2**g
-    cx0, _ = _xy(F.col("bbox_lon0"), F.col("bbox_lat0"), g)
-    _, cy0 = _xy(F.col("bbox_lon0"), F.col("bbox_lat0"), g)
-    cx1, cy1 = _xy(F.col("bbox_lon1"), F.col("bbox_lat1"), g)
+    cx0, cy0 = cell_xy(F.col("bbox_lon0"), F.col("bbox_lat0"), g)
+    cx1, cy1 = cell_xy(F.col("bbox_lon1"), F.col("bbox_lat1"), g)
     cells = F.flatten(F.transform(
         F.sequence(cy0, cy1),
         lambda y: F.transform(F.sequence(cx0, cx1), lambda x: y * F.lit(n) + x)))
     return polygons.withColumn("cover_cell", F.explode(cells))
 
 
-def _xy(lon, lat, g):
-    from p3_osm_transformer_spark.functions.geocell import cell_xy
-    return cell_xy(lon, lat, g)
-
-
-_PAIR_SCHEMA_SUFFIX = [
-    T.StructField("polygon_id", T.LongType()),
-    T.StructField("inside", T.BooleanType()),
-]
-
-
 def pip_join(points: DataFrame, polygons: DataFrame,
-             point_id: str = "point_id", g: int = PIP_COVER_G,
-             broadcast_polygons: bool = True) -> DataFrame:
+             point_id: str = "point_id", g: int = PIP_COVER_G) -> DataFrame:
     """points(point_id, lon, lat) ⋈ polygons(polygon_id, wkt, bbox_*) →
     (point_id, polygon_id, …polygon attrs) for containing polygons.
 
@@ -94,11 +81,9 @@ def pip_join(points: DataFrame, polygons: DataFrame,
     ring is parsed once per polygon per batch, vectorized over its points).
     """
     pts = points.withColumn("cover_cell", cell_id(F.col("lon"), F.col("lat"), g))
-    polys = polygon_cover_cells(polygons, g).select(
+    polys = F.broadcast(polygon_cover_cells(polygons, g).select(
         "polygon_id", "wkt", "cover_cell",
-        "bbox_lon0", "bbox_lat0", "bbox_lon1", "bbox_lat1")
-    if broadcast_polygons:
-        polys = F.broadcast(polys)
+        "bbox_lon0", "bbox_lat0", "bbox_lon1", "bbox_lat1"))
     cand = (pts.join(polys, "cover_cell")
             .filter((F.col("lon") >= F.col("bbox_lon0")) & (F.col("lon") <= F.col("bbox_lon1"))
                     & (F.col("lat") >= F.col("bbox_lat0")) & (F.col("lat") <= F.col("bbox_lat1"))))

@@ -11,10 +11,13 @@ Two plans, one contract — (query_id, neighbor_id, cos_sim, rank):
   sketches from deterministic per-dimension coefficients), candidates =
   sketch-prefix buckets with multi-probe, exact re-rank of candidates
   only.  Recall < 1.0 by construction (reported by ``lsh_recall``); the
-  standard ANN trade.  Two value-identical plans: a one-pass plan (the
-  collected queries probe a driver-side bucket map inside one
-  ``mapInArrow`` over the corpus scan) when the query side and its
-  estimated candidate set are small, else a shuffled bucket join.
+  standard ANN trade.  Two value-identical plans over one numpy LSH
+  kernel (bucket, multi-probe and pair cosine over flat Arrow blocks): a
+  one-pass plan (the collected queries probe a driver-side bucket map
+  inside one ``mapInArrow`` over the corpus scan) when the query side and
+  its estimated candidate set are small, else a shuffled bucket join
+  through the kernel's scalar Arrow UDFs.  ``cosine_near_dup_pairs``
+  self-joins through the same UDFs.
 
 * ``cosine_topk_ivf``    — second scale path: IVF (k-means-lite coarse
   quantizer on a bounded deterministic sample) → corpus bucketed by
@@ -24,8 +27,12 @@ Two plans, one contract — (query_id, neighbor_id, cos_sim, rank):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,14 +46,6 @@ def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
 def _norm(a: str | F.Column) -> F.Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x.cast("double") * x.cast("double")),
                               F.lit(0.0), lambda acc, x: acc + x))
-
-
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding",
-                   out_col: str = "unit_vec") -> DataFrame:
-    """Pre-normalize once at write time — cosine becomes a plain dot."""
-    n = _norm(vec_col)
-    return df.withColumn(out_col, F.transform(
-        vec_col, lambda x: x.cast("double") / n))
 
 
 def _topk(pairs: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
@@ -90,7 +89,8 @@ def _coef_py(p: int, d: int) -> float:
 def _coef_matrix(dim: int, n_planes: int) -> np.ndarray:
     """(dim × n_planes) float64 matrix of ``_coef_py`` values."""
     return np.array([[_coef_py(p, d) for p in range(n_planes)]
-                     for d in range(dim)], dtype=np.float64)
+                     for d in range(dim)],
+                    dtype=np.float64).reshape(dim, n_planes)
 
 
 def _sign_bits(m: np.ndarray, coefs: np.ndarray) -> np.ndarray:
@@ -105,34 +105,19 @@ def _sign_bits(m: np.ndarray, coefs: np.ndarray) -> np.ndarray:
 
 
 def sketch_bits(vec_col: str, n_planes: int = 16,
-                dim: int | None = None, impl: str = "arrow") -> F.Column:
-    """Sign sketch: bit_p = 1 iff Σ_d coef(p,d)·v_d ≥ 0 (bit string).
+                dim: int | None = None) -> F.Column:
+    """Sign sketch: bit_p = 1 iff Σ_d coef(p,d)·v_d ≥ 0 (bit string) — the
+    Catalyst spec of the LSH kernel (``_buckets``), which the tests compare
+    it against; no plan computes it.
 
-    ``dim`` (the fixed embedding length) selects the production form; the
-    ``dim=None`` fallback derives every coefficient per row with md5 —
-    n_planes separate aggregate passes, each hashing per (plane, dim):
-    measured ~770 interpreted md5 calls per 64-dim row, the whole cost
-    of the r2 ann_lsh stage (VERDICT r2 #3).  Keep ragged corpora on
-    the fallback path.
+    ``dim`` (the fixed embedding length) selects the literal-matrix form:
+    the driver-precomputed coefficient matrix folded in d-ascending order.
+    ``dim=None`` derives every coefficient per row with md5 — n_planes
+    separate aggregate passes, each hashing per (plane, dim); the two forms
+    are bit-identical (tested).
 
-    With ``dim`` known, ``impl`` picks between two value-identical forms
-    (same driver-precomputed coefficient matrix, same d-ascending float
-    summation order — parity-tested):
-
-    * ``"arrow"`` (default, the scale path): one vectorized pandas_udf —
-      a (batch × dim) float64 block accumulated against the (dim ×
-      n_planes) matrix in d-ascending order.  Chosen in r5 after the
-      same /proc/stat profiling that caught dedup_near: the Catalyst
-      literal-matrix form is an interpreted zip_with→transform→aggregate
-      chain that boxes ~2·dim·n_planes Doubles per row and scaled like
-      the dedup signature pass (CPU inflation with core count, wall
-      flat).
-    * ``"catalyst"`` — the literal-matrix HOF chain: the engine-native
-      spec form and the parity-test twin.
-
-    Rows whose vector length differs from ``dim`` keep the Catalyst
-    form's edge semantics in both impls (parity-tested): shorter → all-
-    '0' bits (null elements through the fold), longer or NULL → "" (null
+    Edge rows (the literal-matrix form): a shorter vector → all-'0' bits
+    (null elements through the fold), a longer or NULL vector → "" (null
     arrays collapse under concat_ws).
     """
     if dim is None:
@@ -148,32 +133,8 @@ def sketch_bits(vec_col: str, n_planes: int = 16,
             bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
         return F.concat(*bits)
 
-    coefs = _coef_matrix(dim, n_planes)
-    if impl == "arrow":
-        @F.pandas_udf(T.StringType())
-        def _sk(emb: pd.Series) -> pd.Series:
-            vals = emb.values
-            out = np.empty(len(vals), dtype=object)
-            good_idx = []
-            for i, v in enumerate(vals):
-                if v is None or len(v) > dim:
-                    out[i] = ""                  # null fold → concat_ws("")
-                elif len(v) < dim:
-                    out[i] = "0" * n_planes      # null elems → all-'0'
-                else:
-                    good_idx.append(i)
-            if good_idx:
-                m = np.stack([np.asarray(vals[i], dtype=np.float64)
-                              for i in good_idx])
-                bits = np.where(_sign_bits(m, coefs), "1", "0")
-                for row_i, brow in zip(good_idx, bits):
-                    out[row_i] = "".join(brow)
-            return pd.Series(out)
-
-        return _sk(F.col(vec_col))
-
     contribs = F.zip_with(
-        F.col(vec_col), F.lit(coefs.tolist()),
+        F.col(vec_col), F.lit(_coef_matrix(dim, n_planes).tolist()),
         lambda v, crow: F.transform(crow, lambda c: v.cast("double") * c))
     proj = F.aggregate(
         contribs, F.array_repeat(F.lit(0.0), n_planes),
@@ -182,48 +143,82 @@ def sketch_bits(vec_col: str, n_planes: int = 16,
         proj, lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0"))))
 
 
-def _cosine_arrow(dim: int):
-    """Fused per-pair cosine for the re-rank join — the r5.3 scale path.
+# ------------------------------------------------------------ LSH kernel
+# Every LSH plan below buckets, probes and scores with these numpy
+# functions over flat Arrow blocks (no per-row Python objects): the
+# one-pass plan inside its mapInArrow, the shuffled plans through the
+# three scalar Arrow UDFs of ``_lsh_udfs``.
 
-    The Catalyst per-pair form evaluates three interpreted HOF folds per
-    candidate (dot) plus one per input ROW (norms — including one pass
-    over the ENTIRE corpus side before the join): /proc/stat profiling at
-    ANN_N=1.5M attributed ~50 of the stage's 145 CPU-seconds at 32 cores
-    to this block, with 2.3× CPU inflation vs 8 cores — the same
-    boxed-Double allocation pressure that capped the dedup signature pass
-    (operators/dedup.py _doc_signatures_arrow).
+class _Flat(NamedTuple):
+    """An Arrow list column as numpy (``_flat_block``)."""
+    lens: np.ndarray    # row lengths, -1 where NULL
+    offs: np.ndarray    # list offsets into vals
+    vals: np.ndarray    # float64 values, NULL elements NaN
+    pos: np.ndarray     # row → its row of block (rows of length dim)
+    block: np.ndarray   # the rows of length dim, (n × dim)
+    n2: np.ndarray      # squared norm of each block row
 
-    Bit-identical to the Catalyst form by construction: dot and both
-    squared norms accumulate in d-ascending order (acc = acc + x, one
-    rounding per step — numpy mul-then-add equals the JVM's), then
-    cos = dot / (sqrt(qn2) * sqrt(cn2)).  Edge rows keep the HOF edge
-    semantics (parity-tested): NULL on either side, or length mismatch
-    between the two vectors (zip_with pads with null → null fold) → NULL;
-    equal non-``dim`` lengths still compute exactly (left-fold twin).
-    A NaN cosine (NaN or NULL elements) comes out NULL, as Arrow converts
-    it.
-    """
-    @F.pandas_udf(T.DoubleType())
-    def _cos(qe: pd.Series, ce: pd.Series) -> pd.Series:
-        qv, cv = qe.values, ce.values
-        out = np.full(len(qv), np.nan)
-        fast = []
-        for i in range(len(qv)):
-            a, b = qv[i], cv[i]
-            if a is None or b is None or len(a) != len(b):
-                continue
-            if len(a) == dim:
-                fast.append(i)
-            else:
-                out[i] = _fold_cos(a, b)
-        if fast:
-            qm = np.stack([np.asarray(qv[i], dtype=np.float64) for i in fast])
-            cm = np.stack([np.asarray(cv[i], dtype=np.float64) for i in fast])
-            out[fast] = _cos_of(_row_dot(qm, cm), _row_dot(qm, qm),
-                                _row_dot(cm, cm))
-        return pd.Series(out)
 
-    return _cos
+def _flat_block(emb: pa.Array, dim: int) -> _Flat:
+    """``emb`` (a list array) as a ``_Flat`` of fixed length ``dim``."""
+    lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
+    offs = emb.offsets.to_numpy()
+    vals = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    full = lens == dim
+    block = vals[offs[np.flatnonzero(full), None] + np.arange(dim)]
+    return _Flat(lens, offs, vals, np.cumsum(full) - 1, block,
+                 _row_dot(block, block))
+
+
+def _buckets(f: _Flat, coefs: np.ndarray) -> np.ndarray:
+    """Each row's bucket: the first prefix_bits bits (``coefs``'s columns)
+    of its sign sketch as a long, first bit most significant — the
+    Catalyst ``sketch_bits`` prefix read as binary.  A shorter row's
+    all-'0' sketch is bucket 0.  A NULL or longer row's empty sketch, and
+    every row when prefix_bits is 0, has no bucket: -1."""
+    dim, bits = coefs.shape
+    b = np.full(len(f.lens), -1, dtype=np.int64)
+    if bits:
+        b[(f.lens >= 0) & (f.lens < dim)] = 0
+        b[f.lens == dim] = _sign_bits(f.block, coefs) @ (
+            1 << np.arange(bits - 1, -1, -1, dtype=np.int64))
+    return b
+
+
+def _probes(own: np.ndarray, prefix_bits: int,
+            empty: int = 1) -> tuple[np.ndarray, np.ndarray]:
+    """Multi-probe: (probe bucket, row) pairs in row order.  A row probes
+    its own bucket and its prefix_bits single-bit flips; a row with no
+    bucket probes only ``empty`` (1 for a top-k query: its sketch prefix
+    "" was NULL as a number and every flip of it the string "1")."""
+    w = 1 << np.arange(prefix_bits - 1, -1, -1, dtype=np.int64)
+    m = np.concatenate([own[:, None], own[:, None] ^ w], axis=1)
+    keep = np.repeat(own[:, None] >= 0, prefix_bits + 1, axis=1)
+    m[:, 0], keep[:, 0] = np.where(own >= 0, own, empty), True
+    row, col = np.nonzero(keep)
+    return m[row, col], row
+
+
+def _pair_cos(q: _Flat, c: _Flat, qi: np.ndarray,
+              ci: np.ndarray) -> np.ndarray:
+    """Cosine of each pair (row qi[i] of q, row ci[i] of c), bit-identical
+    to the Catalyst ``_dot / (_norm * _norm)``: two rows of length dim
+    take the d-ascending dot and norms, two rows of another equal length
+    the left fold.  NaN (to be NULL) for a NULL row, a length mismatch, a
+    zero norm (where the Catalyst form raises DIVIDE_BY_ZERO under ANSI
+    mode) or NaN elements."""
+    dim = q.block.shape[1]
+    ql, cl = q.lens[qi], c.lens[ci]
+    cos = np.full(len(qi), np.nan)
+    both = (ql == dim) & (cl == dim)
+    if both.any():
+        qb, cb = q.pos[qi[both]], c.pos[ci[both]]
+        cos[both] = _cos_of(_row_dot(q.block[qb], c.block[cb]),
+                            q.n2[qb], c.n2[cb])
+    for i in np.flatnonzero((ql == cl) & (cl != dim) & (cl >= 0)):
+        a, b = q.offs[qi[i]], c.offs[ci[i]]
+        cos[i] = _fold_cos(q.vals[a:a + ql[i]], c.vals[b:b + cl[i]])
+    return cos
 
 
 def _row_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -238,7 +233,7 @@ def _row_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 def _cos_of(dot: np.ndarray, qn2: np.ndarray, cn2: np.ndarray) -> np.ndarray:
     """dot / (sqrt(qn2) * sqrt(cn2)); NaN (to be NULL) where the
-    denominator is 0, as Spark's x/0.0 (a NaN denominator still divides)."""
+    denominator is 0 (a NaN denominator still divides)."""
     denom = np.sqrt(qn2) * np.sqrt(cn2)
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where(denom == 0.0, np.nan, dot / denom)
@@ -257,20 +252,39 @@ def _fold_cos(a, b) -> float:
     return math.nan if denom == 0.0 else dot / denom
 
 
-def _bucket_long(bits_col: F.Column) -> F.Column:
-    """Bit-string bucket → long join/shuffle key (prefix_bits ≤ 24 < 63 so
-    the mapping is bijective): hashing/comparing 8-byte longs through the
-    window sort, bucket join and distinct beats 13-char strings — the
-    candidate phase showed 2.2× CPU inflation at 32 cores on the string
-    form (/proc/stat profiling)."""
-    return F.conv(bits_col, 2, 10).cast("long")
+def _lsh_udfs(dim: int, prefix_bits: int, empty_probe: int = 1):
+    """The kernel as three scalar Arrow UDFs, built per call: a vector's
+    bucket (long, -1 for none), its probe buckets (array<long>, see
+    ``_probes``) and a vector pair's cosine (double, NaN as NULL)."""
+    coefs = _coef_matrix(dim, prefix_bits)
+
+    def _sk(emb: pa.Array) -> pa.Array:
+        return pa.array(_buckets(_flat_block(emb, dim), coefs))
+
+    def _sk_probes(emb: pa.Array) -> pa.Array:
+        own = _buckets(_flat_block(emb, dim), coefs)
+        b, row = _probes(own, prefix_bits, empty_probe)
+        offs = np.searchsorted(row, np.arange(len(own) + 1)).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offs), pa.array(b))
+
+    def _cos(qe: pa.Array, ce: pa.Array) -> pa.Array:
+        i = np.arange(len(qe))
+        return pa.array(_pair_cos(_flat_block(qe, dim), _flat_block(ce, dim),
+                                  i, i), from_pandas=True)
+
+    # Nondeterministic projections are pushdown barriers: without them
+    # Catalyst copies a UDF into the join's inferred not-null filter or
+    # the threshold filter below it, and each copy runs it again.
+    return tuple(F.arrow_udf(f, t).asNondeterministic() for f, t in (
+        (_sk, T.LongType()), (_sk_probes, T.ArrayType(T.LongType())),
+        (_cos, T.DoubleType())))
 
 
-def _embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int | None:
-    """Fixed embedding length, detected from one row (column-pruned scan).
-    None for an empty frame — callers fall back to the per-row sketch."""
+def _embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
+    """Fixed embedding length, read from one row (column-pruned scan); 0
+    for an empty frame, which has no row of any length to bucket."""
     row = df.select(F.size(vec_col).alias("n")).head(1)
-    return int(row[0]["n"]) if row else None
+    return int(row[0]["n"]) if row else 0
 
 
 def pick_prefix_bits(n_corpus: int, target_bucket: int = 256) -> int:
@@ -285,20 +299,6 @@ def pick_prefix_bits(n_corpus: int, target_bucket: int = 256) -> int:
                       if n_corpus > target_bucket else 4))
 
 
-def _flat_block(emb, dim: int):
-    """An Arrow list column as numpy with no per-row Python objects:
-    ``(lens, offs, vals, fast, block)`` — row lengths (-1 where NULL), the
-    list offsets into the float64 values (NULL elements are NaN), the
-    indices of the rows of length ``dim`` and their (len(fast) × dim)
-    block."""
-    import pyarrow.compute as pc
-    lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
-    offs = emb.offsets.to_numpy()
-    vals = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
-    fast = np.flatnonzero(lens == dim)
-    return lens, offs, vals, fast, vals[offs[fast, None] + np.arange(dim)]
-
-
 # The one-pass plan is taken when the collected query side and its
 # estimated candidate pairs stay under this many bytes: 8 MB covers the
 # largest input it was measured to win on (bench.py ann_lsh, 200 queries
@@ -311,52 +311,29 @@ _ONE_PASS_BYTES = 8 << 20
 _PAIR_SLICE = 1 << 15
 
 
-def _one_pass_pairs(qt, q_field: T.StructField, corpus: DataFrame,
+def _one_pass_pairs(qt: pa.Table, q_field: T.StructField, corpus: DataFrame,
                     c_id: str, prefix_bits: int, dim: int) -> DataFrame:
     """(q_id, c_id, _bucket, cos_sim) for every query of the collected
     Arrow table ``qt`` (id, embedding) and every corpus member of a bucket
     it probes, in one ``mapInArrow`` over the corpus.
 
     The queries' probe buckets form a sorted (bucket, query index) map
-    shipped with the function.  Each corpus batch is sketched on its first
-    prefix_bits planes, looked up in the map with ``searchsorted`` and its
-    matched pairs scored ``_PAIR_SLICE`` at a time.  Values equal the
-    shuffled arrow plan's: the same sketch (``_sign_bits``), the same bit
-    string → long mapping (first bit most significant), the same
-    d-ascending dot and norms (``_row_dot``, ``_cos_of``), the same left
-    fold for equal ragged lengths, NULL for a NULL query or a length
-    mismatch.  A shorter corpus row's all-'0' sketch is bucket 0; a NULL
-    or longer row's empty sketch has no bucket.  A NULL or longer query's
-    empty sketch probes only bucket 1: its prefix "" converts to NULL and
-    every flip of it is the string "1"."""
-    import pyarrow as pa
+    shipped with the function.  Each corpus batch is bucketed, looked up
+    in the map with ``searchsorted`` and its matched pairs scored
+    ``_PAIR_SLICE`` at a time — the kernel the shuffled plan runs through
+    its UDFs, so the values are the same."""
     coefs = _coef_matrix(dim, prefix_bits)
-    w = 1 << np.arange(prefix_bits - 1, -1, -1, dtype=np.int64)
     slice_pairs = _PAIR_SLICE
-
-    def buckets(lens, fast, block):
-        b = np.where((lens >= 0) & (lens < dim), 0, -1)
-        b[fast] = _sign_bits(block, coefs) @ w
-        return b
-
     qids = qt.column(0).combine_chunks()
-    q_lens, q_offs, q_vals, q_fast, q_block = _flat_block(
-        qt.column(1).combine_chunks(), dim)
-    q_own = buckets(q_lens, q_fast, q_block)
-    full, empty = np.flatnonzero(q_own >= 0), np.flatnonzero(q_own < 0)
-    probe_b = np.concatenate([q_own[full, None], q_own[full, None] ^ w], axis=1)
-    probe_b = np.concatenate([probe_b.ravel(), np.ones(len(empty), np.int64)])
-    probe_q = np.concatenate([np.repeat(full, prefix_bits + 1), empty])
+    q = _flat_block(qt.column(1).combine_chunks(), dim)
+    probe_b, probe_q = _probes(_buckets(q, coefs), prefix_bits)
     order = np.argsort(probe_b, kind="stable")
     probe_b, probe_q = probe_b[order], probe_q[order]
-    q_pos = np.cumsum(q_lens == dim) - 1
-    q_n2 = _row_dot(q_block, q_block)
 
     def score(batches):
         for rb in batches:
-            lens, offs, vals, fast, block = _flat_block(rb.column(1), dim)
-            own = buckets(lens, fast, block)
-            pos, n2 = np.cumsum(lens == dim) - 1, _row_dot(block, block)
+            c = _flat_block(rb.column(1), dim)
+            own = _buckets(c, coefs)
             rows = np.flatnonzero(own >= 0)
             lo = np.searchsorted(probe_b, own[rows], "left")
             cnt = np.searchsorted(probe_b, own[rows], "right") - lo
@@ -365,19 +342,9 @@ def _one_pass_pairs(qt, q_field: T.StructField, corpus: DataFrame,
                 p = np.arange(s, min(s + slice_pairs, int(end[-1])))
                 j = np.searchsorted(end, p, "right")
                 ri, qi = rows[j], probe_q[lo[j] + p - end[j] + cnt[j]]
-                ql, cl = q_lens[qi], lens[ri]
-                cos = np.full(len(p), np.nan)
-                both = (ql == dim) & (cl == dim)
-                if both.any():
-                    qb, cb = q_pos[qi[both]], pos[ri[both]]
-                    cos[both] = _cos_of(_row_dot(q_block[qb], block[cb]),
-                                        q_n2[qb], n2[cb])
-                for i in np.flatnonzero((ql == cl) & (cl != dim)):
-                    a, b = q_offs[qi[i]], offs[ri[i]]
-                    cos[i] = _fold_cos(q_vals[a:a + ql[i]], vals[b:b + cl[i]])
                 yield pa.RecordBatch.from_arrays(
                     [qids.take(qi), rb.column(0).take(ri), pa.array(own[ri]),
-                     pa.array(cos, from_pandas=True)],
+                     pa.array(_pair_cos(q, c, qi, ri), from_pandas=True)],
                     names=[q_field.name, c_id, "_bucket", "cos_sim"])
 
     schema = T.StructType([q_field, corpus.schema[c_id],
@@ -388,12 +355,11 @@ def _one_pass_pairs(qt, q_field: T.StructField, corpus: DataFrame,
 
 def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
                     q_id: str = "query_id", c_id: str = "neighbor_id",
-                    n_planes: int = 12, prefix_bits: int | None = None,
+                    prefix_bits: int | None = None,
                     max_bucket: int = 10_000,
                     n_corpus: int | None = None,
                     dim: int | None = None,
-                    n_queries: int | None = None,
-                    impl: str = "arrow") -> DataFrame:
+                    n_queries: int | None = None) -> DataFrame:
     """ANN: sketch-prefix buckets (multi-probe: exact prefix plus the
     prefix_bits single-bit-flip neighbors) → exact cosine re-rank.
 
@@ -401,29 +367,22 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     derives the bucket count from the corpus size via ``pick_prefix_bits``;
     pass ``n_corpus`` (e.g. from Catalog.row_count manifest metadata) to
     skip the fallback count() scan.  ``dim`` is the fixed embedding length
-    for the literal-coefficient sketch (detected from one row when None —
-    see sketch_bits).  ``max_bucket`` truncates degenerate hot buckets to
-    their first ``max_bucket`` members by id (deterministic): truncation —
-    not whole-bucket drop — because for *search* a dropped bucket would
-    zero recall for every query hashing into it, while a truncated bucket
+    (read from one corpus row when None); rows of another length keep the
+    Catalyst forms' edge semantics (see ``_buckets`` and ``_pair_cos``).
+    ``max_bucket`` truncates degenerate hot buckets to their first
+    ``max_bucket`` members by id (deterministic): truncation — not
+    whole-bucket drop — because for *search* a dropped bucket would zero
+    recall for every query hashing into it, while a truncated bucket
     degrades gracefully.
 
-    ``impl`` selects between two value-identical physical forms of the
-    sketch and the cosine re-rank (parity-tested, see sketch_bits and
-    _cosine_arrow): ``"arrow"`` (default — vectorized pandas_udfs, the
-    scale path) and ``"catalyst"`` (interpreted HOF folds, the engine-
-    native spec twin).  Ignored (catalyst fallback) when ``dim`` is
-    unknown.
+    Two plans over the same LSH kernel, row-identical when the ids of
+    each side are unique (tested):
 
-    Two plans, row-identical when the ids of each side are unique
-    (parity-tested):
-
-    * one pass (``_one_pass_pairs``) — taken when ``dim`` is known,
-      ``impl="arrow"`` and the query side is small.  One job collects at
-      most cap + 1 queries, where cap keeps both the query vectors (dim
-      doubles each) and the estimated candidate pairs ((prefix_bits+1)
-      probes × bucket occupancy per query, 16 B each) under
-      ``_ONE_PASS_BYTES``.  Occupancy is min(max_bucket, ⌈n_corpus /
+    * one pass (``_one_pass_pairs``) — taken when the query side is small.
+      One job collects at most cap + 1 queries, where cap keeps both the
+      query vectors (dim doubles each) and the estimated candidate pairs
+      ((prefix_bits+1) probes × bucket occupancy per query, 16 B each)
+      under ``_ONE_PASS_BYTES``.  Occupancy is min(max_bucket, ⌈n_corpus /
       2**prefix_bits⌉) when n_corpus is known, 256 when it is not, so a
       small prefix_bits over a large corpus is not sized at 256 rows per
       bucket.  One pass over the corpus scan then buckets, probes and
@@ -431,10 +390,10 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
       every member of a probed bucket, so a ``dense_rank`` over the
       corpus id per bucket reproduces the ``max_bucket`` cap; it counts
       distinct ids, hence the uniqueness condition.
-    * shuffled — otherwise (more than cap queries, ``impl="catalyst"`` or
-      unknown ``dim``): the corpus's (id, bucket) pairs are capped by a
-      window per bucket, joined to the queries' probes and de-duplicated,
-      and both embeddings are joined back for the re-rank.
+    * shuffled — otherwise: the corpus's (id, bucket) pairs (``_sk``)
+      are capped by a window per bucket, joined to the queries' exploded
+      probes (``_sk_probes``) and de-duplicated, and both embeddings are
+      joined back for the per-pair cosine (``_cos``).
 
     ``n_queries`` is accepted from callers that know it and not used: the
     plan is chosen from the query rows themselves.
@@ -443,11 +402,9 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
         if n_corpus is None:
             n_corpus = corpus.count()
         prefix_bits = pick_prefix_bits(n_corpus)
-    if n_planes < prefix_bits:
-        n_planes = prefix_bits
     if dim is None:
         dim = _embedding_dim(corpus)
-    if dim is not None and impl == "arrow" and prefix_bits > 0:  # 0 bits: no bucket
+    if dim:  # 0: an empty corpus, whose queries are not worth collecting
         occupancy = (min(max_bucket, -(-n_corpus // (1 << prefix_bits)))
                      if n_corpus is not None else 256)
         cap = _ONE_PASS_BYTES // max((prefix_bits + 1) * occupancy * 16,
@@ -461,34 +418,16 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
                     .filter(F.col("_bpos") <= max_bucket)
                     .filter(F.col(q_id) != F.col(c_id)))
             return _topk(cand, k, q_id, c_id)
-    sk_impl = impl if dim is not None else "catalyst"
+    bucket, probes, cos = _lsh_udfs(dim, prefix_bits)
     # Candidate generation runs on (id, bucket) pairs ONLY — the multi-probe
     # duplicate-dedup distinct() and the hot-bucket window shuffle ids, not
-    # embeddings.  The r2 form carried both 64-dim vectors through the
-    # distinct: ~430k candidate rows × 2×64 doubles ≈ 0.4 GB of shuffle for
-    # a 200-query/200k-corpus run, measured as the stage's whole cost once
-    # the sketch went literal-matrix.  Embeddings re-join AFTER the dedup;
-    # the Catalyst re-rank precomputes per-ROW norms on each side (the
-    # per-pair form recomputed each norm once per candidate).
-    qs = queries.select(F.col(q_id),
-                        sketch_bits("embedding", n_planes, dim,
-                                    impl=sk_impl).alias("_sk"))
-    cs = corpus.select(F.col(c_id), _bucket_long(
-        F.substring(sketch_bits("embedding", n_planes, dim, impl=sk_impl),
-                    1, prefix_bits)).alias("_bucket"))
+    # embeddings, which re-join after the dedup.
+    cs = corpus.select(F.col(c_id), bucket("embedding").alias("_bucket"))
     wb = Window.partitionBy("_bucket").orderBy(c_id)
     cs = (cs.withColumn("_bpos", F.row_number().over(wb))
           .filter(F.col("_bpos") <= max_bucket).drop("_bpos"))
-    # multi-probe: query probes its own prefix + all 1-bit flips of it
-    probes = F.array(*(
-        [F.substring("_sk", 1, prefix_bits)]
-        + [F.concat(F.substring("_sk", 1, i),
-                    F.when(F.substring("_sk", i + 1, 1) == "1", "0").otherwise("1"),
-                    F.substring("_sk", i + 2, prefix_bits - i - 1))
-           for i in range(prefix_bits)]))
-    qp = (qs.select(F.col(q_id),
-                    F.explode(F.array_distinct(probes)).alias("_bs"))
-          .select(F.col(q_id), _bucket_long(F.col("_bs")).alias("_bucket")))
+    qp = queries.select(F.col(q_id),
+                        F.explode(probes("embedding")).alias("_bucket"))
     cand_ids = (qp.join(cs, "_bucket")
                 .filter(F.col(q_id) != F.col(c_id))
                 .select(q_id, c_id).distinct())
@@ -500,23 +439,10 @@ def cosine_topk_lsh(queries: DataFrame, corpus: DataFrame, k: int = 10,
     # through the exchange.  Even in this order AQE demotes the corpus
     # join to a broadcast only after both children's exchanges are
     # written; the one-pass plan has no such exchange.
-    if dim is not None and impl == "arrow":
-        # fused Arrow cosine per candidate pair — no corpus-wide norm pass
-        # (a 64-dim norm per pair is ~nothing vectorized; the Catalyst
-        # form's per-row norms existed to avoid re-evaluating the
-        # INTERPRETED fold per pair)
-        qe = queries.select(F.col(q_id), F.col("embedding").alias("_qe"))
-        ce = corpus.select(F.col(c_id), F.col("embedding").alias("_ce"))
-        cand = (cand_ids.join(ce, c_id).join(qe, q_id)
-                .withColumn("cos_sim", _cosine_arrow(dim)("_qe", "_ce")))
-    else:
-        qe = queries.select(F.col(q_id), F.col("embedding").alias("_qe"),
-                            _norm("embedding").alias("_qn"))
-        ce = corpus.select(F.col(c_id), F.col("embedding").alias("_ce"),
-                           _norm("embedding").alias("_cn"))
-        sim = _dot("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
-        cand = (cand_ids.join(ce, c_id).join(qe, q_id)
-                .withColumn("cos_sim", sim))
+    qe = queries.select(F.col(q_id), F.col("embedding").alias("_qe"))
+    ce = corpus.select(F.col(c_id), F.col("embedding").alias("_ce"))
+    cand = (cand_ids.join(ce, c_id).join(qe, q_id)
+            .withColumn("cos_sim", cos("_qe", "_ce")))
     return _topk(cand, k, q_id, c_id)
 
 
@@ -618,7 +544,7 @@ def cosine_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
 def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
                           id_col: str = "vec_id",
-                          n_planes: int = 12, prefix_bits: int | None = None,
+                          prefix_bits: int | None = None,
                           max_bucket: int = 10_000,
                           n_corpus: int | None = None,
                           dim: int | None = None) -> DataFrame:
@@ -633,6 +559,8 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
     (``pick_prefix_bits``); ``max_bucket`` drops degenerate hot buckets
     whole (dedup semantics, same trade as ``dedup_near``'s: the
     dropped content is near-identical and exact dedup collapses it).
+    Rows with no bucket (NULL or longer than ``dim``) share one bucket of
+    their own, so two equal-length longer rows still pair.
 
     ``cosine_near_dup_brute`` is the oracle twin (exact, O(n²)).
     ``n_corpus``/``dim``: same catalog-metadata / fixed-length seams as
@@ -640,35 +568,23 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
     if prefix_bits is None:
         prefix_bits = pick_prefix_bits(
             n_corpus if n_corpus is not None else vectors.count())
-    if n_planes < prefix_bits:
-        n_planes = prefix_bits
     if dim is None:
         dim = _embedding_dim(vectors)
-    v = vectors.select(F.col(id_col), F.col("embedding"),
-                       sketch_bits("embedding", n_planes, dim).alias("_sk"))
-    probes = F.array(*(
-        [F.substring("_sk", 1, prefix_bits)]
-        + [F.concat(F.substring("_sk", 1, i),
-                    F.when(F.substring("_sk", i + 1, 1) == "1", "0").otherwise("1"),
-                    F.substring("_sk", i + 2, prefix_bits - i - 1))
-           for i in range(prefix_bits)]))
-    # no distinct needed: the b side carries its ONE exact-prefix bucket
-    # and the a side's probe set is array_distinct'ed, so each (a, b) pair
-    # joins at most once — the r2 distinct() shuffled both embeddings per
-    # pair for nothing.  Norms per row, not per pair (see cosine_topk_lsh).
-    a = (v.withColumn("_bucket", F.explode(F.array_distinct(probes)))
-         .select(F.col(id_col).alias("id_a"), F.col("embedding").alias("_ea"),
-                 _norm("embedding").alias("_na"), "_bucket"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("embedding").alias("_eb"),
-                 _norm("embedding").alias("_nb"),
-                 F.substring("_sk", 1, prefix_bits).alias("_bucket"))
+    bucket, probes, cos = _lsh_udfs(dim, prefix_bits, empty_probe=-1)
+    # no distinct needed: the b side carries its ONE bucket and the a
+    # side's probes are distinct, so each (a, b) pair joins at most once.
+    a = vectors.select(F.col(id_col).alias("id_a"),
+                       F.col("embedding").alias("_ea"),
+                       F.explode(probes("embedding")).alias("_bucket"))
+    b = vectors.select(F.col(id_col).alias("id_b"),
+                       F.col("embedding").alias("_eb"),
+                       bucket("embedding").alias("_bucket"))
     sizes = b.groupBy("_bucket").agg(F.count("*").alias("_bn"))
     b = b.join(sizes.filter(F.col("_bn") <= max_bucket).select("_bucket"),
                "_bucket")
-    sim = _dot("_ea", "_eb") / (F.col("_na") * F.col("_nb"))
     return (a.join(b, "_bucket")
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cos_sim", F.round(sim, 6))
+            .withColumn("cos_sim", F.round(cos("_ea", "_eb"), 6))
             .filter(F.col("cos_sim") >= threshold)
             .select("id_a", "id_b", "cos_sim"))
 

@@ -8,11 +8,11 @@ mechanisms, composable with any cell-keyed operator:
    (groupBy + count is map-side-partial, cheap), thresholded at
    ``factor ×`` the mean.  This is the A-ext aggregate from SURVEY.md §2.
 
-2. ``salted_repartition`` — explicit mitigation where the built-in AQE
+2. ``salted_agg`` — explicit mitigation where the built-in AQE
    skew-join split (enabled in session.py) can't see the problem, e.g.
    a cell-keyed groupBy: append a salt in [0, n_salts) derived from a
-   stable row key, repartition on (cell, salt), aggregate partially per
-   salt, then merge.  ``salted_agg`` wraps the classic two-phase pattern.
+   stable row key (``with_salt``), aggregate partially per (cell, salt),
+   then merge per cell — the classic two-phase pattern.
 
 AQE note: joins get runtime skew splitting for free
 (spark.sql.adaptive.skewJoin.enabled, session.py); these helpers matter
@@ -41,12 +41,6 @@ def with_salt(df: DataFrame, key_col: str, n_salts: int = 16,
     """Deterministic salt from a stable row key (never rand() — resumable
     stages must be replay-identical, per the checkpoint/resume contract)."""
     return df.withColumn(salt_col, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salts)))
-
-
-def salted_repartition(df: DataFrame, cell_col: str, key_col: str,
-                       n_salts: int = 16) -> DataFrame:
-    """Spread each hot cell over n_salts reducers."""
-    return with_salt(df, key_col, n_salts).repartition(F.col(cell_col), F.col("salt"))
 
 
 def salted_agg(df: DataFrame, cell_col: str, key_col: str,

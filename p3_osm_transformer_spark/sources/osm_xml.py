@@ -5,9 +5,7 @@ The reference DOM-parses a whole OSM file on one thread
 pre-converted parquet (osmium/ogr2ogr land) or spark-xml.  Neither library
 ships in this sandbox, so this module parses with the stdlib incremental
 SAX-style reader (iterparse — constant memory, no DOM) and hands Spark an
-Arrow-backed DataFrame.  The parse is per-file; a directory of .osm files
-parallelizes by file via ``spark.read.text`` of paths + mapInPandas
-(``read_osm_many``).
+Arrow-backed DataFrame, one file per call.
 
 Element mapping mirrors FIXTURES.md §2-3:
   <node id lat lon><tag k v/></node>   → (id, lat, lon, tags map)
@@ -74,24 +72,3 @@ def read_osm(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
         else spark.createDataFrame([], WAY_SCHEMA)
     return ndf, wdf
 
-
-def read_osm_many(spark: SparkSession, paths: list[str]) -> tuple[DataFrame, DataFrame]:
-    """Directory-scale variant: parallel by file via mapInPandas over the
-    path list — each executor parses its files with iter_osm."""
-    pathdf = spark.createDataFrame([(p,) for p in paths], "path string") \
-        .repartition(max(len(paths), 1))
-
-    def parse_nodes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [r for p in pdf["path"]
-                    for kind, r in iter_osm(p) if kind == "node"]
-            yield pd.DataFrame(rows, columns=["id", "lat", "lon", "tags"])
-
-    def parse_ways(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [r for p in pdf["path"]
-                    for kind, r in iter_osm(p) if kind == "way"]
-            yield pd.DataFrame(rows, columns=["id", "node_refs", "tags"])
-
-    return (pathdf.mapInPandas(parse_nodes, NODE_SCHEMA),
-            pathdf.mapInPandas(parse_ways, WAY_SCHEMA))

@@ -158,6 +158,41 @@ def test_cosine_near_dup_planted(spark):
     assert len(got & exact) / len(exact) >= 0.9  # LSH recall
 
 
+def test_cosine_near_dup_edge_rows_equal_brute(spark):
+    """Rows off the embedding length keep the brute twin's pairs: a NULL
+    row pairs with nothing, two equal rows longer than dim share the
+    no-bucket rows' own bucket and pair, and two equal shorter rows
+    (bucket 0) pair by the exact fold.  The other pairs are scaled
+    copies, which share every sketch bit, so the output equals
+    ``cosine_near_dup_brute`` exactly."""
+    rng = np.random.RandomState(23)
+    base = rng.randn(60, 16)
+    rows = [(i, base[i].tolist()) for i in range(60)]
+    rows += [(100 + i, (2.5 * base[i]).tolist()) for i in range(0, 60, 6)]
+    rows += [(900, None), (901, [0.5] * 20), (902, [0.5] * 20),
+             (903, [1.0, 2.0, 3.0]), (904, [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted(map(tuple, simsearch.cosine_near_dup_pairs(
+        df, threshold=0.95).collect()))
+    want = sorted(map(tuple, simsearch.cosine_near_dup_brute(
+        df, threshold=0.95).collect()))
+    assert got == want
+    assert {(901, 902), (903, 904)} <= {r[:2] for r in got}
+    assert len(got) >= 12 and not any(900 in r[:2] for r in got)
+
+
+def test_cosine_topk_lsh_empty_corpus(spark):
+    """An empty corpus has no embedding length to read: both the derived
+    and a given prefix_bits return no rows, with the top-k schema."""
+    q = spark.createDataFrame([(1, [1.0, 2.0]), (2, None)],
+                              "query_id long, embedding array<double>")
+    c = spark.createDataFrame([], "neighbor_id long, embedding array<double>")
+    for kw in ({}, {"prefix_bits": 4}):
+        out = simsearch.cosine_topk_lsh(q, c, k=3, **kw)
+        assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rank"]
+        assert out.collect() == []
+
+
 def test_hamming_band0_sign_flip(spark):
     """Regression: a Hamming≤3 pair whose ONLY matching band is band 0 and
     whose signs differ (bit 63 flipped) must be found — a sign-preserving
@@ -244,24 +279,72 @@ def test_sketch_bits_literal_matrix_matches_per_row_form(spark):
     assert len({r["fast"] for r in got}) > 10   # sketches actually vary
 
 
-def test_sketch_bits_arrow_equals_catalyst_incl_edge_rows(spark):
-    """The r5 Arrow sketch (vectorized pandas_udf) must be bit-identical
-    to the Catalyst literal-matrix form, INCLUDING the ragged-row edge
-    semantics the HOF chain defines: shorter vector → all-'0' bits,
-    longer or NULL vector → empty string."""
+def test_lsh_kernel_buckets_equal_catalyst_sketch_prefix_incl_edge_rows(spark):
+    """The kernel's bucket (the ``_sk`` Arrow UDF over ``_buckets``) is
+    the Catalyst literal-matrix sketch's prefix read as binary, INCLUDING
+    the ragged-row edge semantics the HOF chain defines: a shorter or
+    empty vector's all-'0' sketch is bucket 0, a longer or NULL vector's
+    empty sketch is no bucket (-1), and so is every row at 0 bits.  Its
+    probes (``_sk_probes``) are that prefix and its single-bit flips,
+    first bit first; an empty prefix probes only bucket 1."""
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in rng.randn(24)]) for i in range(300)]
     rows += [(900, None), (901, [1.0] * 10), (902, [1.0] * 30), (903, [])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = emb.select(
-        "vec_id",
-        simsearch.sketch_bits("embedding", 12, dim=24, impl="arrow")
-        .alias("arrow"),
-        simsearch.sketch_bits("embedding", 12, dim=24, impl="catalyst")
-        .alias("cat")).collect()
-    bad = [(r["vec_id"], r["arrow"], r["cat"])
-           for r in got if r["arrow"] != r["cat"]]
-    assert not bad, bad[:5]
+    for bits in (0, 5, 12):
+        bucket, probes, _ = simsearch._lsh_udfs(24, bits)
+        got = emb.select(
+            "vec_id", bucket("embedding").alias("kernel"),
+            probes("embedding").alias("probes"),
+            F.substring(simsearch.sketch_bits("embedding", 12, dim=24), 1,
+                        bits).alias("cat")).collect()
+        bad = []
+        for r in got:
+            own = int(r["cat"], 2) if r["cat"] else -1
+            want = [own] + [own ^ (1 << i) for i in reversed(range(bits))]
+            if (r["kernel"], r["probes"]) != (own, want if own >= 0 else [1]):
+                bad.append((r["vec_id"], r["kernel"], r["probes"], r["cat"]))
+        assert not bad, (bits, bad[:5])
+        assert bits == 0 or len({r["kernel"] for r in got}) > 10
+
+
+def test_lsh_kernel_cosine_equals_catalyst_incl_edge_rows(spark,
+                                                         monkeypatch):
+    """The kernel's pair cosine (the ``_cos`` Arrow UDF over
+    ``_pair_cos``) is bit-identical to the Catalyst ``_dot / (_norm *
+    _norm)`` fold, INCLUDING its edge semantics: NULL on either side or a
+    length mismatch → NULL, two equal lengths other than dim (shorter,
+    longer, empty) still compute by the exact left fold.  A zero norm
+    gives NULL, where the Catalyst fold raises under ANSI mode, and so
+    does a NaN element, where the fold gives NaN.  Both
+    plans score with it: on the edge fixture at one prefix bit, where the
+    NULL query's probe of bucket 1 is half the corpus, they agree."""
+    rng = np.random.RandomState(13)
+    v = lambda n: [float(x) for x in rng.randn(n)]  # noqa: E731
+    pairs = [(i, v(24), v(24)) for i in range(200)]
+    pairs += [(900, None, v(24)), (901, v(24), None), (902, None, None),
+              (903, v(10), v(24)), (904, v(24), v(30)), (905, v(10), v(30)),
+              (906, v(10), v(10)), (907, v(30), v(30)), (908, [], [])]
+    df = spark.createDataFrame(
+        pairs, "pair_id long, a array<double>, b array<double>")
+    cos = simsearch._lsh_udfs(24, 4)[2]
+    got = {r["pair_id"]: r["kernel"] for r in df.select(
+        "pair_id", cos("a", "b").alias("kernel")).collect()}
+    want = {r["pair_id"]: r["cat"] for r in df.filter("pair_id != 908").select(
+        "pair_id", (simsearch._dot("a", "b")
+                    / (simsearch._norm("a") * simsearch._norm("b")))
+        .alias("cat")).collect()}
+    assert {i: got[i] for i in want} == want
+    assert [want[i] is None for i in range(900, 908)] == [True] * 6 + [False] * 2
+    odd = spark.createDataFrame([([0.0] * 24, v(24)), ([np.nan] + v(23), v(24))],
+                                "a array<double>, b array<double>")
+    assert got[908] is None
+    assert [r[0] for r in odd.select(cos("a", "b")).collect()] == [None, None]
+    qv, cv = _lsh_edge_fixture(spark)
+    kw = dict(k=7, prefix_bits=1, dim=24)
+    a = sorted(map(tuple, simsearch.cosine_topk_lsh(qv, cv, **kw).collect()))
+    b = sorted(map(tuple, _shuffled(monkeypatch, qv, cv, **kw).collect()))
+    assert a == b and len([r for r in a if r[0] == 5901]) == 7
 
 
 def _lsh_edge_fixture(spark):
@@ -290,25 +373,6 @@ def _shuffled(monkeypatch, *args, **kw):
         out = simsearch.cosine_topk_lsh(*args, **kw)
     assert not _one_pass(out)
     return out
-
-
-def test_cosine_topk_lsh_arrow_equals_catalyst_incl_edge_rows(spark,
-                                                               monkeypatch):
-    """The r5.3 Arrow re-rank (fused per-pair cosine pandas_udf) + long
-    bucket keys must leave cosine_topk_lsh's OUTPUT identical to the
-    Catalyst HOF spec twin — same (query_id, neighbor_id, cos_sim, rank)
-    rows, cos_sim bit-exact before the round-6 — including the HOF edge
-    semantics: NULL embedding or per-pair length mismatch → NULL cos_sim
-    (ranked last), equal ragged lengths still compute exactly."""
-    qv, cv = _lsh_edge_fixture(spark)
-    a = _shuffled(monkeypatch, qv, cv, k=7, prefix_bits=4, dim=24,
-                  impl="arrow")
-    b = simsearch.cosine_topk_lsh(qv, cv, k=7, prefix_bits=4, dim=24,
-                                  impl="catalyst")
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    fa = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in a.collect()}
-    fb = {key(r): (r["neighbor_id"], r["cos_sim"]) for r in b.collect()}
-    assert fa == fb and len(fa) > 40
 
 
 def test_cosine_topk_lsh_one_pass_equals_shuffled_incl_edge_rows(

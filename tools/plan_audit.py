@@ -235,14 +235,14 @@ def main() -> None:
     print(f"  (dedup_near ArrowEvalPython nodes = {n_arrow}; must be 1)")
     assert n_arrow == 1, f"expected exactly 1 Arrow verify node, got {n_arrow}"
 
-    # 9. ANN LSH (r3 bucket-join rewrite; r5.2 Arrow sketch; r5.3 long
-    # bucket keys + fused Arrow re-rank): candidate dedup on bare (id,
-    # long-bucket) pairs, embeddings re-joined for the exact re-rank.
-    # Python appears ONLY as vectorized ArrowEvalPython pandas_udf nodes
-    # (the sign sketch + the per-pair cosine) — never row-at-a-time
-    # BatchEvalPython, never MapInPandas, never a cartesian/BNLJ.
-    # All 500 vectors as queries: more than the one-pass plan takes here
-    # (292 at prefix_bits=6), so this is the shuffled plan.
+    # 9. ANN LSH, shuffled plan: candidate dedup on bare (id, long-bucket)
+    # pairs, embeddings re-joined for the exact re-rank.  Python appears
+    # ONLY as the LSH kernel's three scalar Arrow UDFs (ArrowEvalPython):
+    # the corpus bucket (_sk), the query probes (_sk_probes) and the pair
+    # cosine (_cos) — never row-at-a-time BatchEvalPython, never
+    # MapInPandas, never a cartesian/BNLJ, and never the one-pass plan's
+    # MapInArrow.  All 500 vectors as queries: more than the one-pass
+    # plan takes here (292 at prefix_bits=6).
     from p3_osm_transformer_spark.operators.simsearch import cosine_topk_lsh
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     aq = emb.filter("vec_id < 50").selectExpr("vec_id as query_id", "embedding")
@@ -252,7 +252,7 @@ def main() -> None:
                           ac, k=5, prefix_bits=6),
           must=["Window", "ArrowEvalPython"],
           must_not=["CartesianProduct", "BroadcastNestedLoopJoin",
-                    "BatchEvalPython", "MapInPandas"])
+                    "BatchEvalPython", "MapInPandas", "MapInArrow"])
 
     # 9b. ANN LSH with a small query side (50): the one-pass plan.  The
     # queries' probe map travels with one MapInArrow over the corpus
