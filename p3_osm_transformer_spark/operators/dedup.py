@@ -1,17 +1,19 @@
 """Deduplication operator family (training-data pipeline extensions).
 
-Five dedup strategies over a (doc_id, text) corpus — all built-in-function
-DataFrame pipelines (no Python in the hot path except where noted):
+Five dedup strategies over a (doc_id, text) corpus — built-in-function
+DataFrame pipelines except where noted:
 
 * exact          — md5(normalized text) hash-groupBy.
 * minhash LSH    — shingle → per-seed min-hash → band → bucket self-join.
                    Portable construction (md5-prefix base hash, (a·x+b)
                    mod p family) so the DuckDB oracle can replay
-                   signatures exactly.
-* simhash        — sign-aggregated token hashes; Hamming-close pairs.
+                   signatures exactly.  ``dedup_near`` computes the
+                   signatures in one Arrow ``mapInArrow`` pass.
+* simhash        — sign-aggregated token hashes; Hamming-close pairs
+                   (the 64-bit form in an Arrow ``mapInPandas``).
 * ngram jaccard  — token-shingle overlap verification (the exact check run
                    on LSH candidate pairs: filter-refine, same shape as the
-                   PIP join).
+                   PIP join), one scalar Arrow UDF over flat list values.
 * embedding      — cosine near-duplicates (delegates to simsearch.py).
 
 Scale notes: every self-join here is bucketed (band or hash prefix) before
@@ -23,9 +25,11 @@ per-bucket pair blow-up is bounded by per-bucket caps (`max_bucket`).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # ------------------------------------------------------------------ exact
 
@@ -231,64 +235,48 @@ def minhash_bands(docs: DataFrame, id_col: str = "doc_id",
 
 def _jaccard_arrow():
     """Per-pair exact Jaccard over two distinct-long-array columns as ONE
-    flat-batch numpy pass — the verify projection's scale form.
+    scalar Arrow UDF (``_jac``) over the flat values of a batch — the
+    verify projection's scale form.
 
-    The Catalyst twin (``size(array_intersect)/size(array_union)``)
-    builds a boxed ``OpenHashSet[Any]`` per pair per operator: random
-    pointer-chasing over ~80 heap objects per candidate.  Event-log
-    attribution at DEDUP_EXTRA=1.2M (2.3M candidate pairs of ~40-long
-    sets) measured the verify stage at 87 CPU-s on 8 pinned cores vs
-    605-1400 CPU-s on 32 — 7-16× CPU inflation for identical work, the
-    signature of an LLC-thrash-bound workload (per-thread working sets ×
-    threads outgrow the shared cache, so every probe becomes a DRAM
-    miss); it anti-scales with cores and is the reason the stage's
-    matched-window 8→32 efficiency sat below both host ceilings.
+    The Catalyst form (``size(array_intersect)/size(array_union)``, now
+    the tests' reference) builds a boxed ``OpenHashSet[Any]`` per pair
+    per operator: random pointer-chasing over ~80 heap objects per
+    candidate.  Event-log attribution at DEDUP_EXTRA=1.2M (2.3M candidate
+    pairs of ~40-long sets) measured the verify stage at 87 CPU-s on 8
+    pinned cores vs 605-1400 CPU-s on 32 — 7-16× CPU inflation for
+    identical work, the signature of an LLC-thrash-bound workload
+    (per-thread working sets × threads outgrow the shared cache, so every
+    probe becomes a DRAM miss); it anti-scales with cores.
 
-    The numpy form (same flat-batch idiom as ``_doc_signatures_arrow``):
-    lexsort all (pair_idx, value) rows of a batch once — sequential
-    streams, no per-pair allocation — and count adjacent duplicates per
-    pair; |A∩B| = dups, |A∪B| = |A|+|B|−dups.  EXACT set arithmetic on
-    the same int64 values, so results are bit-identical to the Catalyst
-    twin (inputs are distinct-per-array by construction —
-    ``_doc_signatures`` emits ``np.unique`` / ``collect_set`` sets).
-    A NULL input gives NULL in both forms.  An empty union differs: the
-    Catalyst twin raises DIVIDE_BY_ZERO under the session's ANSI mode,
-    this form returns NULL.  It cannot arise from ``dedup_near``, since
-    ``_doc_signatures`` gives every document at least one hash."""
-    @F.pandas_udf("double")
-    def _jac(sa: pd.Series, sb: pd.Series) -> pd.Series:
+    Both list columns are read flat (``list_parent_indices`` /
+    ``list_flatten``: NULL slots and sliced batches contribute no values),
+    all (pair, value) rows of a batch are lexsorted once and adjacent
+    duplicates counted per pair; |A∩B| = dups, |A∪B| = |A|+|B|−dups.
+    EXACT set arithmetic on the same int64 values, so results are
+    bit-identical to the Catalyst form (inputs are distinct per array by
+    construction — ``_doc_signatures`` emits sorted distinct sets).  NULL
+    where an input is NULL or the union is empty (the Catalyst form with
+    ``try_divide`` agrees); ``dedup_near`` never meets an empty union,
+    since ``_doc_signatures`` gives every document at least one hash."""
+    def _jac(sa: pa.Array, sb: pa.Array) -> pa.Array:
         n = len(sa)
-        if n == 0:
-            return pd.Series(np.empty(0, dtype=object))
-        av, bv = sa.values, sb.values
-        la = np.fromiter(
-            (len(x) if x is not None else -1 for x in av), np.int64, n)
-        lb = np.fromiter(
-            (len(x) if x is not None else -1 for x in bv), np.int64, n)
-        ok = (la >= 0) & (lb >= 0)
-        la0 = np.where(ok, la, 0)
-        lb0 = np.where(ok, lb, 0)
-        flat_a = np.concatenate(
-            [np.asarray(x, dtype=np.int64) if k else np.empty(0, np.int64)
-             for x, k in zip(av, ok)]) if n else np.empty(0, np.int64)
-        flat_b = np.concatenate(
-            [np.asarray(x, dtype=np.int64) if k else np.empty(0, np.int64)
-             for x, k in zip(bv, ok)]) if n else np.empty(0, np.int64)
-        idx = np.concatenate([np.repeat(np.arange(n), la0),
-                              np.repeat(np.arange(n), lb0)])
-        vals = np.concatenate([flat_a, flat_b])
+        la = pc.list_value_length(sa)
+        lb = pc.list_value_length(sb)
+        idx = np.concatenate([pc.list_parent_indices(sa).to_numpy(),
+                              pc.list_parent_indices(sb).to_numpy()])
+        vals = np.concatenate([pc.list_flatten(sa).to_numpy(),
+                               pc.list_flatten(sb).to_numpy()])
         order = np.lexsort((vals, idx))
         iv, vv = idx[order], vals[order]
         dup = (iv[1:] == iv[:-1]) & (vv[1:] == vv[:-1])
         inter = np.bincount(iv[1:][dup], minlength=n).astype(np.float64)
-        union = (la0 + lb0).astype(np.float64) - inter
+        union = (pc.fill_null(la, 0).to_numpy()
+                 + pc.fill_null(lb, 0).to_numpy()) - inter
         with np.errstate(divide="ignore", invalid="ignore"):
             jac = inter / union
-        out = np.empty(n, dtype=object)
-        good = ok & (union > 0)
-        for i in np.nonzero(good)[0]:
-            out[i] = float(jac[i])
-        return pd.Series(out)
+        null = (la.is_null().to_numpy(zero_copy_only=False)
+                | lb.is_null().to_numpy(zero_copy_only=False) | (union == 0))
+        return pa.array(jac, mask=null)
 
     # Evaluate-once barrier, NOT a semantic statement (the function is
     # pure): Catalyst duplicates a deterministic UDF below any filter
@@ -297,110 +285,34 @@ def _jaccard_arrow():
     # exchange run twice (plan-audited).  Nondeterministic projections
     # are pushdown barriers, so the UDF runs exactly once and the
     # filter reads the projected column.
-    return _jac.asNondeterministic()
-
-
-def _doc_signatures_arrow(docs: DataFrame, id_col: str, text_col: str,
-                          n_hashes: int, shingle_n: int) -> DataFrame:
-    """(id, mh_0..mh_{n-1}, hset) via ONE Arrow ``mapInPandas`` pass —
-    bit-identical values to the Catalyst construction (same word
-    shingles, same 15-hex-char md5-prefix 60-bit base hashes, same
-    (A·x+B) mod p universal-hash minima; property-tested equal), chosen
-    for the signature pass because the measured problem is JVM
-    allocation, not arithmetic:
-
-    Catalyst form, profiled at DEDUP_EXTRA=400k (420k docs, ~17M
-    shingles; whole-host /proc/stat busy time):
-    wall 11.5s / 82 CPU-s at 8 pinned cores vs wall 12.0s / 318 CPU-s at
-    32 — the same work burns 4× the CPU with ZERO wall gain, i.e. the
-    stage saturates the host's memory system at 8 cores and extra cores
-    only divide the bandwidth (below even the 0.60 stream-control
-    ceiling, because the interpreted higher-order shingle lambdas box
-    every long and build 5-7 transient objects per shingle: slice array,
-    concat string, binary cast, md5 hex string, substring, conv decimal
-    string).  The Arrow pass computes the same 17M md5s in worker
-    PROCESSES with refcounted small-object churn and batch-vectorized
-    numpy minima (np.minimum.reduceat over a flat per-batch hash
-    array) — ~8× less allocation traffic, and per-process heaps scale
-    with cores instead of contending on one shared GC.
-
-    Tokenization parity note: Python ``str.lower``/ASCII regex split
-    match Spark's lower/split for the a-z0-9 token alphabet; both twins
-    (Catalyst + DuckDB oracle) use the same rule.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    A, B = minhash_consts(n_hashes)
-    a_arr = np.array(A, dtype=np.uint64)[:, None]
-    b_arr = np.array(B, dtype=np.uint64)[:, None]
-    p = np.uint64(P_MINHASH)
-
-    schema = T.StructType(
-        [T.StructField(id_col, docs.schema[id_col].dataType)]
-        + [T.StructField(f"mh_{i}", T.LongType()) for i in range(n_hashes)]
-        + [T.StructField("hset", T.ArrayType(T.LongType()))])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import re
-        tok_re = re.compile(r"[^a-z0-9]+")
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, offs, flat = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    # Catalyst twin: concat_ws over the null token array
-                    # yields "" → the doc keeps one empty-string shingle
-                    text = ""
-                toks = [t for t in tok_re.split(text.lower()) if t]
-                if len(toks) >= shingle_n:
-                    sh = [" ".join(toks[i:i + shingle_n])
-                          for i in range(len(toks) - shingle_n + 1)]
-                else:
-                    # <n tokens → ONE whole-text shingle ("" for empty),
-                    # same fallback as _shingles_df
-                    sh = [" ".join(toks)]
-                ids.append(did)
-                offs.append(len(flat))
-                # 60-bit base hash = first 15 hex chars of md5 = top 60
-                # bits of the first 8 digest bytes (same value as
-                # _base_hash60's conv(substring(md5,1,15),16,10))
-                flat.extend(
-                    int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4
-                    for s in sh)
-            if not ids:
-                continue
-            hs = np.array(flat, dtype=np.uint64)
-            sig = (a_arr * (hs % p)[None, :] + b_arr) % p
-            mins = np.minimum.reduceat(sig, np.array(offs, dtype=np.int64),
-                                       axis=1)
-            ends = offs[1:] + [len(flat)]
-            out = {id_col: ids}
-            for i in range(n_hashes):
-                out[f"mh_{i}"] = mins[i].astype(np.int64)
-            out["hset"] = [np.unique(hs[s:e]).astype(np.int64)
-                           for s, e in zip(offs, ends)]
-            yield pd.DataFrame(out)
-
-    return docs.select(id_col, text_col).mapInPandas(gen, schema)
+    return F.arrow_udf(_jac, T.DoubleType()).asNondeterministic()
 
 
 def _doc_signatures(docs: DataFrame, id_col: str, text_col: str,
                     n_hashes: int, band_size: int,
-                    shingle_n: int, impl: str = "arrow") -> DataFrame:
+                    shingle_n: int) -> DataFrame:
     """(id, hset:array<long>, bands:array<long>) — the distinct
     shingle-HASH set AND the LSH band keys of every document, one
-    tokenize + one md5-per-shingle pass.
+    tokenize + one md5-per-shingle pass in ONE Arrow ``mapInArrow``
+    (function ``gen``).
 
-    ``impl="arrow"`` (default, the scale path) computes the pass in one
-    Arrow ``mapInPandas`` stage (``_doc_signatures_arrow`` — measured 4×
-    CPU inflation at 32 cores in the JVM form; values bit-identical).
-    ``impl="catalyst"`` keeps the pure-DataFrame construction below — the
-    SQL-replayable spec form and the parity-test twin.
+    Values are bit-identical to the Catalyst construction the tests
+    compare it with (``_exploded_hashes`` grouped with ``_min_hash_aggs``
+    and ``collect_set``): same word shingles, same 15-hex-char md5-prefix
+    60-bit base hashes, same (A·x+B) mod p universal-hash minima.  The
+    pass runs in Python because the measured problem of the Catalyst form
+    is JVM allocation, not arithmetic.  Profiled at DEDUP_EXTRA=400k
+    (420k docs, ~17M shingles; whole-host /proc/stat busy time): wall
+    11.5s / 82 CPU-s at 8 pinned cores vs wall 12.0s / 318 CPU-s at 32 —
+    the same work burns 4× the CPU with ZERO wall gain, i.e. the stage
+    saturates the host's memory system at 8 cores (the interpreted
+    higher-order shingle lambdas box every long and build 5-7 transient
+    objects per shingle: slice array, concat string, binary cast, md5 hex
+    string, substring, conv decimal string).  The Arrow pass computes the
+    same md5s in worker PROCESSES and does the rest per batch in numpy:
+    the minima by ``np.minimum.reduceat`` over the flat hash array, and
+    ``hset`` as a ``ListArray`` from one sort of (doc, hash) with
+    adjacent duplicates dropped (ascending within each doc).
 
     ``hset`` carries the FULL 60-bit base hashes (``_base_hash60`` — no
     mod-p reduction), not the shingle strings: the Jaccard refine only
@@ -410,26 +322,74 @@ def _doc_signatures(docs: DataFrame, id_col: str, text_col: str,
     mod-p values they would be ~5e-4, enough to flip pairs sitting at
     the threshold — that's why the mod stays inside the minhash family
     only).  The q25 DuckDB oracle computes the SAME 60-bit sets, so even
-    a collision cannot diverge engine from oracle.  Longs instead of
-    ~25-byte strings cut the checkpoint + verify-join bytes ~3× and keep
-    array_intersect on fixed-width values (no string compares) — this
-    table is materialized once and read from three sides (band explode,
-    verify id_a side, verify id_b side)."""
-    if impl == "arrow":
-        sig = _doc_signatures_arrow(docs, id_col, text_col, n_hashes,
-                                    shingle_n)
-    else:
-        ex = _exploded_hashes(docs, id_col, text_col, shingle_n)
-        sig = ex.groupBy(id_col).agg(*_min_hash_aggs(n_hashes),
-                                     F.collect_set("_h").alias("hset"))
-    return sig.select(F.col(id_col), F.col("hset"),
-                      _band_keys_long(n_hashes, band_size).alias("bands"))
+    a collision cannot diverge engine from oracle.  This table is
+    materialized once and read from three sides (band explode, verify
+    id_a side, verify id_b side).
+
+    Tokenization parity: Python ``str.lower``/ASCII regex split match
+    Spark's lower/split for the a-z0-9 token alphabet (the Catalyst form
+    and the DuckDB oracle use the same rule).  A NULL text tokenizes like
+    "" (Catalyst's concat_ws over the null token array), and a text of
+    fewer than ``shingle_n`` tokens is ONE whole-text shingle ("" for
+    none), as in ``_shingles_df``: every document keeps a row.
+    """
+    A, B = minhash_consts(n_hashes)
+    a_arr = np.array(A, dtype=np.uint64)[:, None]
+    b_arr = np.array(B, dtype=np.uint64)[:, None]
+    p = np.uint64(P_MINHASH)
+    names = [id_col] + [f"mh_{i}" for i in range(n_hashes)] + ["hset"]
+    schema = T.StructType(
+        [T.StructField(id_col, docs.schema[id_col].dataType)]
+        + [T.StructField(f"mh_{i}", T.LongType()) for i in range(n_hashes)]
+        + [T.StructField("hset", T.ArrayType(T.LongType()))])
+
+    def gen(batches):
+        import hashlib
+        import re
+        tok_re = re.compile(r"[^a-z0-9]+")
+        md5 = hashlib.md5
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            cnt, flat = np.empty(n, dtype=np.int64), []
+            for d, text in enumerate(rb.column(1).to_pylist()):
+                toks = [t for t in tok_re.split((text or "").lower()) if t]
+                sh = ([" ".join(toks[i:i + shingle_n])
+                       for i in range(len(toks) - shingle_n + 1)]
+                      if len(toks) >= shingle_n else [" ".join(toks)])
+                cnt[d] = len(sh)
+                # 60-bit base hash = first 15 hex chars of md5 = top 60
+                # bits of the first 8 digest bytes (same value as
+                # _base_hash60's conv(substring(md5,1,15),16,10))
+                flat.extend(
+                    int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4
+                    for s in sh)
+            hs = np.array(flat, dtype=np.uint64)
+            doc = np.repeat(np.arange(n), cnt)
+            sig = (a_arr * (hs % p)[None, :] + b_arr) % p
+            mins = np.minimum.reduceat(sig, np.cumsum(cnt) - cnt, axis=1)
+            order = np.lexsort((hs, doc))
+            doc, hs = doc[order], hs[order]
+            keep = np.ones(len(hs), dtype=bool)
+            keep[1:] = (doc[1:] != doc[:-1]) | (hs[1:] != hs[:-1])
+            offs = np.searchsorted(doc[keep], np.arange(n + 1))
+            hset = pa.ListArray.from_arrays(
+                pa.array(offs.astype(np.int32)),
+                pa.array(hs[keep].astype(np.int64)))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0)]
+                + [pa.array(m.astype(np.int64)) for m in mins] + [hset],
+                names=names)
+
+    return (docs.select(id_col, text_col).mapInArrow(gen, schema)
+            .select(F.col(id_col), F.col("hset"),
+                    _band_keys_long(n_hashes, band_size).alias("bands")))
 
 
 def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                threshold: float = 0.7, n_hashes: int = 8, band_size: int = 2,
-               shingle_n: int = 3, max_bucket: int = 1000,
-               signatures: str = "arrow", verify: str = "arrow") -> DataFrame:
+               shingle_n: int = 3, max_bucket: int = 1000) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → Jaccard verify, ONE driver
     action inside (the signature checkpoint) — the candidates→verify plan
     is returned LAZY, so the caller's own materialization (noop write,
@@ -481,13 +441,8 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """
     spark = docs.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # signatures="arrow" (default): the measured scale path — the JVM
-    # construction burns 4× the CPU at 32 cores for the same values
-    # (_doc_signatures_arrow docstring); "catalyst" keeps the pure-
-    # DataFrame spec form (parity-tested equal)
     sig = _doc_signatures(docs, id_col, text_col, n_hashes, band_size,
-                          shingle_n, impl=signatures) \
-        .localCheckpoint(eager=True)
+                          shingle_n).localCheckpoint(eager=True)
 
     bands = sig.select(id_col, F.posexplode("bands")
                        .alias("band_idx", "band_key"))
@@ -522,15 +477,10 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     j = (pairs
          .join(sh.select(F.col(id_col).alias("id_a"), F.col("hset").alias("sh_a")), "id_a")
          .join(sh.select(F.col(id_col).alias("id_b"), F.col("hset").alias("sh_b")), "id_b"))
-    if verify == "arrow":
-        # flat-batch numpy set arithmetic (see _jaccard_arrow: the boxed
-        # array_intersect/array_union form burned 605-1400 CPU-s at 32
-        # cores vs 87 at 8 on the same 2.3M pairs — LLC-thrash-bound)
-        raw = _jaccard_arrow()(F.col("sh_a"), F.col("sh_b"))
-    else:
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-        raw = inter / union
+    # flat-batch numpy set arithmetic (see _jaccard_arrow: the boxed
+    # array_intersect/array_union form burned 605-1400 CPU-s at 32
+    # cores vs 87 at 8 on the same 2.3M pairs — LLC-thrash-bound)
+    raw = _jaccard_arrow()(F.col("sh_a"), F.col("sh_b"))
     return (j.withColumn("jaccard", F.round(raw, 6))
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard"))
@@ -593,7 +543,6 @@ def with_simhash64(docs: DataFrame, id_col: str = "doc_id",
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql import types as T
 
     schema = T.StructType([
         T.StructField(id_col, docs.schema[id_col].dataType),
@@ -641,14 +590,14 @@ def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
         band = (F.shiftrightunsigned(F.col(hash_col), b * 16)
                 .bitwiseAND(F.lit(65535)))
         bands.append(F.struct(F.lit(b).alias("band_idx"), band.alias("band_val")))
-    # the band table feeds the size filter AND both self-join sides (and
-    # the fingerprint may come from a Python mapInPandas stage) — cache for
-    # the candidate join, materialize the small pair set, release
     keyed = (df.select(id_col, hash_col, F.explode(F.array(*bands)).alias("b"))
-             .select(id_col, hash_col, F.col("b.band_idx"), F.col("b.band_val"))
-             .cache())
-    sizes = keyed.groupBy("band_idx", "band_val").agg(F.count("*").alias("_bn"))
-    kept = (keyed.join(sizes, ["band_idx", "band_val"])
+             .select(id_col, hash_col, F.col("b.band_idx"), F.col("b.band_val")))
+    # bucket cap as a window count, as in dedup_near: the self-join below
+    # joins on the window's partition keys, so both sides read ONE band
+    # exchange (AQE reuses it) and the fingerprint — possibly a Python
+    # mapInPandas stage — is computed once per row.
+    wb = Window.partitionBy("band_idx", "band_val")
+    kept = (keyed.withColumn("_bn", F.count(F.lit(1)).over(wb))
             .filter(F.col("_bn") <= max_bucket).drop("_bn"))
     a = kept.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"),
                     "band_idx", "band_val")
@@ -658,12 +607,9 @@ def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", "h_a", "h_b").distinct())
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    out = (cand.withColumn("hamming", ham)
-           .filter(F.col("hamming") <= max_hamming)
-           .select("id_a", "id_b", "hamming")
-           .localCheckpoint(eager=True))
-    keyed.unpersist()
-    return out
+    return (cand.withColumn("hamming", ham)
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming"))
 
 
 def phash_near_pairs(images: DataFrame, id_col: str = "image_id",

@@ -62,7 +62,7 @@ def cosine_topk_brute(queries: DataFrame, corpus: DataFrame, k: int = 10,
     """Exact top-k; queries/corpus carry (id, embedding)."""
     qv = queries.select(F.col(q_id), F.col("embedding").alias("_qe"))
     cv = corpus.select(F.col(c_id), F.col("embedding").alias("_ce"))
-    sim = _dot("_qe", "_ce") / (_norm("_qe") * _norm("_ce"))
+    sim = F.try_divide(_dot("_qe", "_ce"), _norm("_qe") * _norm("_ce"))
     pairs = (qv.crossJoin(cv)
              .filter(F.col(q_id) != F.col(c_id))
              .withColumn("cos_sim", sim))
@@ -202,11 +202,11 @@ def _probes(own: np.ndarray, prefix_bits: int,
 def _pair_cos(q: _Flat, c: _Flat, qi: np.ndarray,
               ci: np.ndarray) -> np.ndarray:
     """Cosine of each pair (row qi[i] of q, row ci[i] of c), bit-identical
-    to the Catalyst ``_dot / (_norm * _norm)``: two rows of length dim
-    take the d-ascending dot and norms, two rows of another equal length
-    the left fold.  NaN (to be NULL) for a NULL row, a length mismatch, a
-    zero norm (where the Catalyst form raises DIVIDE_BY_ZERO under ANSI
-    mode) or NaN elements."""
+    to the Catalyst ``try_divide(_dot, _norm * _norm)``: two rows of
+    length dim take the d-ascending dot and norms, two rows of another
+    equal length the left fold.  NaN (to be NULL) for a NULL row, a length
+    mismatch, a zero norm (NULL in the Catalyst form too) or NaN
+    elements."""
     dim = q.block.shape[1]
     ql, cl = q.lens[qi], c.lens[ci]
     cos = np.full(len(qi), np.nan)
@@ -281,9 +281,11 @@ def _lsh_udfs(dim: int, prefix_bits: int, empty_probe: int = 1):
 
 
 def _embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
-    """Fixed embedding length, read from one row (column-pruned scan); 0
-    for an empty frame, which has no row of any length to bucket."""
-    row = df.select(F.size(vec_col).alias("n")).head(1)
+    """Fixed embedding length, read from the first non-NULL row
+    (column-pruned scan); 0 for a frame without one, which has no row of
+    any length to bucket."""
+    row = (df.where(F.col(vec_col).isNotNull())
+           .select(F.size(vec_col).alias("n")).head(1))
     return int(row[0]["n"]) if row else 0
 
 
@@ -535,7 +537,7 @@ def cosine_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int = 10,
     # probes n_probe DISTINCT lists, so (q, c) pairs are already unique —
     # the r2 distinct() shuffled every candidate's two 64-dim vectors for
     # nothing.  Norms are per-row, not per-pair (see cosine_topk_lsh).
-    sim = _dot("_qe", "_ce") / (F.col("_qn") * F.col("_cn"))
+    sim = F.try_divide(_dot("_qe", "_ce"), F.col("_qn") * F.col("_cn"))
     cand = (qs.join(cs, "_bucket")
             .filter(F.col(q_id) != F.col(c_id))
             .withColumn("cos_sim", sim))
@@ -596,7 +598,7 @@ def cosine_near_dup_brute(vectors: DataFrame, threshold: float = 0.95,
                        F.col("embedding").alias("_ea"))
     b = vectors.select(F.col(id_col).alias("id_b"),
                        F.col("embedding").alias("_eb"))
-    sim = _dot("_ea", "_eb") / (_norm("_ea") * _norm("_eb"))
+    sim = F.try_divide(_dot("_ea", "_eb"), _norm("_ea") * _norm("_eb"))
     return (a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
             .withColumn("cos_sim", F.round(sim, 6))
             .filter(F.col("cos_sim") >= threshold)

@@ -193,6 +193,45 @@ def test_cosine_topk_lsh_empty_corpus(spark):
         assert out.collect() == []
 
 
+def test_embedding_dim_from_first_non_null_row(spark):
+    """Without ``dim=`` the embedding length comes from the first non-NULL
+    row: a corpus whose first row is NULL gives the same output as the
+    length given."""
+    df = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0, 0.0]), (3, [0.9, 0.1, 0.0])],
+        "vec_id long, embedding array<double>")
+    assert simsearch._embedding_dim(df) == 3
+    q = df.selectExpr("vec_id as query_id", "embedding")
+    c = df.selectExpr("vec_id as neighbor_id", "embedding")
+    for fn, args, kw in (
+            (simsearch.cosine_topk_lsh, (q, c), dict(k=2, prefix_bits=2)),
+            (simsearch.cosine_near_dup_pairs, (df,),
+             dict(threshold=0.9, prefix_bits=2))):
+        got = sorted(map(tuple, fn(*args, **kw).collect()))
+        assert got and got == sorted(map(tuple, fn(*args, dim=3, **kw)
+                                         .collect()))
+
+
+def test_catalyst_cosine_zero_norm_gives_null(spark):
+    """A zero-norm vector's Catalyst cosine is NULL, not a DIVIDE_BY_ZERO
+    under ANSI mode: the brute top-k ranks its pairs last, IVF's re-rank
+    (probing every list here) agrees with it, and the brute near-dup twin
+    pairs it with nothing."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.1, 0.0]),
+         (4, [0.0, 1.0, 0.0])], "vec_id long, embedding array<double>")
+    q = df.selectExpr("vec_id as query_id", "embedding")
+    c = df.selectExpr("vec_id as neighbor_id", "embedding")
+    brute = sorted(map(tuple, simsearch.cosine_topk_brute(q, c, k=3).collect()))
+    assert [r for r in brute if r[0] == 1] == [(1, 2, None, 1), (1, 3, None, 2),
+                                              (1, 4, None, 3)]
+    assert (2, 1, None, 3) in brute
+    ivf = simsearch.cosine_topk_ivf(q, c, k=3, n_centroids=4, n_probe=4)
+    assert sorted(map(tuple, ivf.collect())) == brute
+    near = simsearch.cosine_near_dup_brute(df, threshold=0.9).collect()
+    assert [tuple(r) for r in near] == [(2, 3, 0.995037)]
+
+
 def test_hamming_band0_sign_flip(spark):
     """Regression: a Hamming≤3 pair whose ONLY matching band is band 0 and
     whose signs differ (bit 63 flipped) must be found — a sign-preserving
@@ -315,8 +354,8 @@ def test_lsh_kernel_cosine_equals_catalyst_incl_edge_rows(spark,
     _norm)`` fold, INCLUDING its edge semantics: NULL on either side or a
     length mismatch → NULL, two equal lengths other than dim (shorter,
     longer, empty) still compute by the exact left fold.  A zero norm
-    gives NULL, where the Catalyst fold raises under ANSI mode, and so
-    does a NaN element, where the fold gives NaN.  Both
+    gives NULL, where the bare ``/`` raises under ANSI mode, and so does
+    a NaN element, where the fold gives NaN.  Both
     plans score with it: on the edge fixture at one prefix bit, where the
     NULL query's probe of bucket 1 is half the corpus, they agree."""
     rng = np.random.RandomState(13)
@@ -479,57 +518,118 @@ def test_ann_broadcast_hint_sized_by_bucket_occupancy(spark):
     assert one_pass(prefix_bits=None, n_corpus=30_000)
 
 
+_EDGE_DOCS = [(900001, "two tokens"), (900002, "one"), (900003, "!!! ... ---"),
+              (900004, ""), (900005, None), (900011, "two tokens"),
+              (900012, ""), (900013, None),
+              (900006, "Mixed CASE text with   runs\tof whitespace and 42 "
+                       "digits")]
+
+
+def _catalyst_signatures(docs):
+    """The Catalyst reference of ``dedup._doc_signatures``: exploded
+    60-bit shingle hashes grouped into the minhash minima, the hash set
+    and the long band keys (n_hashes 8, band_size 2, shingle_n 3)."""
+    ex = dedup._exploded_hashes(docs, "doc_id", "text", 3)
+    return (ex.groupBy("doc_id")
+            .agg(*dedup._min_hash_aggs(8), F.collect_set("_h").alias("hset"))
+            .select("doc_id", "hset",
+                    dedup._band_keys_long(8, 2).alias("bands")))
+
+
+def _catalyst_jaccard(a, b):
+    return F.try_divide(F.size(F.array_intersect(a, b)).cast("double"),
+                        F.size(F.array_union(a, b)).cast("double"))
+
+
 def test_doc_signatures_arrow_equals_catalyst(spark):
-    """The Arrow signature fast path (r5: the JVM construction burned 4×
-    the CPU at 32 cores) must be VALUE-IDENTICAL to the Catalyst spec
-    form — minima, 60-bit hash sets, and band keys — including the edge
-    docs: <shingle_n tokens, punctuation-only (tokenizes to nothing →
-    one ""-shingle), empty string, and NULL text (Catalyst's concat_ws
-    turns the null token array into "" — the row is KEPT)."""
-    edge = spark.createDataFrame(
-        [(900001, "two tokens"), (900002, "one"), (900003, "!!! ... ---"),
-         (900004, ""), (900005, None),
-         (900006, "Mixed CASE text with   runs\tof whitespace and 42 digits")],
-        "doc_id long, text string")
-    c = _corpus(spark).unionByName(edge)
-    a = dedup._doc_signatures(c, "doc_id", "text", 8, 2, 3, impl="arrow")
-    b = dedup._doc_signatures(c, "doc_id", "text", 8, 2, 3, impl="catalyst")
-    fa = {r["doc_id"]: (sorted(r["hset"]), list(r["bands"]))
-          for r in a.collect()}
+    """The ``mapInArrow`` signature pass must be VALUE-IDENTICAL to the
+    Catalyst reference — 60-bit hash sets (ascending, distinct) and band
+    keys over the minima — including the edge docs: <shingle_n tokens,
+    punctuation-only (tokenizes to nothing → one ""-shingle), empty
+    string, and NULL text (Catalyst's concat_ws turns the null token
+    array into "" — the row is KEPT)."""
+    c = _corpus(spark).unionByName(
+        spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string"))
+    sig = dedup._doc_signatures(c, "doc_id", "text", 8, 2, 3)
+    assert "MapInArrow" in sig._jdf.queryExecution().analyzed().toString()
+    rows = sig.collect()
+    assert all(list(r["hset"]) == sorted(set(r["hset"])) for r in rows)
+    fa = {r["doc_id"]: (list(r["hset"]), list(r["bands"])) for r in rows}
     fb = {r["doc_id"]: (sorted(r["hset"]), list(r["bands"]))
-          for r in b.collect()}
+          for r in _catalyst_signatures(c).collect()}
     assert fa == fb
     assert 900005 in fa and 900004 in fa
 
 
 def test_dedup_near_arrow_verify_equals_catalyst(spark):
-    """The r5 flat-batch numpy Jaccard verify (the boxed
-    array_intersect/array_union form burned 7-16× the CPU at 32 cores —
-    see _jaccard_arrow) and the r5 long band keys must leave
-    dedup_near's OUTPUT identical to the Catalyst spec twins: same
+    """dedup_near's OUTPUT (the mapInArrow signatures, the long band keys
+    and the flat-batch Arrow Jaccard verify) is identical to a reference
+    composed from Catalyst pieces — the Catalyst signatures, the band
+    self-join and the array_intersect/array_union Jaccard ≥ 0.7: same
     pairs, bit-identical jaccard values, across the edge docs (empty /
     NULL / punctuation-only text, sub-shingle token counts) and the
     injected exact + near duplicates."""
-    edge = spark.createDataFrame(
-        [(900001, "two tokens"), (900002, "one"), (900003, "!!! ... ---"),
-         (900004, ""), (900005, None), (900011, "two tokens"),
-         (900012, ""), (900013, None)],
-        "doc_id long, text string")
-    c = _corpus(spark).unionByName(edge)
-    fast = dedup.dedup_near(c, threshold=0.7)
-    spec = dedup.dedup_near(c, threshold=0.7,
-                            signatures="catalyst", verify="catalyst")
-    fa = {(r.id_a, r.id_b): r.jaccard for r in fast.collect()}
+    c = _corpus(spark).unionByName(
+        spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string"))
+    sig = _catalyst_signatures(c)
+    bands = sig.select("doc_id", F.posexplode("bands"))
+    pairs = (bands.selectExpr("doc_id as id_a", "pos", "col")
+             .join(bands.selectExpr("doc_id as id_b", "pos", "col"),
+                   ["pos", "col"])
+             .filter("id_a < id_b").select("id_a", "id_b").distinct())
+    spec = (pairs
+            .join(sig.selectExpr("doc_id as id_a", "hset as sh_a"), "id_a")
+            .join(sig.selectExpr("doc_id as id_b", "hset as sh_b"), "id_b")
+            .select("id_a", "id_b", F.round(_catalyst_jaccard("sh_a", "sh_b"),
+                                            6).alias("jaccard"))
+            .filter("jaccard >= 0.7"))
+    fa = {(r.id_a, r.id_b): r.jaccard
+          for r in dedup.dedup_near(c, threshold=0.7).collect()}
     fb = {(r.id_a, r.id_b): r.jaccard for r in spec.collect()}
     assert fa == fb and len(fa) > 0
-    # the identical-text edge pairs verify at jaccard 1.0 in both forms
+    # the identical-text edge pairs verify at jaccard 1.0
     assert fa[(900001, 900011)] == 1.0
     assert fa[(900004, 900012)] == 1.0
 
 
+def test_jaccard_arrow_udf_equals_catalyst_incl_null_empty_sliced(spark):
+    """The ``_jac`` Arrow UDF equals the Catalyst Jaccard (try_divide of
+    the intersect/union sizes) on NULL, empty, disjoint, identical and
+    overlapping distinct sets, read in 3-row Arrow batches; a NULL input
+    or an empty union gives NULL.  Spark hands a scalar Arrow UDF
+    unsliced arrays, so the UDF's function also runs on sliced ones."""
+    import pyarrow as pa
+
+    sets = [None, [], [1], [1, 2, 3], [4, 5], [3, 2, 1], [2, 3, 9, 10],
+            [7], [-5, 1 << 59, 3]]
+    rows = [(i * len(sets) + j, a, b) for i, a in enumerate(sets)
+            for j, b in enumerate(sets)]
+    df = spark.createDataFrame(rows, "k long, a array<long>, b array<long>")
+    jac = dedup._jaccard_arrow()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {r.k: r.j for r in df.repartition(2).select(
+            "k", jac("a", "b").alias("j")).collect()}
+    finally:
+        spark.conf.set(key, old)
+    want = {r.k: r.j for r in df.select(
+        "k", _catalyst_jaccard("a", "b").alias("j")).collect()}
+    assert got == want and len(got) == len(sets) ** 2
+    assert got[1 * len(sets) + 1] is None          # empty vs empty
+    assert got[2 * len(sets) + 4] == 0.0           # disjoint
+    assert got[3 * len(sets) + 5] == 1.0           # identical sets
+    t = pa.list_(pa.int64())
+    a, b = pa.array([r[1] for r in rows], t), pa.array([r[2] for r in rows], t)
+    for s in (1, 7, 40):
+        assert jac.func(a.slice(s, 30), b.slice(s, 30)).to_pylist() == [
+            want[k] for k in range(s, s + 30)]
+
+
 def test_dedup_caches_released(spark):
-    """dedup_near / hamming_near_pairs materialize-then-unpersist their
-    internal caches: repeated calls accrete no DataFrame cache entries."""
+    """Repeated dedup_near / hamming_near_pairs calls accrete no DataFrame
+    cache entries."""
     spark.catalog.clearCache()
     c = _corpus(spark)
     for _ in range(2):

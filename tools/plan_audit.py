@@ -202,25 +202,25 @@ def main() -> None:
           f"{'OK' if mb_ok else 'VIOLATION'} "
           f"(exchanges={n_exch})")
 
-    # 8b. dedup_near (r5 rewrite): the signature pass is ONE Arrow
-    # MapInPandas map — no aggregate, no Exchange at all (the r4 JVM
+    # 8b. dedup_near: the signature pass is ONE Arrow MapInArrow map (the
+    # record-batch form; a MapInPandas here would mean the per-row pandas
+    # round trip is back) — no aggregate, no Exchange at all (the JVM
     # construction burned 4× the CPU at 32 cores under whole-host
-    # /proc/stat profiling; see operators/dedup.py _doc_signatures_arrow
-    # docstring).  The candidates→verify plan the caller executes reads
-    # the CHECKPOINTED signature blocks from every side — no Python left
-    # in it, no cartesian.
+    # /proc/stat profiling; see operators/dedup.py _doc_signatures).  The
+    # candidates→verify plan the caller executes reads the CHECKPOINTED
+    # signature blocks from every side — no cartesian.
     from p3_osm_transformer_spark.operators.dedup import (
         _doc_signatures, dedup_near)
     audit("dedup signature pass (one Arrow map, zero exchanges)",
-          _doc_signatures(docs, "doc_id", "text", 8, 2, 3, impl="arrow"),
-          must=["MapInPandas"],
-          must_not=["Exchange", "HashAggregate", "CartesianProduct",
-                    "BatchEvalPython"])
-    # r5.5: the verify projection is ONE vectorized ArrowEvalPython
-    # pandas_udf (the flat-batch numpy Jaccard — the boxed
-    # array_intersect form burned 7-16× the CPU at 32 cores); still no
-    # row-at-a-time Python, no cartesian, and the candidates+verify plan
-    # reads the checkpointed signature RDD, never re-tokenizes.
+          _doc_signatures(docs, "doc_id", "text", 8, 2, 3),
+          must=["MapInArrow"],
+          must_not=["MapInPandas", "Exchange", "HashAggregate",
+                    "CartesianProduct", "BatchEvalPython"])
+    # The verify projection is ONE vectorized ArrowEvalPython arrow_udf
+    # (the flat-batch numpy Jaccard — the boxed array_intersect form
+    # burned 7-16× the CPU at 32 cores); still no row-at-a-time Python,
+    # no cartesian, and the candidates+verify plan reads the checkpointed
+    # signature RDD, never re-tokenizes.
     dn = dedup_near(docs.limit(2000), threshold=0.7)
     dn_plan = plan_of(dn)
     audit("dedup_near candidates+verify (reads checkpointed signatures)", dn,
