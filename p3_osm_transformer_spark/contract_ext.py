@@ -428,16 +428,11 @@ def q37(spark, sf_dir):
                  F.round(F.sum("l_quantity"), 2).alias("sum_qty")))
 
 
-# S2-style cube-face cells — pandas-UDF path, not SQL-expressible (rows-only)
-def _s2z_cte(lon: str, lat: str, level: int) -> str:
-    """DuckDB CTE chain replaying functions/s2z.py exactly: lon/lat → unit
-    XYZ → cube face (+3 for negative major) → per-face (u,v) → quadratic
-    st → (i,j) → Morton interleave → packed id.  Generated, like the
-    numpy twin, so the two stay in visual lockstep."""
-    n = 1 << level
-    morton = " + ".join(
-        f"(((i >> {b}) & 1) * {1 << (2 * b + 1)}) + (((j >> {b}) & 1) * {1 << (2 * b)})"
-        for b in range(level))
+def _s2_ij_ctes(lon: str, lat: str, n: int, tie: str) -> str:
+    """The S2 projection the s2z and true-S2 replays share, as DuckDB CTEs:
+    lon/lat → unit XYZ → cube face (+3 for a negative major axis; ``tie``
+    compares the axes: S2's strict ``>``, s2z's ``>=``) → per-face (u, v)
+    → quadratic st → (i, j) on an n × n face grid."""
     return f"""
 xyz AS (
   SELECT *, cos(radians({lat})) * cos(radians({lon})) AS x,
@@ -445,9 +440,9 @@ xyz AS (
             sin(radians({lat})) AS z
   FROM pts),
 faced AS (
-  SELECT *, CASE WHEN abs(x) >= abs(y)
-                 THEN CASE WHEN abs(x) >= abs(z) THEN 0 ELSE 2 END
-                 ELSE CASE WHEN abs(y) >= abs(z) THEN 1 ELSE 2 END END AS f0
+  SELECT *, CASE WHEN abs(x) {tie} abs(y)
+                 THEN CASE WHEN abs(x) {tie} abs(z) THEN 0 ELSE 2 END
+                 ELSE CASE WHEN abs(y) {tie} abs(z) THEN 1 ELSE 2 END END AS f0
   FROM xyz),
 faced2 AS (
   SELECT *, CASE WHEN (CASE f0 WHEN 0 THEN x WHEN 1 THEN y ELSE z END) < 0
@@ -468,7 +463,19 @@ st AS (
 ij AS (
   SELECT *, GREATEST(LEAST(CAST(FLOOR(su * {n}) AS BIGINT), {n - 1}), 0) AS i,
             GREATEST(LEAST(CAST(FLOOR(sv * {n}) AS BIGINT), {n - 1}), 0) AS j
-  FROM st),
+  FROM st)"""
+
+
+# S2-style cube-face cells (functions/s2z.py, a scalar Arrow UDF)
+def _s2z_cte(lon: str, lat: str, level: int) -> str:
+    """DuckDB CTE chain replaying functions/s2z.py exactly: ``_s2_ij_ctes``
+    with s2z's ``>=`` face tie, then Morton interleave → packed id."""
+    n = 1 << level
+    morton = " + ".join(
+        f"(((i >> {b}) & 1) * {1 << (2 * b + 1)}) + (((j >> {b}) & 1) * {1 << (2 * b)})"
+        for b in range(level))
+    return f"""
+{_s2_ij_ctes(lon, lat, n, '>=')},
 cells AS (
   SELECT *, CAST(face AS BIGINT) * {1 << 58} + ({morton}) * 32 + {level} AS s2z
   FROM ij)
@@ -780,36 +787,7 @@ h{k} AS (
 lu AS (
   SELECT i - 1 AS idx, l[i] AS v
   FROM (SELECT {lookup_pos_sql_literal()} AS l), generate_series(1, 1024) t(i)),
-xyz AS (
-  SELECT *, cos(radians(lat)) * cos(radians(lon)) AS x,
-            cos(radians(lat)) * sin(radians(lon)) AS y,
-            sin(radians(lat)) AS z
-  FROM pts),
-faced AS (
-  SELECT *, CASE WHEN abs(x) > abs(y)
-                 THEN CASE WHEN abs(x) > abs(z) THEN 0 ELSE 2 END
-                 ELSE CASE WHEN abs(y) > abs(z) THEN 1 ELSE 2 END END AS f0
-  FROM xyz),
-faced2 AS (
-  SELECT *, CASE WHEN (CASE f0 WHEN 0 THEN x WHEN 1 THEN y ELSE z END) < 0
-                 THEN f0 + 3 ELSE f0 END AS face
-  FROM faced),
-uv AS (
-  SELECT *, CASE face WHEN 0 THEN y / x WHEN 1 THEN -x / y WHEN 2 THEN -x / z
-                      WHEN 3 THEN z / x WHEN 4 THEN z / y ELSE -y / z END AS u,
-            CASE face WHEN 0 THEN z / x WHEN 1 THEN z / y WHEN 2 THEN -y / z
-                      WHEN 3 THEN y / x WHEN 4 THEN -x / y ELSE -x / z END AS v
-  FROM faced2),
-st AS (
-  SELECT *, CASE WHEN u >= 0 THEN 0.5 * sqrt(greatest(1 + 3 * u, 0))
-                 ELSE 1 - 0.5 * sqrt(greatest(1 - 3 * u, 0)) END AS su,
-            CASE WHEN v >= 0 THEN 0.5 * sqrt(greatest(1 + 3 * v, 0))
-                 ELSE 1 - 0.5 * sqrt(greatest(1 - 3 * v, 0)) END AS sv
-  FROM uv),
-ij AS (
-  SELECT *, GREATEST(LEAST(CAST(FLOOR(su * {n}) AS BIGINT), {n - 1}), 0) AS i,
-            GREATEST(LEAST(CAST(FLOOR(sv * {n}) AS BIGINT), {n - 1}), 0) AS j
-  FROM st),{','.join(rounds)},
+{_s2_ij_ctes('lon', 'lat', n, '>')},{','.join(rounds)},
 cells AS (
   SELECT *, (CAST(CAST(face AS BIGINT) * {1 << 60} AS HUGEINT)
              + {pos_sum}) * 2 + 1 AS leaf

@@ -22,25 +22,27 @@ the Chebyshev box dx,dy ∈ [-k, k] with x wraparound — both expressible as
 Catalyst column math (and as ANSI SQL for the DuckDB oracle; every function
 here has a ``*_sql`` twin emitting the equivalent SQL text).
 
-H3 parity note: true H3 (icosahedral aperture-7 hexagons) is not available
-in this sandbox and a from-scratch port would be >10^3 lines of non-Spark
-code for no planner benefit.  The engine keeps H3's *interface* (multi-
-resolution encode, ring expansion, parent/child) on the square grid, with
-resolutions chosen to match H3 edge lengths:
+``with_cells`` names its columns by H3 resolution: ``H3_ALIAS`` maps H3
+res 7-10 to the grid exponent with the closest edge length:
 
     H3 res 7 ≈ 1.22 km edge  ->  geocell g=15 (360°/2^15 ≈ 1.22 km at equator)
     H3 res 8 ≈ 0.46 km       ->  geocell g=16
     H3 res 9 ≈ 0.17 km       ->  geocell g=18 (0.31 km at g=17; g=18 = 0.153)
     H3 res 10 ≈ 0.066 km     ->  geocell g=19
 
-If the ``h3`` PyPI package is present it can be dropped in behind
-``encode_cells`` (same column names); absence changes the cell boundaries,
-never the join *semantics* (candidate supersets + exact refine).
+NULL semantics: a NULL lon or lat gives a NULL cell (never a clamped
+corner cell — Spark's and DuckDB's ``least``/``greatest`` skip NULLs, so
+the clamps below are CASE chains).  The icosahedral hexcell grid is
+functions/hexcell.py and the true S2 ids functions/s2cell.py; both
+encode through ``arrow_cells`` below with the same NULL-in → NULL-out
+rule.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,14 +54,28 @@ EARTH_RADIUS_M = 6371000.8
 
 # ---------------------------------------------------------------- encode
 
+def clamp(x: Column, lo: int | float | None, hi: int | float) -> Column:
+    """x clamped to [lo, hi] (no lower bound for ``lo=None``).  NULL stays
+    NULL: ``least``/``greatest`` skip it."""
+    c = F.when(x > F.lit(hi), F.lit(hi))
+    if lo is not None:
+        c = c.when(x < F.lit(lo), F.lit(lo))
+    return c.otherwise(x)
+
+
+def clamp_sql(x: str, lo: int | float | None, hi: int | float) -> str:
+    """SQL twin of ``clamp``."""
+    low = f" WHEN {x} < {lo} THEN {lo}" if lo is not None else ""
+    return f"(CASE WHEN {x} > {hi} THEN {hi}{low} ELSE {x} END)"
+
+
 def cell_xy(lon: Column, lat: Column, g: int) -> tuple[Column, Column]:
     """Grid coordinates (cx, cy) at resolution g — pure Catalyst math."""
     n = F.lit(float(2**g))
-    cx = F.least(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(2**g - 1))
-    cy = F.least(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n), F.lit(2**g - 1))
-    cx = F.greatest(cx, F.lit(0)).cast("long")
-    cy = F.greatest(cy, F.lit(0)).cast("long")
-    return cx, cy
+    cx = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
+    cy = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n)
+    return (clamp(cx, 0, 2**g - 1).cast("long"),
+            clamp(cy, 0, 2**g - 1).cast("long"))
 
 
 def cell_id(lon: Column, lat: Column, g: int) -> Column:
@@ -70,8 +86,10 @@ def cell_id(lon: Column, lat: Column, g: int) -> Column:
 def cell_id_sql(lon: str, lat: str, g: int) -> str:
     """ANSI-SQL twin of cell_id (DuckDB-runnable) — keep in lockstep."""
     n = 2**g
-    cx = f"GREATEST(LEAST(CAST(FLOOR(({lon} + 180.0) / 360.0 * {n}.0) AS BIGINT), {n - 1}), 0)"
-    cy = f"GREATEST(LEAST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}.0) AS BIGINT), {n - 1}), 0)"
+    cx = clamp_sql(f"CAST(FLOOR(({lon} + 180.0) / 360.0 * {n}.0) AS BIGINT)",
+                   0, n - 1)
+    cy = clamp_sql(f"CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}.0) AS BIGINT)",
+                   0, n - 1)
     return f"({cy} * {n} + {cx})"
 
 
@@ -141,6 +159,33 @@ def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
         f" + COS(RADIANS({lat1})) * COS(RADIANS({lat2}))"
         f" * POW(SIN(RADIANS(({lon2}) - ({lon1})) / 2), 2))))"
     )
+
+
+# ---------------------------------------------------------------- Arrow encodes
+
+def arrow_cells(kernel, *cols: pa.Array) -> pa.Array:
+    """A cell encode's numpy ``kernel`` over the Arrow inputs of a scalar
+    Arrow UDF, NULL in → NULL out: only the rows where every input is
+    non-NULL and finite go through it, as float64 (int64 for integer
+    inputs: cell ids); every other row is NULL.  ``kernel`` returns one
+    value per row, or one list per row as (offsets, values)."""
+    arrs, ok = [], np.ones(len(cols[0]), dtype=bool)
+    for c in cols:
+        t = pa.int64() if pa.types.is_integer(c.type) else pa.float64()
+        a = pc.fill_null(pc.cast(c, t), 0).to_numpy()
+        ok &= c.is_valid().to_numpy(zero_copy_only=False) & np.isfinite(a)
+        arrs.append(a)
+    out = kernel(*(a[ok] for a in arrs))
+    if isinstance(out, tuple):
+        offs, vals = out
+        lens = np.zeros(len(ok), dtype=np.int64)
+        lens[ok] = np.diff(offs)
+        offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offs), pa.array(vals),
+                                        mask=pa.array(~ok))
+    full = np.zeros(len(ok), dtype=out.dtype)
+    full[ok] = out
+    return pa.array(full, mask=~ok)
 
 
 # ---------------------------------------------------------------- numpy twins (pytest oracles)

@@ -63,10 +63,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from p3_osm_transformer_spark.functions.geocell import arrow_cells
+from p3_osm_transformer_spark.functions.s2cell import _xyz
 
 MAX_RES = 15
 
@@ -178,14 +181,8 @@ def _np_hex_round(qf: np.ndarray, rf: np.ndarray):
 def np_hex_axial(lon: np.ndarray, lat: np.ndarray, res: int):
     """(face, q, r): integer axial coordinates at ``res`` on the owning
     face's lattice — the join key form of the cell id."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    phi = np.radians(lat)
-    theta = np.radians(lon)
-    cosphi = np.cos(phi)
-    x = cosphi * np.cos(theta)
-    y = cosphi * np.sin(theta)
-    z = np.sin(phi)
+    x, y, z = _xyz(np.asarray(lon, dtype=np.float64),
+                   np.asarray(lat, dtype=np.float64))
     face = np_face_of(x, y, z)
     c = FACE_CENTERS[face]
     exv = FACE_EX[face]
@@ -246,22 +243,12 @@ def np_hex_cellid(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     equality IS prefix equality (hex_parent below)."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    face, q, r = np_hex_axial(lon, lat, res)
-    cell = (face.astype(np.int64) << 49) | (res << 45)
-    unused = (1 << (3 * (MAX_RES - res))) - 1     # all-sevens tail
-    cell = cell | unused
-    digits, q0, r0 = _np_digits(q, r, res)
-    if (q0 != 0).any() or (r0 != 0).any():
+    cell, valid = _np_ids_from_axial(*np_hex_axial(lon, lat, res), res)
+    if not valid.all():
         # the S0 margin guarantees this never fires for argmax-owned
         # points (see _icosa_tables); a trip means the margin is wrong
         raise AssertionError("digit chain did not terminate at the "
                              "central res-0 hex")
-    for k, (dq, dr) in enumerate(digits):
-        d = _DIGIT_LUT[dq + 1, dr + 1]
-        if (d < 0).any():
-            raise AssertionError("residue outside digit table")
-        # digits come fine→coarse; digit index = res−k → shift (15−(res−k))·3
-        cell = cell | (d << (3 * (MAX_RES - res + k)))
     return cell
 
 
@@ -341,9 +328,11 @@ def _np_ids_from_axial(face: np.ndarray, q: np.ndarray, r: np.ndarray,
     return cell, valid
 
 
-def np_hex_kring(cell: np.ndarray, k: int, res: int) -> list:
-    """Seam-aware k-ring: per input cell, the DISTINCT (sorted) candidate
-    ids covering its radius-k axial disk — the union of
+def np_hex_kring(cell: np.ndarray, k: int,
+                 res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Seam-aware k-ring, flat: (offsets, ids) with ``ids[offsets[i]:
+    offsets[i + 1]]`` the DISTINCT (sorted) candidate ids covering cell
+    i's radius-k axial disk — the union of
 
     * the exact in-face lattice ids of the disk positions (where the
       integer digit chain terminates — always, for positions within the
@@ -366,74 +355,59 @@ def np_hex_kring(cell: np.ndarray, k: int, res: int) -> list:
     silently truncates at a seam, at the cost of a few extra candidates
     beside it."""
     cell = np.asarray(cell, dtype=np.int64)
-    face, q, r = np_hex_decode(cell, res)
-    offs = kring_offsets(k)
-    m = len(offs)
     n = len(cell)
-    faces = np.repeat(face, m)
-    qq = (q[:, None] + np.asarray([o[0] for o in offs])[None, :]).ravel()
-    rr = (r[:, None] + np.asarray([o[1] for o in offs])[None, :]).ravel()
+    face, q, r = np_hex_decode(cell, res)
+    faces, qq, rr, rows = _disk(face, q, r, np.arange(n), k)
     lattice_ids, valid = _np_ids_from_axial(faces, qq, rr, res)
-    lon, lat = np_hex_center(faces, qq, rr, res)
-    center_ids = np_hex_cellid(lon, lat, res)
+    center_ids = np_hex_cellid(*np_hex_center(faces, qq, rr, res), res)
     # seam-crossing samples: widen by the owner-face 1-disk (see docstring)
     foreign = ((center_ids >> 49) & 0x1F) != faces
-    extra_rows = np.empty(0, dtype=np.int64)
-    extra_ids = np.empty(0, dtype=np.int64)
-    if foreign.any():
-        rowidx = np.repeat(np.arange(n), m)[foreign]
-        f2, q2, r2 = np_hex_decode(center_ids[foreign], res)
-        offs1 = kring_offsets(1)
-        m1 = len(offs1)
-        f2r = np.repeat(f2, m1)
-        q2r = (q2[:, None] + np.asarray([o[0] for o in offs1])[None, :]).ravel()
-        r2r = (r2[:, None] + np.asarray([o[1] for o in offs1])[None, :]).ravel()
-        ids2, valid2 = _np_ids_from_axial(f2r, q2r, r2r, res)
-        extra_rows = np.repeat(rowidx, m1)[valid2]
-        extra_ids = ids2[valid2]
-    lattice_ids = lattice_ids.reshape(n, m)
-    valid = valid.reshape(n, m)
-    center_ids = center_ids.reshape(n, m)
-    out = []
-    for i, (row_l, row_v, row_c, c) in enumerate(
-            zip(lattice_ids, valid, center_ids, cell)):
-        parts = [row_l[row_v], row_c, [c]]
-        if len(extra_rows):
-            parts.append(extra_ids[extra_rows == i])
-        out.append(np.unique(np.concatenate(parts)))
-    return out
+    f2, q2, r2, rows2 = _disk(*np_hex_decode(center_ids[foreign], res),
+                              rows[foreign], 1)
+    seam_ids, valid2 = _np_ids_from_axial(f2, q2, r2, res)
+    row = np.concatenate([rows[valid], rows, rows2[valid2], np.arange(n)])
+    ids = np.concatenate([lattice_ids[valid], center_ids, seam_ids[valid2],
+                          cell])
+    order = np.lexsort((ids, row))
+    row, ids = row[order], ids[order]
+    keep = np.ones(len(ids), dtype=bool)
+    keep[1:] = (row[1:] != row[:-1]) | (ids[1:] != ids[:-1])
+    row, ids = row[keep], ids[keep]
+    return np.searchsorted(row, np.arange(n + 1)), ids
 
 
-def _hex_kring_udf(cell: pd.Series, k: pd.Series, res: pd.Series) -> pd.Series:
-    if not len(cell):
-        return pd.Series([], dtype=object)
-    kk = int(k.iloc[0])
-    rs = int(res.iloc[0])
-    return pd.Series([list(a) for a in
-                      np_hex_kring(cell.to_numpy(), kk, rs)])
+def _disk(face: np.ndarray, q: np.ndarray, r: np.ndarray, rows: np.ndarray,
+          k: int):
+    """(face, q, r, row) of every position of each cell's radius-k disk,
+    cell-major."""
+    dq, dr = np.asarray(kring_offsets(k)).T
+    m = len(dq)
+    return (np.repeat(face, m), (q[:, None] + dq).ravel(),
+            (r[:, None] + dr).ravel(), np.repeat(rows, m))
 
 
 def hex_kring(cell: Column, k: int, res: int) -> Column:
     """array<long> of the seam-aware k-ring of ``cell`` (ids at literal
     ``res``) — explode + equi-join against an indexed table's hex column
     is the hexcell ring-expansion access path (the spatial analogue of
-    the reference's Lucene index probe, JenaTextConfig.java:52-59)."""
-    return F.pandas_udf(_hex_kring_udf, T.ArrayType(T.LongType()))(
-        cell, F.lit(k), F.lit(res))
+    the reference's Lucene index probe, JenaTextConfig.java:52-59).  NULL
+    where ``cell`` is NULL."""
+    def _hex_kring_udf(cell: pa.Array) -> pa.Array:
+        return arrow_cells(lambda c: np_hex_kring(c, k, res), cell)
+
+    return F.arrow_udf(_hex_kring_udf, T.ArrayType(T.LongType()))(cell)
 
 
 # ------------------------------------------------------------ Spark API
 
-def _hex_cellid_udf(lon: pd.Series, lat: pd.Series,
-                    res: pd.Series) -> pd.Series:
-    rs = int(res.iloc[0]) if len(res) else 9
-    return pd.Series(np_hex_cellid(lon.to_numpy(), lat.to_numpy(), rs))
-
-
 def hex_cellid(lon: Column, lat: Column, res: int = 9) -> Column:
-    """Column of aperture-7 hexcell ids at ``res`` (Arrow-batched numpy:
-    the whole encode is ~40 vectorized kernel passes per batch)."""
-    return F.pandas_udf(_hex_cellid_udf, T.LongType())(lon, lat, F.lit(res))
+    """Column of aperture-7 hexcell ids at ``res`` (a scalar Arrow UDF
+    over ``np_hex_cellid``: ~40 vectorized kernel passes per batch); NULL
+    where lon or lat is NULL or not finite."""
+    def _hex_cellid_udf(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        return arrow_cells(lambda x, y: np_hex_cellid(x, y, res), lon, lat)
+
+    return F.arrow_udf(_hex_cellid_udf, T.LongType())(lon, lat)
 
 
 def hex_res(cell: Column) -> Column:

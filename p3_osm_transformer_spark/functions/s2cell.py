@@ -38,10 +38,12 @@ apart from functions/geocell.py (H3-alias grid) and functions/s2z.py
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from p3_osm_transformer_spark.functions.geocell import arrow_cells
 
 MAX_LEVEL = 30
 _LOOKUP_BITS = 4
@@ -88,30 +90,32 @@ def _xyz(lon: np.ndarray, lat: np.ndarray):
     return cosphi * np.cos(theta), cosphi * np.sin(theta), np.sin(phi)
 
 
-def np_face_uv(x: np.ndarray, y: np.ndarray, z: np.ndarray):
-    """XYZ → (face, u, v) with the spec's strict-greater tie rule
-    (largest |component|; ties resolve x→2? no: ax > ay else branch —
-    exactly the reference's nested strict comparisons)."""
+def np_face(x: np.ndarray, y: np.ndarray, z: np.ndarray,
+            beats=np.greater) -> np.ndarray:
+    """Cube face of each XYZ: the axis of the largest |component|, +3
+    where that component is negative.  ``beats`` is the tie rule of the
+    nested comparisons; the spec's strict ``>`` gives a tie to the later
+    axis (|x| = |y| > |z| is face 1)."""
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
-    face = np.where(ax > ay,
-                    np.where(ax > az, 0, 2),
-                    np.where(ay > az, 1, 2))
-    major = np.choose(face, [x, y, z])
-    face = np.where(major < 0, face + 3, face)
-    u = np.empty_like(x)
-    v = np.empty_like(x)
-    for f, (uf, vf) in enumerate((
-            (lambda: y / x, lambda: z / x),      # face 0 (+x)
-            (lambda: -x / y, lambda: z / y),     # face 1 (+y)
-            (lambda: -x / z, lambda: -y / z),    # face 2 (+z)
-            (lambda: z / x, lambda: y / x),      # face 3 (−x)
-            (lambda: z / y, lambda: -x / y),     # face 4 (−y)
-            (lambda: -y / z, lambda: -x / z))):  # face 5 (−z)
+    axis = np.where(beats(ax, ay), np.where(beats(ax, az), 0, 2),
+                    np.where(beats(ay, az), 1, 2))
+    return np.where(np.choose(axis, [x, y, z]) < 0, axis + 3,
+                    axis).astype(np.int64)
+
+
+def np_face_uv(face: np.ndarray, x: np.ndarray, y: np.ndarray,
+               z: np.ndarray):
+    """Gnomonic (u, v) of each XYZ on its cube ``face`` (spec formulas)."""
+    u, v = np.empty_like(x), np.empty_like(x)
+    for f, uv in enumerate((lambda x, y, z: (y / x, z / x),     # +x
+                            lambda x, y, z: (-x / y, z / y),    # +y
+                            lambda x, y, z: (-x / z, -y / z),   # +z
+                            lambda x, y, z: (z / x, y / x),     # −x
+                            lambda x, y, z: (z / y, -x / y),    # −y
+                            lambda x, y, z: (-y / z, -x / z))):  # −z
         m = face == f
-        if m.any():
-            with np.errstate(divide="ignore", invalid="ignore"):
-                u[m], v[m] = uf()[m], vf()[m]
-    return face.astype(np.int64), u, v
+        u[m], v[m] = uv(x[m], y[m], z[m])
+    return u, v
 
 
 def np_st_from_uv(u: np.ndarray) -> np.ndarray:
@@ -124,7 +128,8 @@ def np_st_from_uv(u: np.ndarray) -> np.ndarray:
 def np_ij_from_lonlat(lon: np.ndarray, lat: np.ndarray):
     """(face, i, j) at leaf (2^30) resolution."""
     x, y, z = _xyz(np.asarray(lon, float), np.asarray(lat, float))
-    face, u, v = np_face_uv(x, y, z)
+    face = np_face(x, y, z)
+    u, v = np_face_uv(face, x, y, z)
     n = 1 << MAX_LEVEL
     i = np.clip(np.floor(np_st_from_uv(u) * n), 0, n - 1).astype(np.uint64)
     j = np.clip(np.floor(np_st_from_uv(v) * n), 0, n - 1).astype(np.uint64)
@@ -186,15 +191,13 @@ def np_s2_parent(ids: np.ndarray, level: int) -> np.ndarray:
     return ((u & ~(lsb - np.uint64(1))) | lsb).view(np.int64)
 
 
-def _s2_cellid_udf(lon: pd.Series, lat: pd.Series,
-                   level: pd.Series) -> pd.Series:
-    lv = int(level.iloc[0]) if len(level) else MAX_LEVEL
-    return pd.Series(np_s2_cellid(lon.to_numpy(), lat.to_numpy(), lv))
-
-
 def s2_cellid(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
-    """Column of true S2 cell ids at ``level`` (Arrow-batched)."""
-    return F.pandas_udf(_s2_cellid_udf, T.LongType())(lon, lat, F.lit(level))
+    """Column of true S2 cell ids at ``level`` (a scalar Arrow UDF over
+    ``np_s2_cellid``); NULL where lon or lat is NULL or not finite."""
+    def _s2_cellid_udf(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        return arrow_cells(lambda x, y: np_s2_cellid(x, y, level), lon, lat)
+
+    return F.arrow_udf(_s2_cellid_udf, T.LongType())(lon, lat)
 
 
 def s2_parent(cell: Column, level: int) -> Column:

@@ -9,7 +9,8 @@ public formula (OSM wiki "Slippy map tilenames"):
 
 ``asinh(tan(x))`` is written ``ln(tan(x) + 1/cos(x))`` so the identical
 expression runs in Spark SQL and DuckDB (the oracle twin).  Latitude is
-clamped to the Web-Mercator limit ±85.05113°.
+clamped to the Web-Mercator limit ±85.05113°.  A NULL lon or lat gives a
+NULL tile (``geocell.clamp``: ``least``/``greatest`` would skip it).
 """
 
 from __future__ import annotations
@@ -18,18 +19,18 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from p3_osm_transformer_spark.functions.geocell import clamp, clamp_sql
+
 MERC_LAT_LIMIT = 85.05112878
 
 
 def tile_xy(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
     n = F.lit(float(2**z))
-    lat_c = F.greatest(F.least(lat, F.lit(MERC_LAT_LIMIT)), F.lit(-MERC_LAT_LIMIT))
-    lat_r = F.radians(lat_c)
-    tx = F.least(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), F.lit(2**z - 1))
+    lat_r = F.radians(clamp(lat, -MERC_LAT_LIMIT, MERC_LAT_LIMIT))
+    tx = clamp(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n), None, 2**z - 1)
     merc = F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r))
     ty = F.floor((F.lit(1.0) - merc / F.lit(float(np.pi))) / F.lit(2.0) * n)
-    ty = F.greatest(F.least(ty, F.lit(2**z - 1)), F.lit(0))
-    return tx.cast("long"), ty.cast("long")
+    return tx.cast("long"), clamp(ty, 0, 2**z - 1).cast("long")
 
 
 def tile_id(lon: Column, lat: Column, z: int) -> Column:
@@ -40,12 +41,12 @@ def tile_id(lon: Column, lat: Column, z: int) -> Column:
 
 def tile_id_sql(lon: str, lat: str, z: int) -> str:
     n = 2**z
-    lat_c = f"GREATEST(LEAST({lat}, {MERC_LAT_LIMIT}), {-MERC_LAT_LIMIT})"
-    lat_r = f"RADIANS({lat_c})"
-    tx = f"LEAST(CAST(FLOOR(({lon} + 180.0) / 360.0 * {n}.0) AS BIGINT), {n - 1})"
+    lat_r = f"RADIANS({clamp_sql(lat, -MERC_LAT_LIMIT, MERC_LAT_LIMIT)})"
+    tx = clamp_sql(f"CAST(FLOOR(({lon} + 180.0) / 360.0 * {n}.0) AS BIGINT)",
+                   None, n - 1)
     merc = f"LN(TAN({lat_r}) + 1.0 / COS({lat_r}))"
-    ty = (f"GREATEST(LEAST(CAST(FLOOR((1.0 - {merc} / PI()) / 2.0 * {n}.0) AS BIGINT),"
-          f" {n - 1}), 0)")
+    ty = clamp_sql(f"CAST(FLOOR((1.0 - {merc} / PI()) / 2.0 * {n}.0) AS BIGINT)",
+                   0, n - 1)
     return f"({ty} * {n} + {tx})"
 
 

@@ -27,10 +27,10 @@ Two plans, one contract — (query_id, neighbor_id, cos_sim, rank):
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
@@ -479,18 +479,23 @@ def train_centroids_np(sample_vecs, n_centroids: int = 16,
 
 
 def _centroid_topn_udf(centroids, n_probe: int):
-    """pandas_udf: embedding → array of its n_probe nearest centroid ids."""
+    """Scalar Arrow UDF: embedding → array of its n_probe nearest centroid
+    ids; NULL for a NULL row or one of another length than the
+    centroids', which so joins no list."""
     c = np.asarray(centroids, dtype=np.float64)
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe(emb: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sims = m @ c.T
-        top = np.argsort(-sims, axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in top])
+    def probe(emb: pa.Array) -> pa.Array:
+        f = _flat_block(emb, c.shape[1])
+        m = f.block / np.maximum(
+            np.linalg.norm(f.block, axis=1, keepdims=True), 1e-12)
+        top = np.argsort(-(m @ c.T), axis=1)[:, :n_probe].astype(np.int32)
+        full = f.lens == c.shape[1]
+        offs = np.concatenate([[0], np.cumsum(full * top.shape[1])])
+        return pa.ListArray.from_arrays(pa.array(offs.astype(np.int32)),
+                                        pa.array(top.ravel()),
+                                        mask=pa.array(~full))
 
-    return probe
+    return F.arrow_udf(probe, T.ArrayType(T.IntegerType()))
 
 
 def cosine_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -522,6 +527,11 @@ def cosine_topk_ivf(queries: DataFrame, corpus: DataFrame, k: int = 10,
     sample = [r["embedding"] for r in
               corpus.select(F.col(c_id), "embedding")
                     .orderBy(c_id).limit(sample_cap).collect()]
+    # train on the sample's most common length: a NULL or other-length
+    # row gets no centroid list (the probe UDF gives it NULL)
+    lens = Counter(len(v) for v in sample if v is not None)
+    dim = lens.most_common(1)[0][0] if lens else 0
+    sample = [v for v in sample if v is not None and len(v) == dim]
     cents = train_centroids_np(sample, min(n_centroids, max(len(sample), 1)))
 
     assign1 = _centroid_topn_udf(cents, 1)

@@ -33,12 +33,12 @@ def assign_tiles(df: DataFrame, zooms: tuple[int, ...] = (12, 15),
     """Slippy tiles + geocell columns (pure codegen); optionally true S2
     cell ids (functions/s2cell.py) as ``s2_{level}`` columns and
     icosahedral aperture-7 hexcells (functions/hexcell.py) as
-    ``hex_{res}`` columns — both Arrow-batched numpy.  The Python-backed
-    families are opt-in so codegen-only callers (the headline bench
-    stage, PIP pre-filters) keep a Python-free plan; the flagship enrich
-    pipeline turns them on — one pandas_udf evaluation per level, then
-    all downstream rollup/containment algebra (s2_parent/hex_parent/
-    hex_axial) stays in Catalyst."""
+    ``hex_{res}`` columns — both scalar Arrow UDFs over numpy.  The
+    Python-backed families are opt-in so codegen-only callers (the
+    headline bench stage, PIP pre-filters) keep a Python-free plan; the
+    flagship enrich pipeline turns them on — one Arrow UDF evaluation
+    per level, then all downstream rollup/containment algebra
+    (s2_parent/hex_parent/hex_axial) stays in Catalyst."""
     out = with_cells(df, "lon", "lat", cell_resolutions)
     for z in zooms:
         out = out.withColumn(f"tile_z{z}", tile_id(F.col("lon"), F.col("lat"), z))

@@ -17,11 +17,19 @@ bench, driver contract) runs with the same scale-oriented defaults:
   path (``worker_confs``).  Only local masters: the daemon is loaded from
   the driver's copy of the package, which only there is on the workers'
   filesystem; other masters keep Spark's default daemon.
+- on ``local[...]`` masters, ``file:`` paths through
+  ``jvm/NioLocalFileSystem.java`` (``local_fs_confs``): without Hadoop's
+  native library the stock local filesystem forks a ``chmod`` from the
+  driver JVM for every directory and file a write creates.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -58,15 +66,8 @@ _ENGINE_CONFS: dict[str, str] = {
 # warehouse out of the repo checkout.  User+PID-scoped so concurrent runs
 # (or different users on a shared host) never rmtree each other's bucketed
 # tables mid-test.
-import getpass  # noqa: E402
-import tempfile  # noqa: E402
-
-try:
-    _USER = getpass.getuser()
-except (KeyError, OSError):
-    _USER = "anon"
 _ENGINE_CONFS["spark.sql.warehouse.dir"] = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_warehouse_{_USER}_{os.getpid()}")
+    tempfile.gettempdir(), f"spark_graft_warehouse_{os.getuid()}_{os.getpid()}")
 
 
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,6 +83,38 @@ def worker_confs(master: str, pythonpath: str | None = None) -> dict[str, str]:
     path = os.pathsep.join(p for p in (_PKG_PARENT, pythonpath) if p)
     return {"spark.python.daemon.module": "p3_osm_transformer_spark.pyworker",
             "spark.executorEnv.PYTHONPATH": path}
+
+
+_LOCAL_FS = "p3_osm_transformer_spark.jvm.NioLocalFileSystem"
+
+
+def local_fs_confs(master: str, classpath: str | None = None) -> dict[str, str]:
+    """``file:`` paths through ``_LOCAL_FS`` on a local master, compiled by
+    javac on first use into the temp directory, ahead of the driver
+    ``classpath``.  Empty for other masters, without javac, and once a
+    driver JVM runs: its classpath is fixed, and a JVM these confs
+    launched keeps them for every later SparkContext."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+    if (master != "local" and not master.startswith("local[")
+            or SparkContext._jvm is not None or "PYSPARK_GATEWAY_PORT" in os.environ):
+        return {}
+    src = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+    out = os.path.join(tempfile.gettempdir(), f"p3osm_jvm_{os.stat(src).st_mtime_ns}")
+    if not os.path.isdir(out):              # compile, then rename into place
+        jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-*.jar"))
+        tmp = tempfile.mkdtemp(prefix="p3osm_jvm_build_")
+        try:
+            subprocess.run(["javac", "-nowarn", "-cp", os.pathsep.join(jars),
+                            "-d", tmp, src], check=True, capture_output=True)
+            os.rename(tmp, out)
+        except (OSError, subprocess.CalledProcessError):   # or lost a race
+            shutil.rmtree(tmp, ignore_errors=True)
+    if not os.path.isdir(out):
+        return {}
+    return {"spark.hadoop.fs.file.impl": _LOCAL_FS,
+            "spark.driver.extraClassPath": os.pathsep.join(
+                p for p in (out, classpath) if p)}
 
 
 def get_spark(
@@ -111,6 +144,7 @@ def get_spark(
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     confs = {**_ENGINE_CONFS, **(extra_confs or {})}
     confs.update(worker_confs(master, confs.get("spark.executorEnv.PYTHONPATH")))
+    confs.update(local_fs_confs(master, confs.get("spark.driver.extraClassPath")))
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

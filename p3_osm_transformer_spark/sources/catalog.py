@@ -85,9 +85,10 @@ def _t_geocell(res: int):
 
 def _t_s2(level: int):
     """True-S2 layout key (functions/s2cell.py) — the north star's
-    's2_12'-family cell id as a hidden partition column.  Arrow-batched
-    pandas UDF: one Python exchange at WRITE time only; readers prune on
-    the directory values without ever evaluating it."""
+    's2_12'-family cell id as a hidden partition column.  Scalar Arrow
+    UDF: one Python exchange at WRITE time only; readers prune on the
+    directory values without ever evaluating it.  A row with a NULL
+    lat or lon partitions under NULL."""
     def t(cols: list[str]) -> Column:
         from p3_osm_transformer_spark.functions.s2cell import s2_cellid
         lat, lon = cols

@@ -317,3 +317,22 @@ def test_s2_and_hexcell_partition_transforms(spark, tmp_path):
         got = {r.pid for r in pruned.filter(
             (F.col("lat") == -55.0) & (F.col("lon") == 20.0)).collect()}
         assert want and want == got
+
+
+def test_null_coordinates_partition_as_null(spark, tmp_path):
+    """A row with NULL lat/lon writes under an s2[4] or hexcell[3] spec:
+    the write succeeds, the read-back keeps every row, and the NULL row's
+    partition value is NULL (not a bogus face-2 cell, not a failed
+    task)."""
+    cat = Catalog(str(tmp_path))
+    df = _pts(spark, 40).unionByName(spark.createDataFrame(
+        [(-1, None, None, 0)], "pid long, lon double, lat double, v long"))
+    for tname, table in (("s2[4]", "null_s2"), ("hexcell[3]", "null_hex")):
+        spec = {"cell": {"transform": tname, "source": ["lat", "lon"]}}
+        snap = cat.write_snapshot(df, table, partition_spec=spec)
+        assert cat.read(spark, table).count() == 41
+        raw = spark.read.parquet(os.path.join(str(tmp_path), table,
+                                              f"snap-{snap}"))
+        cells = {r.pid: r._p_cell for r in raw.collect()}
+        assert cells[-1] is None
+        assert all(c is not None for p, c in cells.items() if p != -1)

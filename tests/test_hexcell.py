@@ -16,6 +16,12 @@ from pyspark.sql import functions as F
 from p3_osm_transformer_spark.functions import hexcell as H
 
 
+def _rings(ids, k: int, res: int) -> list:
+    """np_hex_kring's flat (offsets, ids) as one array per cell."""
+    offs, vals = H.np_hex_kring(ids, k, res)
+    return np.split(vals, offs[1:-1])
+
+
 def _pts(n: int, seed: int = 7):
     rng = np.random.RandomState(seed)
     lon = rng.uniform(-180, 180, n)
@@ -150,16 +156,27 @@ def test_res1_uses_all_seven_children():
 # ------------------------------------------------------------ Spark API
 
 def test_spark_udf_matches_numpy_and_catalyst_algebra(spark):
+    """Plus NULL in → NULL out: a NULL or non-finite coordinate gives a
+    NULL id and NULL algebra, never a task failure."""
     df = spark.range(0, 3000).select(
         (F.col("id") * 37 % 360 - 180 + 0.25).alias("lon"),
         (F.col("id") * 17 % 170 - 85 + 0.125).alias("lat"),
         F.col("id"))
-    out = (df.select("id", "lon", "lat",
-                     H.hex_cellid(F.col("lon"), F.col("lat"), 9).alias("h"))
+    bad = spark.createDataFrame(
+        [(None, 1.0, -1), (2.0, None, -2), (float("nan"), 3.0, -3),
+         (4.0, float("inf"), -4)], "lon double, lat double, id long")
+    out = (df.unionByName(bad)
+           .select("id", "lon", "lat",
+                   H.hex_cellid(F.col("lon"), F.col("lat"), 9).alias("h"))
            .withColumn("par", H.hex_parent(F.col("h"), 7))
            .withColumn("res", H.hex_res("h"))
            .withColumn("face", H.hex_face("h"))
            .withColumn("ax", H.hex_axial(F.col("h"), 9))).collect()
+    nulls = [r for r in out if r.id < 0]
+    assert len(nulls) == 4
+    assert all(r.h is None and r.par is None and r.res is None
+               for r in nulls)
+    out = sorted((r for r in out if r.id >= 0), key=lambda r: r.id)
     lon = np.array([r.lon for r in out])
     lat = np.array([r.lat for r in out])
     ids = H.np_hex_cellid(lon, lat, 9)
@@ -230,7 +247,7 @@ def test_kring_exact_in_face():
     for res, k in ((4, 1), (6, 2), (9, 3)):
         ids = H.np_hex_cellid(lon, lat, res)
         f, _, _ = H.np_hex_decode(ids, res)
-        rings = H.np_hex_kring(ids, k, res)
+        rings = _rings(ids, k, res)
         n_onface = 0
         for c, face, ring in zip(ids, f, rings):
             assert c in set(ring)                      # self-inclusion
@@ -261,7 +278,7 @@ def test_kring_covers_neighbor_cells_across_seams():
             np.cos(np.radians(lat)), 0.2)
         lat2 = np.clip(lat + dd * np.sin(ang), -90, 90)
         ids2 = H.np_hex_cellid(lon2, lat2, res)
-        rings = H.np_hex_kring(ids, 1, res)
+        rings = _rings(ids, 1, res)
         missed_same, missed_cross, n_cross = 0, 0, 0
         for c2, face, ring in zip(ids2, f, rings):
             cross = ((c2 >> 49) & 0x1F) != face
@@ -275,15 +292,27 @@ def test_kring_covers_neighbor_cells_across_seams():
 
 
 def test_kring_spark_udf_matches_numpy(spark):
+    """Plus NULL in → NULL out: a NULL or non-finite coordinate gives a
+    NULL cell and a NULL ring; a NULL cell itself a NULL ring."""
     df = spark.range(0, 400).select(
         (F.col("id") * 37 % 360 - 180 + 0.25).alias("lon"),
         (F.col("id") * 17 % 170 - 85 + 0.125).alias("lat"), "id")
-    out = (df.select("id", "lon", "lat",
-                     H.hex_cellid(F.col("lon"), F.col("lat"), 6).alias("h"))
+    bad = spark.createDataFrame(
+        [(None, 1.0, -1), (2.0, None, -2), (float("nan"), 3.0, -3),
+         (float("-inf"), 4.0, -4)], "lon double, lat double, id long")
+    out = (df.unionByName(bad)
+           .select("id", "lon", "lat",
+                   H.hex_cellid(F.col("lon"), F.col("lat"), 6).alias("h"))
            .withColumn("ring", H.hex_kring(F.col("h"), 2, 6))
            .orderBy("id").collect())
+    assert [(r.h, r.ring) for r in out[:4]] == [(None, None)] * 4
+    out = out[4:]
     ids = H.np_hex_cellid(np.array([r.lon for r in out]),
                           np.array([r.lat for r in out]), 6)
-    rings = H.np_hex_kring(ids, 2, 6)
+    rings = _rings(ids, 2, 6)
     for r, want in zip(out, rings):
         assert list(r.ring) == list(want)
+    cells = spark.createDataFrame([(int(ids[0]),), (None,)], "h long")
+    got = [r.ring for r in cells.select(H.hex_kring(F.col("h"), 2, 6)
+                                        .alias("ring")).collect()]
+    assert sorted(got, key=lambda g: g is None) == [list(rings[0]), None]

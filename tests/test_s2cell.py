@@ -24,7 +24,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from p3_osm_transformer_spark.functions import s2cell
+from p3_osm_transformer_spark.functions import s2cell, s2z
 from p3_osm_transformer_spark.functions.s2cell import (
     IJ_TO_POS, MAX_LEVEL, POS_TO_ORIENTATION, SWAP_MASK,
     np_ij_from_lonlat, np_s2_cellid, np_s2_level, np_s2_parent,
@@ -138,11 +138,26 @@ def test_hilbert_adjacency_within_face():
         assert abs(i0 - i1) + abs(j0 - j1) == 1, pos
 
 
+def test_face_tie_rules_stay_apart(monkeypatch):
+    """s2z borrows S2's projection but not its tie rule: on an exact
+    |x| = |y| tie S2's strict comparisons pick face 1, s2z's ``>=`` face
+    0."""
+    def tie(lon, lat):
+        return np.array([0.6]), np.array([0.6]), np.array([0.5])
+    monkeypatch.setattr(s2cell, "_xyz", tie)
+    monkeypatch.setattr(s2z, "_xyz", tie)
+    assert int(np_ij_from_lonlat([0.0], [0.0])[0][0]) == 1
+    assert int(s2z.np_s2z_cell([0.0], [0.0], 8)[0]) >> 58 == 0
+
+
 def test_spark_column_and_catalyst_algebra(spark):
+    """Plus NULL in → NULL out: a NULL or non-finite coordinate gives a
+    NULL id (and NULL algebra), not a face-2 id."""
     import pyspark.sql.functions as F
     df = spark.createDataFrame(
         [(1, 11.57, 48.13), (2, -73.98, 40.75), (3, 139.69, 35.68),
-         (4, 151.21, -33.86), (5, -58.38, -34.60)],
+         (4, 151.21, -33.86), (5, -58.38, -34.60), (6, None, 10.0),
+         (7, 10.0, None), (8, float("nan"), 10.0), (9, 10.0, float("inf"))],
         "id long, lon double, lat double")
     out = (df.select(
         "id", "lon", "lat",
@@ -153,6 +168,9 @@ def test_spark_column_and_catalyst_algebra(spark):
         .withColumn("lo", s2cell.s2_range_min(F.col("par")))
         .withColumn("hi", s2cell.s2_range_max(F.col("par"))))
     rows = {r["id"]: r for r in out.collect()}
+    for rid in (6, 7, 8, 9):
+        r = rows.pop(rid)
+        assert r["cell"] is None and r["lvl"] is None and r["par"] is None
     for rid, r in rows.items():
         want = _s2_cellid_walk(r["lon"], r["lat"], 12)
         assert r["cell"] == want
@@ -168,3 +186,16 @@ def test_spark_column_and_catalyst_algebra(spark):
         # signed compare is valid here because parent and child share the
         # face (bit 63 equal → signed order == unsigned order)
         assert r["lo"] <= r["cell"] <= r["hi"]
+
+
+def test_s2z_spark_udf_matches_numpy(spark):
+    import pyspark.sql.functions as F
+    lon = [11.57, -73.98, 139.69, 151.21, -58.38, 0.0, 180.0, None, 1.0]
+    lat = [48.13, 40.75, 35.68, -33.86, -34.60, 90.0, -90.0, 1.0, math.nan]
+    df = spark.createDataFrame(list(zip(range(9), lon, lat)),
+                               "id long, lon double, lat double")
+    got = [r.z for r in df.select(
+        "id", s2z.s2z_cell(F.col("lon"), F.col("lat"), 12).alias("z"))
+        .orderBy("id").collect()]
+    want = s2z.np_s2z_cell(np.array(lon[:7]), np.array(lat[:7]), 12)
+    assert got == [int(v) for v in want] + [None, None]

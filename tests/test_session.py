@@ -1,10 +1,11 @@
 """Engine session settings that outlive one query: the generated-class
-cache holds a query's working set, and the package's pandas UDFs follow
-the SparkContext they run in."""
+cache holds a query's working set, the package's pandas UDFs follow the
+SparkContext they run in, and local writes fork no ``chmod``."""
 
 from __future__ import annotations
 
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -102,3 +103,63 @@ def test_udfs_report_to_a_later_session():
     assert "Failed to update accumulator" not in out.stderr
     assert "(_s2_cellid_udf)" in out.stdout
     assert "(_hex_cellid_udf)" in out.stdout
+
+
+def test_local_fs_sets_permissions_without_chmod(spark, tmp_path):
+    # the session's file: filesystem maps each permission bit as chmod did
+    from p3_osm_transformer_spark.session import _LOCAL_FS
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == _LOCAL_FS
+    for mode in ("750", "604", "777", "000", "421"):
+        d = tmp_path / f"d{mode}"
+        f = tmp_path / f"f{mode}"
+        assert fs.mkdirs(jvm.org.apache.hadoop.fs.Path(str(d)))
+        fs.create(jvm.org.apache.hadoop.fs.Path(str(f))).close()
+        for p in (d, f):
+            fs.setPermission(jvm.org.apache.hadoop.fs.Path(str(p)),
+                             jvm.org.apache.hadoop.fs.permission.FsPermission(mode))
+            assert stat.S_IMODE(os.stat(p).st_mode) == int(mode, 8), (p, mode)
+
+
+_LOGGED_CHMOD = textwrap.dedent("""
+    import os, stat, sys
+    from p3_osm_transformer_spark.session import get_spark
+    for run in ("t", "u"):      # a second session in the same JVM too
+        spark = get_spark(master="local[2]")
+        out = os.path.join(sys.argv[1], run)
+        spark.range(100).repartition(3).write.parquet(out)
+        assert spark.read.parquet(out).count() == 100
+        spark.stop()
+    for dp, ds, fs in os.walk(os.path.join(sys.argv[1], "u")):
+        for n in ds + fs:
+            mode = stat.S_IMODE(os.stat(os.path.join(dp, n)).st_mode)
+            print(oct(mode), n)
+""")
+
+
+def test_local_write_forks_no_chmod(tmp_path):
+    # Without Hadoop's native library the stock local filesystem forked a
+    # chmod from the driver JVM per directory and file a write created (34
+    # per perfbench enrich_full job).  A chmod first on PATH logs any call.
+    shim = tmp_path / "bin"
+    shim.mkdir()
+    log = tmp_path / "chmod.log"
+    real = subprocess.run(["sh", "-c", "command -v chmod"], capture_output=True,
+                          text=True).stdout.strip()
+    (shim / "chmod").write_text(f'#!/bin/sh\necho "$@" >> {log}\nexec {real} "$@"\n')
+    os.chmod(shim / "chmod", 0o755)
+    path = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    env = {**os.environ, "PYTHONPATH": path,
+           "PATH": f"{shim}{os.pathsep}{os.environ['PATH']}"}
+    out = subprocess.run([sys.executable, "-c", _LOGGED_CHMOD, str(tmp_path)],
+                         capture_output=True, text=True, timeout=300,
+                         cwd=ROOT, env=env)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert not log.exists(), log.read_text()[:2000]
+    modes = dict(line.split(" ", 1)[::-1] for line in out.stdout.splitlines())
+    assert modes["_SUCCESS"] == "0o644" and modes["._SUCCESS.crc"] == "0o644"
+    parts = [n for n in modes if n.startswith("part-")]
+    assert len(parts) == 3 and all(modes[n] == "0o644" for n in parts)
+    assert all(("." + n + ".crc") in modes for n in parts)

@@ -48,6 +48,32 @@ def test_tile_id_matches_numpy(spark):
     assert (got == want).all()
 
 
+def test_null_coordinate_gives_null_cell_and_tile(spark):
+    """A NULL lon or lat gives a NULL geocell and tile id, in Catalyst and
+    in the DuckDB SQL twins alike — not the clamped corner cell (``least``
+    and ``greatest`` skip NULLs in both engines)."""
+    import duckdb
+    rows = [(1, None, 10.0), (2, 10.0, None), (3, 10.0, 20.0)]
+    df = spark.createDataFrame(rows, "id long, lon double, lat double")
+    out = {r.id: r for r in geocell.with_cells(df).select(
+        "id", "cell_r7", "cell_r10",
+        geocell.cell_id(F.col("lon"), F.col("lat"), 15).alias("c"),
+        tiles.tile_id(F.col("lon"), F.col("lat"), 12).alias("t")).collect()}
+    sql = duckdb.sql(
+        f"SELECT id, {geocell.cell_id_sql('lon', 'lat', 15)} AS c, "
+        f"{tiles.tile_id_sql('lon', 'lat', 12)} AS t FROM (VALUES "
+        "(1, NULL::DOUBLE, 10.0::DOUBLE), (2, 10.0, NULL), (3, 10.0, 20.0)) "
+        "v(id, lon, lat) ORDER BY id").fetchall()
+    for rid in (1, 2):
+        assert (out[rid].cell_r7, out[rid].cell_r10, out[rid].c,
+                out[rid].t) == (None,) * 4
+        assert sql[rid - 1][1:] == (None, None)
+    lon, lat = np.array([10.0]), np.array([20.0])
+    want = (int(geocell.np_cell_id(lon, lat, 15)[0]),
+            int(tiles.np_tile_id(lon, lat, 12)[0]))
+    assert (out[3].c, out[3].t) == want == sql[2][1:]
+
+
 def test_haversine_sanity(spark):
     # Paris → Berlin ≈ 877 km (public reference value)
     df = spark.createDataFrame([(2.3522, 48.8566, 13.4050, 52.5200)],

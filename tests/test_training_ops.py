@@ -130,6 +130,16 @@ def test_cosine_topk_ivf_planted(spark):
     exact = simsearch.cosine_topk_brute(q, c, k=1)
     ivf = simsearch.cosine_topk_ivf(q, c, k=1, n_centroids=8, n_probe=3)
     assert simsearch.lsh_recall(exact, ivf) >= 0.9
+    # a NULL or other-length embedding, on either side, probes and fills
+    # no list: it joins nothing and fails no task
+    bad = spark.createDataFrame([(-2, None), (-1, [1.0, 2.0])],
+                                "vec_id long, embedding array<float>")
+    ivf2 = simsearch.cosine_topk_ivf(
+        q.unionByName(bad.withColumnRenamed("vec_id", "query_id")),
+        c.unionByName(bad.withColumnRenamed("vec_id", "neighbor_id")),
+        k=1, n_centroids=8, n_probe=3)
+    assert sorted(map(tuple, ivf2.collect())) == \
+        sorted(map(tuple, ivf.collect()))
 
 
 def test_cosine_near_dup_planted(spark):

@@ -266,6 +266,33 @@ def main() -> None:
           must_not=["hashpartitioning(neighbor_id", "Join",
                     "CartesianProduct", "BatchEvalPython", "MapInPandas"])
 
+    # 10. cell encodes: each S2/hexcell encode and the hexcell k-ring is
+    # a scalar Arrow UDF (ArrowEvalPython eval type 250, not the pandas
+    # 200) over its coordinate or cell columns only — level, res and k
+    # are constants of the UDF, never literal columns shipped per row.
+    from p3_osm_transformer_spark.functions.hexcell import (
+        hex_cellid, hex_kring)
+    hexed = kpts.withColumn("_cell", hex_cellid(F.col("lon"), F.col("lat"), 9))
+    for name, df, calls in (
+            ("assign_tiles s2/hex encodes (scalar Arrow UDFs)",
+             assign_tiles(kpts, s2_levels=(12,), hex_resolutions=(9,)),
+             ["_s2_cellid_udf(lon, lat)", "_hex_cellid_udf(lon, lat)"]),
+            ("knn_hex round probe (scalar Arrow UDFs)",
+             hexed.withColumn("probe_cell", F.explode(
+                 hex_kring(F.col("_cell"), 1, 9))),
+             ["_hex_cellid_udf(lon, lat)", "_hex_kring_udf(_cell"])):
+        p = plan_of(df)
+        args = re.findall(r"\(\d+\) ArrowEvalPython\n.*\nArguments: (.*), (\d+)\n",
+                          p)
+        udf_args = re.findall(r"_udf\(([^()]*)\)", " ".join(a for a, _ in args))
+        ok = (bool(args) and all(t == "250" for _, t in args)
+              and all(c in p for c in calls)
+              and not any(re.search(r"\b\d", a) for a in udf_args))
+        checks.append((name, p, ["ArrowEvalPython eval type 250"] + calls,
+                       ["eval type 200 (pandas)", "a literal UDF argument"]))
+        print(f"{name}: {'OK' if ok else 'VIOLATION'} "
+              f"(ArrowEvalPython eval types={[t for _, t in args]})")
+
     # write PLANS.md digest
     out = ["# PLANS.md — audited physical plans",
            "",
