@@ -4,22 +4,24 @@ Five dedup strategies over a (doc_id, text) corpus — built-in-function
 DataFrame pipelines except where noted:
 
 * exact          — md5(normalized text) hash-groupBy.
-* minhash LSH    — shingle → per-seed min-hash → band → bucket self-join.
+* minhash LSH    — shingle → per-seed min-hash → band → bucket pairs.
                    Portable construction (md5-prefix base hash, (a·x+b)
                    mod p family) so the DuckDB oracle can replay
                    signatures exactly.  ``dedup_near`` computes the
                    signatures in one Arrow ``mapInArrow`` pass.
 * simhash        — sign-aggregated token hashes; Hamming-close pairs
-                   (the 64-bit form in an Arrow ``mapInPandas``).
+                   (the 64-bit form in an Arrow ``mapInArrow``).
 * ngram jaccard  — token-shingle overlap verification (the exact check run
                    on LSH candidate pairs: filter-refine, same shape as the
                    PIP join), one scalar Arrow UDF over flat list values.
 * embedding      — cosine near-duplicates (delegates to simsearch.py).
 
-Scale notes: every self-join here is bucketed (band or hash prefix) before
-any pairwise work — the candidate-pair count, not the corpus size, is the
-O(n²) guard.  At 10^12 rows the band tables partition by band hash and the
-per-bucket pair blow-up is bounded by per-bucket caps (`max_bucket`).
+Scale notes: every pairwise step here is bucketed (band or hash prefix)
+first — the candidate-pair count, not the corpus size, is the O(n²)
+guard.  The banded operators share one bucket step (``kept_buckets``):
+one grouping per bucket, whose member list gives both the bucket's size
+for the per-bucket cap (``max_bucket``) and its candidate pairs.  At
+10^12 rows the band tables partition by band hash.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -166,26 +168,16 @@ def _min_hash_aggs(n_hashes: int) -> list[F.Column]:
             .alias(f"mh_{i}") for i in range(n_hashes)]
 
 
-def _band_keys(n_hashes: int, band_size: int) -> F.Column:
-    """array<string> of ':'-joined per-band minima from mh_i columns —
-    bit-identical to the r2 finish-lambda band keys."""
-    n_bands = n_hashes // band_size
-    return F.array(*[
-        F.concat_ws(":", *[F.col(f"mh_{b * band_size + j}").cast("string")
-                           for j in range(band_size)])
-        for b in range(n_bands)])
-
-
 def _band_keys_long(n_hashes: int, band_size: int) -> F.Column:
     """array<long> band keys: xxhash64 over each band's minima columns —
-    the ENGINE-INTERNAL join-key form (``_doc_signatures`` emits it).  The
-    ':'-joined string form above stays the public/spec form
-    (``minhash_bands``, SQL-replayable) — this one exists because the
-    band self-join and its bucket-size aggregate hash/compare the key on
-    every one of the ~4 rows per document, and a fixed-width long
-    beats a ~20-char UTF8String on both bytes shuffled and codegen
-    compare cost (event-log attribution at DEDUP_EXTRA=1.2M/32 cores:
-    the candidate stage read 19.1M string-keyed records for 92 CPU-s).
+    the engine's band key (``_doc_signatures`` emits it; the tests build
+    the same keys from the Catalyst ``_min_hash_aggs``).  A long key, not
+    a ':'-joined string of the minima: the band grouping hashes and
+    compares the key on every one of the ~4 rows per document, and a
+    fixed-width long beats a ~20-char UTF8String on both bytes shuffled
+    and codegen compare cost (event-log attribution at DEDUP_EXTRA=1.2M/32
+    cores: the string-keyed candidate stage read 19.1M records for 92
+    CPU-s).
 
     Correctness: keys are only compared for equality, and the Jaccard
     verify downstream is EXACT, so an xxhash64 collision (odds ~2⁻⁶⁴ per
@@ -198,39 +190,6 @@ def _band_keys_long(n_hashes: int, band_size: int) -> F.Column:
         F.xxhash64(F.lit(b), *[F.col(f"mh_{b * band_size + j}")
                                for j in range(band_size)])
         for b in range(n_bands)])
-
-
-def minhash_signature_df(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", n_hashes: int = 8,
-                         shingle_n: int = 3) -> DataFrame:
-    """(id, mh_0..mh_{n-1}) — explode + codegen'd hash-aggregate minima.
-
-    Plan: Generate → projection (one md5 per shingle) → partial
-    HashAggregate (map-side min, runs where the shingles were generated)
-    → one exchange of (id, n_hashes longs) → final HashAggregate.  Every
-    operator is whole-stage-codegen; nothing is interpreted, nothing
-    boxes.  The exchange moves one small fixed-width row per document —
-    on a corpus bucketed by ``id_col`` (sources/bucketed.py) it is elided
-    entirely, and dedup pipelines shuffle band keys right after anyway,
-    so the agg exchange is never the marginal shuffle at scale.
-    """
-    ex = _exploded_hashes(docs, id_col, text_col, shingle_n)
-    return ex.groupBy(id_col).agg(*_min_hash_aggs(n_hashes))
-
-
-def minhash_bands(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", n_hashes: int = 8,
-                  band_size: int = 2, shingle_n: int = 3) -> DataFrame:
-    """(id, band_idx, band_key) — LSH bucket keys from the codegen'd
-    signature aggregate (see ``minhash_signature_df``), band keys joined
-    post-agg and posexploded.  Band-key values are bit-identical to the
-    r2 finish-lambda form (same minima, same ':' join), so the q25
-    oracle replay is unchanged."""
-    sig = minhash_signature_df(docs, id_col, text_col, n_hashes, shingle_n)
-    return sig.select(
-        F.col(id_col),
-        F.posexplode(_band_keys(n_hashes, band_size))
-         .alias("band_idx", "band_key"))
 
 
 def _jaccard_arrow():
@@ -387,6 +346,34 @@ def _doc_signatures(docs: DataFrame, id_col: str, text_col: str,
                     _band_keys_long(n_hashes, band_size).alias("bands")))
 
 
+def kept_buckets(keyed: DataFrame, keys: list[str],
+                 max_bucket: int) -> DataFrame:
+    """(keys..., _m) — ``keyed`` grouped by its bucket columns ``keys``,
+    one row per bucket of at most ``max_bucket`` rows; ``_m`` lists the
+    bucket's rows as structs of their other columns.  A bucket of more
+    rows is dropped whole.  One exchange (collect_list, partial then
+    final), so the bucket size and the members come from the same
+    grouping.  A NULL key matches nothing in a bucket join, so its rows
+    are dropped first.  The bucket step of ``dedup_near``,
+    ``hamming_near_pairs`` and ``simsearch.cosine_near_dup_pairs``."""
+    rest = [c for c in keyed.columns if c not in keys]
+    return (keyed.dropna(subset=keys).groupBy(*keys)
+            .agg(F.collect_list(F.struct(*rest)).alias("_m"))
+            .filter(F.size("_m") <= max_bucket))
+
+
+def _bucket_pairs(keyed: DataFrame, keys: list[str], id_col: str,
+                  max_bucket: int) -> DataFrame:
+    """(a, b) — the member structs (see ``kept_buckets``) of every
+    distinct pair of rows sharing a kept bucket, ``a[id_col] < b[id_col]``:
+    each member is paired with its bucket's members of greater id, and the
+    distinct folds a pair that shares several buckets."""
+    later = F.filter("_m", lambda x: x[id_col] > F.col("a")[id_col])
+    return (kept_buckets(keyed, keys, max_bucket)
+            .select("_m", F.explode("_m").alias("a"))
+            .select("a", F.explode(later).alias("b")).distinct())
+
+
 def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                threshold: float = 0.7, n_hashes: int = 8, band_size: int = 2,
                shingle_n: int = 3, max_bucket: int = 1000) -> DataFrame:
@@ -407,8 +394,9 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
       driver-serial Catalyst+codegen dead time between jobs (~8.5s
       total) that no executor count can shrink.
     * A fully-fused one-action form is WORSE: the band self-join's two
-      sides and the verify join's two sides all scan the still-cold
-      .cache()'d tables concurrently in one job wave, so the minhash ran
+      sides (the candidate step of that time) and the verify join's two
+      sides all scan the still-cold .cache()'d tables concurrently in
+      one job wave, so the minhash ran
       ~3× with cache-write contention (stages of 200-400 task-seconds vs
       ~30s of real CPU).
 
@@ -428,9 +416,12 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     checkpoint protected that case but charged every single-action
     caller a whole extra driver round-trip.
 
-    ``max_bucket`` caps pathological band buckets (all-identical spam): a
-    bucket of m docs contributes m(m-1)/2 pairs, and the dropped content
-    is by construction near-identical — exact dedup already collapses it.
+    Candidates are the pairs of each (band_idx, band_key) bucket, listed
+    from one grouping of the band rows (``_bucket_pairs``).  ``max_bucket``
+    caps pathological band buckets (all-identical spam): a bucket of m
+    docs contributes m(m-1)/2 pairs, so a bucket of more than max_bucket
+    docs is dropped whole, and the dropped content is by construction
+    near-identical — exact dedup already collapses it.
 
     The verify join repartitions pairs explicitly: AQE coalesces by BYTES,
     and 40k candidate pairs are tiny on disk but carry ~20ms of
@@ -446,28 +437,10 @@ def dedup_near(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
     bands = sig.select(id_col, F.posexplode("bands")
                        .alias("band_idx", "band_key"))
-    # Bucket-size guard as a WINDOW count, not groupBy+re-join (r5.6):
-    # the aggregate form shuffled the band table twice (once into the
-    # count aggregate, once for the sizes join) and evaluated the
-    # checkpoint-read+posexplode three times (sizes, join side a, join
-    # side b).  count() over the (band_idx, band_key) partition needs
-    # ONE exchange+sort — and the band self-join below joins on the SAME
-    # keys, so AQE reuses the materialized shuffle stage for both sides
-    # at runtime (measured by event-log attribution at DEDUP_EXTRA=1.2M:
-    # the duplicate 66 MB band-exchange stage disappears and the
-    # candidate-join stage's shuffle read drops 304→171 MB; the INITIAL
-    # plan cannot show ReusedExchange under AQE — reuse happens in the
-    # adaptive stage cache).  _bn values are identical by definition.
-    # Same shape as ann_lsh's hot-bucket cap (simsearch.py
-    # cosine_topk_lsh).
-    wb = Window.partitionBy("band_idx", "band_key")
-    kept = (bands.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-    a = kept.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-    b = kept.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
-    pairs = (a.join(b, ["band_idx", "band_key"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct()
+    pairs = (_bucket_pairs(bands, ["band_idx", "band_key"], id_col,
+                          max_bucket)
+             .select(F.col("a")[id_col].alias("id_a"),
+                     F.col("b")[id_col].alias("id_b"))
              .repartition(n_part, "id_a"))
     # Jaccard over the shingle-HASH sets (see _doc_signatures: size-
     # preserving modulo 2^-60 collisions, and the q25 oracle hashes the
@@ -511,14 +484,15 @@ def simhash16(text_col: str) -> F.Column:
 
 
 def simhash64_np(texts) -> "list[int]":
-    """64-bit simhash, vectorized numpy (engine scale path; used via
-    mapInPandas when corpus text is already in Arrow batches)."""
+    """64-bit simhash of each text, numpy votes per text (the scale form,
+    run per Arrow batch by ``with_simhash64``).  A NULL text has the
+    fingerprint of "" (0), as a NULL text shingles like "" in
+    ``_doc_signatures``."""
     import hashlib
-
-    import numpy as np
     out = []
     for t in texts:
-        toks = [w for w in "".join(c if c.isalnum() else " " for c in t.lower()).split() if w]
+        toks = [w for w in "".join(c if c.isalnum() else " "
+                                   for c in (t or "").lower()).split() if w]
         if not toks:
             out.append(0)
             continue
@@ -538,25 +512,21 @@ def simhash64_np(texts) -> "list[int]":
 
 def with_simhash64(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
-    """(id, simhash64) via Arrow-batched mapInPandas (the scale path for
+    """(id, simhash64) via one Arrow ``mapInArrow`` (the scale path for
     the 64-bit fingerprint; simhash16 above is the SQL-replayable spec)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     schema = T.StructType([
         T.StructField(id_col, docs.schema[id_col].dataType),
         T.StructField("simhash64", T.LongType()),
     ])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "simhash64": simhash64_np(list(pdf[text_col])),
-            })
+    def fingerprints(batches):
+        for rb in batches:
+            fp = simhash64_np(rb.column(1).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(fp, pa.int64())],
+                names=[id_col, "simhash64"])
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema)
+    return docs.select(id_col, text_col).mapInArrow(fingerprints, schema)
 
 
 def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
@@ -567,8 +537,9 @@ def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
 
     Scale plan — the classic 4-band pigeonhole: split the 64 bits into
     4 × 16-bit bands; any pair within Hamming ≤ 3 matches exactly on ≥ 1
-    band (pigeonhole over 4 bands), so candidates come from 4 bucket
-    self-joins, then the exact popcount filter runs on candidates only.
+    band (pigeonhole over 4 bands), so candidates are the pairs sharing a
+    (band, value) bucket, and the exact popcount filter runs on
+    candidates only.
     Serves both text simhash64 and image perceptual-hash (``phash``)
     columns — the image near-dup path of the input_hint schema.
 
@@ -579,37 +550,25 @@ def hamming_near_pairs(df: DataFrame, id_col: str, hash_col: str,
     identical low 16 bits, silently dropping pairs whose only matching
     band is band 0).
 
-    ``max_bucket`` drops degenerate hot band-buckets (solid-color images,
-    boilerplate text share a band value by the thousands → m²/2 candidate
-    blow-up); the dropped content is near-identical by construction, which
-    exact dedup (cheap, runs first in any real pipeline) already collapses
-    — same trade as ``dedup_near``'s ``max_bucket``.
+    ``max_bucket`` drops degenerate hot band-buckets whole (solid-color
+    images, boilerplate text share a band value by the thousands → m²/2
+    candidate blow-up); the dropped content is near-identical by
+    construction, which exact dedup (cheap, runs first in any real
+    pipeline) already collapses — same trade and same bucket step
+    (``_bucket_pairs``) as ``dedup_near``'s ``max_bucket``.  A NULL
+    fingerprint has no bands and pairs with nothing.
     """
     bands = []
     for b in range(4):
         band = (F.shiftrightunsigned(F.col(hash_col), b * 16)
                 .bitwiseAND(F.lit(65535)))
         bands.append(F.struct(F.lit(b).alias("band_idx"), band.alias("band_val")))
-    keyed = (df.select(id_col, hash_col, F.explode(F.array(*bands)).alias("b"))
-             .select(id_col, hash_col, F.col("b.band_idx"), F.col("b.band_val")))
-    # bucket cap as a window count, as in dedup_near: the self-join below
-    # joins on the window's partition keys, so both sides read ONE band
-    # exchange (AQE reuses it) and the fingerprint — possibly a Python
-    # mapInPandas stage — is computed once per row.
-    wb = Window.partitionBy("band_idx", "band_val")
-    kept = (keyed.withColumn("_bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("_bn") <= max_bucket).drop("_bn"))
-    a = kept.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"),
-                    "band_idx", "band_val")
-    b_ = kept.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"),
-                     "band_idx", "band_val")
-    cand = (a.join(b_, ["band_idx", "band_val"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "h_a", "h_b").distinct())
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (cand.withColumn("hamming", ham)
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    keyed = df.select(id_col, hash_col, F.inline(F.array(*bands)))
+    cand = _bucket_pairs(keyed, ["band_idx", "band_val"], id_col, max_bucket)
+    ham = F.bit_count(F.col("a")[hash_col].bitwiseXOR(F.col("b")[hash_col]))
+    return (cand.select(F.col("a")[id_col].alias("id_a"),
+                        F.col("b")[id_col].alias("id_b"), ham.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming))
 
 
 def phash_near_pairs(images: DataFrame, id_col: str = "image_id",

@@ -17,7 +17,8 @@ Two plans, one contract — (query_id, neighbor_id, cos_sim, rank):
   inside one ``mapInArrow`` over the corpus scan) when the query side and
   its estimated candidate set are small, else a shuffled bucket join
   through the kernel's scalar Arrow UDFs.  ``cosine_near_dup_pairs``
-  self-joins through the same UDFs.
+  joins the probes to the capped buckets (``dedup.kept_buckets``, the
+  bucket step of the other near-dup operators) through the same UDFs.
 
 * ``cosine_topk_ivf``    — second scale path: IVF (k-means-lite coarse
   quantizer on a bounded deterministic sample) → corpus bucketed by
@@ -36,6 +37,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from p3_osm_transformer_spark.operators.dedup import kept_buckets
 
 
 def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -562,15 +565,17 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
                           dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the last dedup modality the
     training pipeline needs: (id_a < id_b, cos_sim) for all pairs with
-    cosine ≥ threshold, found via the same sketch-bucket self-join shape
-    as minhash/simhash dedup (LSH prefilter → exact verify on candidates
+    cosine ≥ threshold, found the way minhash/simhash dedup finds theirs
+    (sketch buckets as an LSH prefilter → exact verify on candidates
     only).  Multi-probe (own prefix + 1-bit flips) keeps recall high for
     thresholds ≥ ~0.9; exact verification means zero false positives.
 
     ``prefix_bits=None`` derives the bucket count from the corpus size
     (``pick_prefix_bits``); ``max_bucket`` drops degenerate hot buckets
-    whole (dedup semantics, same trade as ``dedup_near``'s: the
-    dropped content is near-identical and exact dedup collapses it).
+    whole (dedup semantics and the same bucket step, ``kept_buckets``, as
+    ``dedup_near``'s: the dropped content is near-identical and exact
+    dedup collapses it).  The bucket UDF runs once per row: the bucket
+    members are collected in one grouping and exploded back to rows.
     Rows with no bucket (NULL or longer than ``dim``) share one bucket of
     their own, so two equal-length longer rows still pair.
 
@@ -591,9 +596,8 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95,
     b = vectors.select(F.col(id_col).alias("id_b"),
                        F.col("embedding").alias("_eb"),
                        bucket("embedding").alias("_bucket"))
-    sizes = b.groupBy("_bucket").agg(F.count("*").alias("_bn"))
-    b = b.join(sizes.filter(F.col("_bn") <= max_bucket).select("_bucket"),
-               "_bucket")
+    b = kept_buckets(b, ["_bucket"], max_bucket).select(
+        "_bucket", F.inline("_m"))
     return (a.join(b, "_bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .withColumn("cos_sim", F.round(cos("_ea", "_eb"), 6))

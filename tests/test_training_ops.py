@@ -64,6 +64,21 @@ def test_simhash64_numpy():
     assert dedup.simhash64_np([""]) == [0]
 
 
+def test_simhash64_null_text_is_empty_fingerprint(spark):
+    """A NULL text has the fingerprint of "" (0) in the Arrow pass, as a
+    NULL text shingles like "" in ``dedup_near``, instead of failing the
+    task; it pairs with the empty text at Hamming 0."""
+    assert dedup.simhash64_np([None]) == [0]
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "some words in a sentence")],
+        "doc_id long, text string")
+    fps = {r.doc_id: r.simhash64 for r in dedup.with_simhash64(df).collect()}
+    assert fps == {1: 0, 2: 0,
+                   3: dedup.simhash64_np(["some words in a sentence"])[0]}
+    assert [tuple(r) for r in dedup.simhash_near_pairs(df).collect()] == \
+        [(1, 2, 0)]
+
+
 def test_cosine_topk_planted(spark):
     rng = np.random.RandomState(7)
     base = rng.randn(120, 32).astype(np.float32)
@@ -166,6 +181,45 @@ def test_cosine_near_dup_planted(spark):
     assert len(exact) >= 30                      # the planted pairs exist
     assert got <= exact                          # exact verify: no FPs
     assert len(got & exact) / len(exact) >= 0.9  # LSH recall
+
+
+def _plan(df) -> str:
+    """The physical plan the action on ``df`` starts from."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cosine_near_dup_max_bucket_boundary(spark):
+    """A bucket of exactly max_bucket vectors keeps its pairs; one more
+    vector drops the bucket whole, while the pair in another bucket
+    survives.  Copies of v share its bucket; -v and its scaled copy fall
+    in the complement bucket."""
+    v = [0.3, -1.2, 0.8, 2.0, -0.5, 0.1, 1.5, -0.9]
+    rows = [(10 + i, v) for i in range(5)]
+    rows += [(1, [-x for x in v]), (2, [-2.5 * x for x in v])]
+    hot6 = spark.createDataFrame(rows + [(15, v)],
+                                 "vec_id long, embedding array<double>")
+    hot5 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(df, cap):
+        return {r[:2] for r in simsearch.cosine_near_dup_pairs(
+            df, threshold=0.95, prefix_bits=4, max_bucket=cap).collect()}
+    brute = {r[:2] for r in simsearch.cosine_near_dup_brute(
+        hot6, threshold=0.95).collect()}
+    assert len(brute) == 6 * 5 // 2 + 1
+    assert pairs(hot6, 6) == brute
+    assert pairs(hot6, 5) == {(1, 2)}
+    assert pairs(hot5, 5) == {r for r in brute if 15 not in r}
+
+
+def test_cosine_near_dup_buckets_once(spark):
+    """The bucket UDF runs once per row: the capped buckets come from one
+    grouping, so the plan holds three Arrow UDF nodes (probes, bucket,
+    cosine) and no second bucket pass for a sizes join."""
+    df = spark.createDataFrame([(1, [1.0, 2.0]), (2, [1.0, 2.1])],
+                               "vec_id long, embedding array<double>")
+    p = _plan(simsearch.cosine_near_dup_pairs(df, threshold=0.9))
+    assert p.count("ArrowEvalPython [") == 3
+    assert p.count("ArrowEvalPython [_sk(") == 1
 
 
 def test_cosine_near_dup_edge_rows_equal_brute(spark):
@@ -297,6 +351,17 @@ def test_hamming_hot_bucket_cap(spark):
     # default cap: hot group found in full
     full = dedup.hamming_near_pairs(df, "id", "h", 3).count()
     assert full == 50 * 49 // 2 + 1
+
+
+def test_banded_pairs_plan_no_window(spark):
+    """dedup_near and hamming_near_pairs cap and pair each bucket from one
+    grouping of the band rows: no Window count per self-join side."""
+    c = _corpus(spark)
+    for df in (dedup.dedup_near(c, threshold=0.7),
+               dedup.hamming_near_pairs(
+                   c.selectExpr("doc_id as id", "doc_id * 7 as h"), "id", "h")):
+        p = _plan(df)
+        assert "Window" not in p and "ObjectHashAggregate" in p
 
 
 def test_prefix_bits_scale_with_corpus():
@@ -600,6 +665,29 @@ def test_dedup_near_arrow_verify_equals_catalyst(spark):
     # the identical-text edge pairs verify at jaccard 1.0
     assert fa[(900001, 900011)] == 1.0
     assert fa[(900004, 900012)] == 1.0
+
+
+def test_dedup_near_max_bucket_boundary(spark):
+    """A band bucket of exactly max_bucket documents keeps its pairs; one
+    more document drops them all, while a near pair in other buckets
+    survives (its two texts share no band with the identical spam)."""
+    spam = "buy cheap pills now buy cheap pills now today only"
+    fox = ("the quick brown fox jumps over the lazy dog while seven "
+           "wizards box jolly quick zebras")
+    rows = [(i, spam) for i in range(11)] + [(100, fox),
+                                             (101, fox + " again")]
+    hot12 = spark.createDataFrame(rows + [(11, spam)],
+                                  "doc_id long, text string")
+    hot11 = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(df, cap):
+        return {(r.id_a, r.id_b): r.jaccard for r in dedup.dedup_near(
+            df, threshold=0.7, max_bucket=cap).collect()}
+    full = pairs(hot12, 12)
+    assert len(full) == 12 * 11 // 2 + 1 and full[(100, 101)] == 0.933333
+    assert set(full.values()) == {1.0, 0.933333}
+    assert pairs(hot12, 11) == {(100, 101): 0.933333}
+    assert pairs(hot11, 11) == {k: v for k, v in full.items() if 11 not in k}
 
 
 def test_jaccard_arrow_udf_equals_catalyst_incl_null_empty_sliced(spark):

@@ -177,32 +177,7 @@ def main() -> None:
           way_geometries(osm_ways(spark, 200, 1000), osm_nodes(spark, 1000)),
           must=["Generate", "HashAggregate"], must_not=["CartesianProduct"])
 
-    # 8. minhash band build (r3.2 rewrite): explode → codegen'd hash
-    # projection → partial/final HashAggregate minima.  Nothing
-    # interpreted, nothing Python; exactly ONE exchange (the agg's
-    # fixed-width (id, 8 longs) rows — elided on a doc_id-bucketed
-    # source, and dominated by the band shuffle that always follows).
-    # The prior shuffle-free interpreted-aggregate form evaluated with
-    # boxed longs and was memory-bandwidth-bound (BENCH/BASELINE.md
-    # stream control): 90.1 vs 61.9 CPU-s at local[32], same checksums.
-    from p3_osm_transformer_spark.operators.dedup import minhash_bands
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    mb_plan = plan_of(minhash_bands(docs))
-    # formatted plans print each node twice (tree line + "(n) Node"
-    # detail): count the detail headers to count NODES
-    n_exch = len(re.findall(r"\(\d+\) Exchange", mb_plan))
-    mb_ok = (all(m in mb_plan for m in ("Generate", "HashAggregate"))
-             and not any(m in mb_plan for m in
-                         ("CartesianProduct", "BatchEvalPython", "MapInPandas"))
-             and n_exch == 1)
-    checks.append(("minhash band build (codegen explode + hash-agg)", mb_plan,
-                   ["Generate", "HashAggregate", "exactly one Exchange"],
-                   ["CartesianProduct", "BatchEvalPython", "MapInPandas"]))
-    print("minhash band build (codegen explode + hash-agg): "
-          f"{'OK' if mb_ok else 'VIOLATION'} "
-          f"(exchanges={n_exch})")
-
-    # 8b. dedup_near: the signature pass is ONE Arrow MapInArrow map (the
+    # 8. dedup_near: the signature pass is ONE Arrow MapInArrow map (the
     # record-batch form; a MapInPandas here would mean the per-row pandas
     # round trip is back) — no aggregate, no Exchange at all (the JVM
     # construction burned 4× the CPU at 32 cores under whole-host
@@ -211,6 +186,7 @@ def main() -> None:
     # signature blocks from every side — no cartesian.
     from p3_osm_transformer_spark.operators.dedup import (
         _doc_signatures, dedup_near)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     audit("dedup signature pass (one Arrow map, zero exchanges)",
           _doc_signatures(docs, "doc_id", "text", 8, 2, 3),
           must=["MapInArrow"],
@@ -220,12 +196,15 @@ def main() -> None:
     # (the flat-batch numpy Jaccard — the boxed array_intersect form
     # burned 7-16× the CPU at 32 cores); still no row-at-a-time Python,
     # no cartesian, and the candidates+verify plan reads the checkpointed
-    # signature RDD, never re-tokenizes.
+    # signature RDD, never re-tokenizes.  The band buckets are capped and
+    # paired from one grouping (dedup.kept_buckets): no Window count per
+    # self-join side.
     dn = dedup_near(docs.limit(2000), threshold=0.7)
     dn_plan = plan_of(dn)
     audit("dedup_near candidates+verify (reads checkpointed signatures)", dn,
           must=["Scan ExistingRDD", "ArrowEvalPython"],
-          must_not=["CartesianProduct", "BatchEvalPython", "MapInPandas"])
+          must_not=["CartesianProduct", "BatchEvalPython", "MapInPandas",
+                    "Window"])
     # formatted explain prints each node once in the tree and once as a
     # "(N) ArrowEvalPython" detail header — count the headers.  Exactly
     # ONE: Catalyst would otherwise duplicate the verify UDF below the
